@@ -359,16 +359,26 @@ object Dedup {
   def resolveComponents(docs: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id", maxIter: Int = 50,
       localFinishEdges: Long = componentsLocalFinishEdges): DataFrame = {
+    // every stage the rounds submit carries the round that caused it
+    // (Spark otherwise names it after the thread that ran the job)
+    val sc = docs.sparkSession.sparkContext
+    try resolveRounds(sc, docs, pairs, idCol, maxIter, localFinishEdges)
+    finally sc.clearCallSite()
+  }
+
+  private def resolveRounds(sc: org.apache.spark.SparkContext,
+      docs: DataFrame, pairs: DataFrame, idCol: String, maxIter: Int,
+      localFinishEdges: Long): DataFrame = {
     // symmetrized edge list; labels flow both directions. A barrier leaf:
     // every round's plan references edges, so it must be constant-size.
     // The edge COUNT (the local-finish gate read at every loop top)
     // rides each edge barrier's materialization job — src is never null
     // (ids), so the non-null count ≡ the former edges.count().
+    sc.setCallSite("resolveComponents.edges")
     var (edges, ec0) = loopBarrierProbe(
-      pairs.select($"id_a".as("src"), $"id_b".as("dst"))
-        .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst"))),
-      Seq("src"))
+      Similarity.symmetrize(pairs, "src", "dst"), Seq("src"))
     var eCount = ec0(0)._1
+    sc.setCallSite("resolveComponents.labels")
     var labels = loopBarrier(docs.select(col(idCol).as("id"))
       .distinct().select($"id", $"id".as("comp")))
     // Pointer-doubling closure: comp ← comp(comp) until stable. Labels
@@ -396,6 +406,7 @@ object Dedup {
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
+      sc.setCallSite(s"resolveComponents.round $it")
       // local finish: once the contracted graph is driver-small, one
       // union-find replaces every remaining round. The collect is
       // BOUNDED by localFinishEdges — same class as the other accepted
@@ -407,25 +418,10 @@ object Dedup {
       // eCount rides the edge barriers' materialization jobs (set at
       // the initial barrier and re-set at every contraction below)
       if (eCount <= localFinishEdges) {
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        val es = edges.collect()
-        es.foreach { e =>
-          val (ra, rb) = (find(e.getLong(0)), find(e.getLong(1)))
-          if (ra != rb) { // attach larger root under smaller: root stays the min id
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          }
-        }
-        val mapping = es.iterator.flatMap(e => Iterator(e.getLong(0), e.getLong(1)))
-          .toArray.distinct.map(v => (v, find(v))).filter { case (v, r) => v != r }
+        // the edge list is symmetric, so one direction carries every edge
+        val mapping = graft.ops.Iterate.minIdRoots(edges.where($"src" < $"dst"))
         if (mapping.nonEmpty) {
-          val mapDf = labels.sparkSession.createDataFrame(mapping.toSeq)
+          val mapDf = labels.sparkSession.createDataFrame(mapping)
             .toDF("_rep", "_fin")
           labels = loopBarrier(labels.join(broadcast(mapDf),
               $"comp" === $"_rep", "left")
@@ -469,6 +465,7 @@ object Dedup {
       }
     }
     if (!converged) {
+      sc.setCallSite("resolveComponents.stability")
       // The loop only proves convergence via a zero-change round, so a
       // graph that fully resolved in exactly maxIter rounds lands here
       // with correct labels. One stability probe (would another

@@ -201,7 +201,7 @@ object Similarity {
     * query, [[cosineNearDupLsh]] buckets at 100-TB scale (the graph
     * operator itself is generator-agnostic).
     *
-    * Scale shape: one union symmetrization (narrow) + ONE node-keyed
+    * Scale shape: one symmetrization (narrow) + ONE node-keyed
     * window for per-node ranks + ONE canonical-pair aggregate whose
     * `count = 2` test IS the mutuality check — two shuffle families
     * total, no self-join of the ranked edge list (the oracle verifies
@@ -209,9 +209,7 @@ object Similarity {
     * deterministic: ties broken by neighbor id. */
   def mutualKnn(scoredPairs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val sym = scoredPairs.select($"id_a".as("src"), $"id_b".as("dst"), $"cos_q4")
-      .unionByName(
-        scoredPairs.select($"id_b".as("src"), $"id_a".as("dst"), $"cos_q4"))
+    val sym = symmetrize(scoredPairs, "src", "dst", $"cos_q4")
     val w = Window.partitionBy($"src").orderBy($"cos_q4".desc, $"dst")
     val knn = sym.withColumn("rn", row_number().over(w)).where($"rn" <= k)
     knn.groupBy(least($"src", $"dst").as("id_a"),
@@ -638,16 +636,36 @@ object Similarity {
     // zero-norm vectors are excluded up front: cosine against them is
     // 0/0 = NaN, which Spark floors to a silent drop while DuckDB's
     // CAST(floor(NaN)) errors — near-dup is simply undefined for them,
-    // and the oracle SQL applies the identical norm > 0 guard
-    val e = embeddings.select($"vec_id", $"label", $"embedding")
-      .where(dot($"embedding", $"embedding") > 0)
-    val a = e.toDF("id_a", "label", "vec_a")
-    val b = e.toDF("id_b", "label", "vec_b")
+    // and the oracle SQL applies the identical norm > 0 guard.
+    // The norm is computed once per vector, not once per pair:
+    // dot(a,b) / (n_a·n_b) is exactly the double `cosine` produces.
+    val e = embeddings.select($"vec_id", $"label", $"embedding",
+        norm($"embedding").as("n"))
+      .where($"n" > 0)
+    // the pair work runs in the stream side's tasks; a corpus that
+    // arrives as fewer scan partitions than task slots (one row group)
+    // would score every pair in one task, so spread it to the slots
+    val slots = e.sparkSession.sparkContext.defaultParallelism
+    val stream = if (e.rdd.getNumPartitions < slots) e.repartition(slots, $"vec_id") else e
+    val a = stream.toDF("id_a", "label", "vec_a", "n_a")
+    val b = e.toDF("id_b", "label", "vec_b", "n_b")
     a.join(b, Seq("label"))
       .where($"id_a" < $"id_b")
       .select($"id_a", $"id_b", $"label",
-        floorQ4(cosine($"vec_a", $"vec_b")).as("cos_q4"))
+        floorQ4(dot($"vec_a", $"vec_b") / ($"n_a" * $"n_b")).as("cos_q4"))
       .where($"cos_q4" >= math.floor(threshold * 10000).toLong)
+  }
+
+  /** Both directions of every (id_a, id_b) pair as (`src`, `dst`,
+    * carry…) rows, in ONE pass over `pairs`: the graph operators take
+    * symmetric edge lists, and a two-branch union would evaluate
+    * `pairs` twice when it is not persisted. */
+  def symmetrize(pairs: DataFrame, src: String, dst: String,
+      carry: Column*): DataFrame = {
+    def dir(from: String, to: String) =
+      struct(($"$from".as(src) +: $"$to".as(dst) +: carry): _*)
+    pairs.select(explode(array(dir("id_a", "id_b"), dir("id_b", "id_a"))).as("_e"))
+      .select($"_e.*")
   }
 
   /** Reciprocal-rank fusion of several retriever rankings — the

@@ -102,27 +102,7 @@ object Msf {
         val selN = sel.count() // cheap: sel is persisted
         comp = Iterate.loopBarrier(
           if (selN <= graft.ext.Dedup.componentsLocalFinishEdges) {
-            val es = sel.select($"ca", $"cb").collect()
-            val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-            def find(x: Long): Long = {
-              var r = x
-              while (parent.getOrElse(r, r) != r) r = parent(r)
-              var c = x
-              while (parent.getOrElse(c, c) != c) {
-                val nx = parent(c); parent(c) = r; c = nx
-              }
-              r
-            }
-            es.foreach { ed =>
-              val (ra, rb) = (find(ed.getLong(0)), find(ed.getLong(1)))
-              if (ra != rb) { // larger root under smaller: root = min id
-                if (ra < rb) parent(rb) = ra else parent(ra) = rb
-              }
-            }
-            val mapping = es.iterator
-              .flatMap(ed => Iterator(ed.getLong(0), ed.getLong(1)))
-              .toArray.distinct.map(v => (v, find(v)))
-              .filter { case (v, r) => v != r }.toSeq
+            val mapping = Iterate.minIdRoots(sel.select($"ca", $"cb"))
             val mapDf = spark.createDataFrame(mapping).toDF("_oc", "_nc")
             comp.join(broadcast(mapDf), comp("c") === $"_oc", "left")
               .select($"n", coalesce($"_nc", $"c").as("c"))

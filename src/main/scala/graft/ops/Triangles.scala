@@ -25,8 +25,7 @@ object Triangles {
     val spark = pairs.sparkSession
     import spark.implicits._
 
-    val both = pairs.select($"id_a".as("u"), $"id_b".as("v"))
-      .unionByName(pairs.select($"id_b".as("u"), $"id_a".as("v")))
+    val both = graft.ext.Similarity.symmetrize(pairs, "u", "v")
     val deg = both.groupBy($"u".as("id")).agg(count(lit(1)).as("deg"))
 
     // orient: (deg, id)-smaller endpoint -> larger
@@ -60,8 +59,7 @@ object Triangles {
   def localClustering(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val both = pairs.select($"id_a".as("id"), $"id_b".as("v"))
-      .unionByName(pairs.select($"id_b".as("id"), $"id_a".as("v")))
+    val both = graft.ext.Similarity.symmetrize(pairs, "id", "v")
     val deg = both.groupBy($"id").agg(count(lit(1)).as("degree"))
     deg.join(perNode(pairs), Seq("id"), "left")
       .withColumn("n_triangles", coalesce($"n_triangles", lit(0L)))

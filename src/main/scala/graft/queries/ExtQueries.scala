@@ -1263,8 +1263,8 @@ object ExtQueries extends QueryGroup {
   def dedupComponents(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
     Dedup.resolveComponents(emb, pairs, idCol = "vec_id").orderBy($"vec_id")
@@ -1297,8 +1297,8 @@ object ExtQueries extends QueryGroup {
   def dedupClusterStats(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
     Dedup.resolveComponents(emb, pairs, idCol = "vec_id")
@@ -1368,8 +1368,8 @@ object ExtQueries extends QueryGroup {
   def splitLeakageSafe(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
     Dedup.resolveComponents(emb, pairs, idCol = "vec_id")
@@ -1401,8 +1401,8 @@ object ExtQueries extends QueryGroup {
     val emb = load(spark, dir, "embeddings")
     val docs = load(spark, dir, "documents")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
     val comps = Dedup.resolveComponents(emb, pairs, idCol = "vec_id")
@@ -2327,12 +2327,11 @@ object ExtQueries extends QueryGroup {
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
-    val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
-      .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
+    val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.PageRank.run(edges, emb.select($"vec_id".as("id")),
         iterations = 4)
       .orderBy($"id")
@@ -2459,12 +2458,11 @@ object ExtQueries extends QueryGroup {
   def kcore(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
-    val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
-      .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
+    val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.KCore.run(edges, k = 2, maxIter = 30)
       .orderBy($"node")
   }
@@ -2510,12 +2508,11 @@ object ExtQueries extends QueryGroup {
   def bfsHops(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
-    val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
-      .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
+    val edges = Similarity.symmetrize(pairs, "src", "dst")
     val seeds = emb
       .where(Similarity.dot($"embedding", $"embedding") > 0 &&
         $"vec_id" % 97 === 0)
@@ -2562,12 +2559,11 @@ object ExtQueries extends QueryGroup {
   def harmonicQ(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
-    val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
-      .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
+    val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.Bfs.harmonic(edges, maxHops = 3).orderBy($"id")
   }
 
@@ -2617,12 +2613,11 @@ object ExtQueries extends QueryGroup {
   def eccentricityQ(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
-    val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
-      .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
+    val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.Bfs.eccentricity(edges, maxHops = 3).orderBy($"id")
   }
 
@@ -2710,8 +2705,7 @@ object ExtQueries extends QueryGroup {
     val emb = load(spark, dir, "embeddings")
     val pairs = Similarity.cosineNearDup(emb, 0.3)
       .select($"id_a", $"id_b", (lit(10000L) - $"cos_q4").as("w"))
-    val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"), $"w")
-      .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst"), $"w"))
+    val edges = Similarity.symmetrize(pairs, "src", "dst", $"w")
     val seeds = emb
       .where(Similarity.dot($"embedding", $"embedding") > 0 &&
         $"vec_id" % 97 === 0)
@@ -2763,8 +2757,7 @@ object ExtQueries extends QueryGroup {
     val emb = load(spark, dir, "embeddings")
     val pairs = Similarity.cosineNearDup(emb, 0.3)
       .select($"id_a", $"id_b", $"cos_q4")
-    val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"), $"cos_q4".as("w"))
-      .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst"), $"cos_q4".as("w")))
+    val edges = Similarity.symmetrize(pairs, "src", "dst", $"cos_q4".as("w"))
     val seeds = emb
       .where(Similarity.dot($"embedding", $"embedding") > 0 &&
         $"vec_id" % 97 === 0)
@@ -2817,12 +2810,11 @@ object ExtQueries extends QueryGroup {
   def labelProp(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
-    val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
-      .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
+    val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.LabelProp.run(edges, emb.select($"vec_id".as("id")),
         iterations = 3)
       .orderBy($"id")
@@ -2880,12 +2872,11 @@ object ExtQueries extends QueryGroup {
   def assortativity(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
-    val edges = pairs.select($"id_a".as("u"), $"id_b".as("v"))
-      .unionByName(pairs.select($"id_b".as("u"), $"id_a".as("v")))
+    val edges = Similarity.symmetrize(pairs, "u", "v")
     val deg = edges.groupBy($"u").agg(count(lit(1)).as("d"))
     edges
       .join(deg.select($"u", $"d".as("du")), Seq("u"))
@@ -2939,12 +2930,11 @@ object ExtQueries extends QueryGroup {
   def communityConductance(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
-    val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
-      .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
+    val edges = Similarity.symmetrize(pairs, "src", "dst")
     val labels = graft.ops.LabelProp.run(edges,
       emb.select($"vec_id".as("id")), iterations = 3)
     graft.ops.Modularity.conductance(pairs, labels)
@@ -3012,12 +3002,11 @@ object ExtQueries extends QueryGroup {
   def ktrussQ(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
-    val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
-      .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
+    val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.KTruss.run(edges, k = 3).orderBy($"a", $"b")
   }
 
@@ -3070,12 +3059,11 @@ object ExtQueries extends QueryGroup {
   def trussDecomposeQ(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
-    val edges = pairs.select($"id_a".as("src"), $"id_b".as("dst"))
-      .unionByName(pairs.select($"id_b".as("src"), $"id_a".as("dst")))
+    val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.KTruss.decompose(edges, maxK = 8).orderBy($"a", $"b")
   }
 
@@ -3136,8 +3124,8 @@ object ExtQueries extends QueryGroup {
   def triangles(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
     graft.ops.Triangles.perNode(pairs).orderBy($"id")
@@ -3167,8 +3155,8 @@ object ExtQueries extends QueryGroup {
   def clusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
     graft.ops.Triangles.localClustering(pairs).orderBy($"id")
@@ -5266,12 +5254,11 @@ object ExtQueries extends QueryGroup {
     val emb = load(spark, dir, "embeddings")
     val nVecs = emb.count()
     // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (symmetrizing union branches, iterative rounds, final
-    // metric passes) would re-evaluate it without the persist
+    // consumer (iterative rounds, final metric passes) would
+    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
-    val pos = pairs.select($"id_a".as("a"), $"id_b".as("p"))
-      .unionByName(pairs.select($"id_b".as("a"), $"id_a".as("p")))
+    val pos = Similarity.symmetrize(pairs, "a", "p")
     Sampling.negativeSample(pos, "a", "p", lit(nVecs), k = 3)
       .orderBy($"anchor_id", $"rank")
   }

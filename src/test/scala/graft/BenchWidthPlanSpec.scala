@@ -60,4 +60,23 @@ class BenchWidthPlanSpec extends SparkSpec {
         .rdd.getNumPartitions === 1)
     }
   }
+
+  test("near-dup kernel spreads a one-partition scan to the task slots " +
+      "at any shuffle width") {
+    // sf0.001 embeddings is a single-row-group file: 1 scan partition,
+    // so without the spread every pair would be scored in one task
+    val emb = Tables.load(spark, sfDir, "embeddings")
+    val slots = spark.sparkContext.defaultParallelism
+    assert(emb.rdd.getNumPartitions < slots)
+    def kernel = graft.ext.Similarity.cosineNearDup(emb, 0.3)
+    val at4 = atWidth(4)(exchanges(kernel))
+    val at32 = atWidth(32)(exchanges(kernel))
+    assert(at4 === at32,
+      s"cosineNearDup plans $at32 exchanges at bench width vs $at4 at test width")
+    atWidth(32) {
+      val edges = graft.ops.Iterate.loopBarrier(
+        graft.ext.Similarity.symmetrize(kernel, "src", "dst"))
+      assert(edges.rdd.getNumPartitions === slots)
+    }
+  }
 }

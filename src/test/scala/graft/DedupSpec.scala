@@ -244,14 +244,16 @@ class DedupSpec extends SparkSpec {
   test("resolveComponents: driver local finish ≡ fully distributed rounds") {
     // random sparse graph: enough structure for multi-round distributed
     // convergence; the default path takes the bounded local finish, the
-    // localFinishEdges=0 path never does — outputs must be identical
+    // localFinishEdges=0 path never does — outputs must be identical.
+    // Self-loops and pairs in both orientations ride along: the local
+    // finish reads one direction of the symmetric edge list only.
     val rnd = new scala.util.Random(11)
     val n = 300L
     val docs = (1L to n).toDF("doc_id")
-    val pairs = (1 to 260).map { _ =>
+    val pairs = ((1 to 260).map { _ =>
       val a = 1L + rnd.nextInt(n.toInt); val b = 1L + rnd.nextInt(n.toInt)
       (math.min(a, b), math.max(a, b))
-    }.filter(p => p._1 != p._2).distinct.toDF("id_a", "id_b")
+    } ++ Seq((5L, 5L), (40L, 40L), (290L, 17L))).distinct.toDF("id_a", "id_b")
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("component_id"), r.getAs[Boolean]("is_canonical")))).toMap
@@ -259,6 +261,20 @@ class DedupSpec extends SparkSpec {
     val dist = asMap(Dedup.resolveComponents(docs, pairs, localFinishEdges = 0))
     assert(local === dist)
     assert(local.size === n)
+    assert(local(290L)._1 === local(17L)._1)
+    // no edges at all: every doc is its own canonical component
+    val singletons = (1L to n).map(i => i -> ((i, true))).toMap
+    assert(asMap(Dedup.resolveComponents(docs, pairs.limit(0))) === singletons)
+    assert(asMap(Dedup.resolveComponents(docs, pairs.limit(0),
+      localFinishEdges = 0)) === singletons)
+  }
+
+  test("minIdRoots: every endpoint maps to its component's min id, roots omitted") {
+    val edges = Seq((9L, 4L), (4L, 7L), (7L, 7L), (20L, 30L), (30L, 25L))
+      .toDF("a", "b")
+    assert(graft.ops.Iterate.minIdRoots(edges).toMap ===
+      Map(9L -> 4L, 7L -> 4L, 30L -> 20L, 25L -> 20L))
+    assert(graft.ops.Iterate.minIdRoots(edges.limit(0)).isEmpty)
   }
 
   test("resolveComponents: plan statistics stay bounded across rounds (no exponential sizeInBytes)") {

@@ -312,6 +312,27 @@ class SimilaritySpec extends SparkSpec {
     assert(t.sortBy(x => (x._1, x._2)).toSeq === t2.sortBy(x => (x._1, x._2)).toSeq)
   }
 
+  test("cosineNearDup: per-vector norms score every pair as floorQ4(cosine); zero-norm vectors never pair") {
+    import spark.implicits._
+    val got = Similarity.cosineNearDup(emb, -1.0).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
+    val e = emb.where(Similarity.dot($"embedding", $"embedding") > 0)
+    val want = e.select($"vec_id".as("id_a"), $"label", $"embedding".as("vec_a"))
+      .join(e.select($"vec_id".as("id_b"), $"label", $"embedding".as("vec_b")),
+        Seq("label"))
+      .where($"id_a" < $"id_b")
+      .select($"id_a", $"id_b",
+        Similarity.floorQ4(Similarity.cosine($"vec_a", $"vec_b")))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(want.nonEmpty)
+    assert(got === want)
+    val small = Seq((1L, 7, Array(1.0f, 0.0f)), (2L, 7, Array(1.0f, 0.5f)),
+        (3L, 7, Array(0.0f, 0.0f))).toDF("vec_id", "label", "embedding")
+    val pairs = Similarity.cosineNearDup(small, -1.0).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs === Set((1L, 2L)))
+  }
+
   test("randomProject: exact integer components against the sign matrix, narrow plan") {
     import spark.implicits._
     val emb = Seq((1L, Array(0.5f, -1.25f)), (2L, Array(0.0f, 0.0f)))
