@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Iterate
 
 /** Deduplication operators for LLM training-data pipelines (SURVEY §7.9):
   * exact (content hash), MinHash+LSH near-dup, SimHash, n-gram Jaccard.
@@ -31,8 +32,6 @@ import org.apache.spark.sql.functions._
   * Verify do per query), or the blocks live for the session.
   */
 object Dedup {
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Content hash for exact dedup. */
   def contentHash(text: Column): Column = md5(text.cast("binary"))
@@ -264,6 +263,14 @@ object Dedup {
         max($"true_q4").as("max_true_q4"))
   }
 
+  /** When the (contracted) edge list is at or under this many rows, the
+    * loop finishes with one bounded driver-side union-find instead of
+    * more distributed rounds. Geometric contraction means a 100-TB graph
+    * reaches this within a few rounds; each avoided tail round is a full
+    * cluster barrier (neighbour join + closure + contraction) spent on a
+    * few thousand rows. 500k edges = ~8 MB of longs on the driver. */
+  val componentsLocalFinishEdges: Long = 500000L
+
   /** Dedup RESOLUTION: near-dup pairs → connected components → one
     * canonical document per cluster (min id — deterministic).
     *
@@ -299,191 +306,125 @@ object Dedup {
     * split components (several "canonical" docs per real cluster), so
     * exhausting the loop throws.
     *
-    * Every round passes through [[loopBarrier]] — an eager
-    * `localCheckpoint` PLUS a stats-fresh rebuild of the leaf. Both
-    * halves are load-bearing for an iterative join loop:
-    *
-    *  - checkpointing truncates lineage, so each round's plan is
-    *    constant-size (leaf ⋈ leaf) instead of nesting one join per
-    *    round — a `persist` alone leaves every driver-side plan walk
-    *    (analysis, optimization, AQE plan-string rendering)
-    *    superlinear in rounds.
-    *  - the rebuild (GraftSqlShim.measuredBarrier) REPLACES the
-    *    ORIGIN STATS that `localCheckpoint` copies onto its
-    *    `LogicalRDD` leaf with the checkpoint's measured block size.
-    *    Catalyst's size-only join estimate is
-    *    `size(left) · size(right)`, so with stats carried across
-    *    rounds `sizeInBytes` DOUBLES IN BIT-LENGTH every round —
-    *    measured: 11 bits → 19,858 bits in 12 rounds — and by ~30
-    *    joins the driver sits for minutes inside
-    *    `BigInteger.multiply` under `SizeInBytesOnlyStatsPlanVisitor`
-    *    (this wedged a full sf0.1 benchmark run). With the rebuild
-    *    every round re-plans from a measured constant-bit-length
-    *    leaf, and a genuinely small frame (frontier, score vector,
-    *    contracted edges) gets to BROADCAST instead of forcing a
-    *    full shuffle of the big side every round.
-    *
-    * Superseded checkpoint blocks are freed by the ContextCleaner once
-    * unreferenced — no session-lifetime cache leak. On a real cluster
-    * prefer `spark.sparkContext.setCheckpointDir` + `checkpoint()` for
-    * executor-loss tolerance; the algorithm is unchanged. */
-  /** Iterative-loop barrier: eagerly materialize `df` via
-    * `localCheckpoint`, with the leaf's statistics REPLACED by the
-    * checkpoint's measured block sizes (see
-    * [[resolveComponents]]'s doc for why carrying derived stats across
-    * rounds of a join loop is an exponential-bit-length driver hazard,
-    * and GraftSqlShim.measuredBarrier for the measured-stats /
-    * no-Row-round-trip details). */
-  private def loopBarrier(df: DataFrame): DataFrame =
-    // eager checkpoint + measured-stats leaf — see
-    // GraftSqlShim.measuredBarrier
-    org.apache.spark.sql.GraftSqlShim.measuredBarrier(df)
-
-  /** [[loopBarrier]] with the convergence probe folded into the
-    * materialization job (see Iterate.loopBarrierProbe) — r13: the
-    * per-round change-flag count and the edge-count probe were each a
-    * separately planned driver job over blocks the barrier had just
-    * built. Values and decisions unchanged; ~2 fewer jobs per round. */
-  private def loopBarrierProbe(df: DataFrame, probeCols: Seq[String])
-      : (DataFrame, Array[(Long, Long)]) =
-    org.apache.spark.sql.GraftSqlShim.measuredBarrierProbe(df, probeCols)
-
-  /** When the (contracted) edge list is at or under this many rows, the
-    * loop finishes with one bounded driver-side union-find instead of
-    * more distributed rounds. Geometric contraction means a 100-TB graph
-    * reaches this within a few rounds; each avoided tail round is a full
-    * cluster barrier (neighbour join + closure + contraction) spent on a
-    * few thousand rows. 500k edges = ~8 MB of longs on the driver. */
-  val componentsLocalFinishEdges: Long = 500000L
-
+    * Every round hands its labels and contracted edges on through
+    * [[graft.ops.Iterate.loopBarrier]] (see [[graft.ops.Iterate]] for
+    * why a checkpoint with measured stats, not a persist), and
+    * [[graft.ops.Iterate.loop]] frees superseded rounds — no
+    * session-lifetime cache leak. */
   def resolveComponents(docs: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id", maxIter: Int = 50,
-      localFinishEdges: Long = componentsLocalFinishEdges): DataFrame = {
-    // every stage the rounds submit carries the round that caused it
-    // (Spark otherwise names it after the thread that ran the job)
-    val sc = docs.sparkSession.sparkContext
-    try resolveRounds(sc, docs, pairs, idCol, maxIter, localFinishEdges)
-    finally sc.clearCallSite()
-  }
-
-  private def resolveRounds(sc: org.apache.spark.SparkContext,
-      docs: DataFrame, pairs: DataFrame, idCol: String, maxIter: Int,
-      localFinishEdges: Long): DataFrame = {
+      localFinishEdges: Long = componentsLocalFinishEdges): DataFrame =
+    Iterate.loop("resolveComponents", maxIter, s"it needed more than " +
+        s"$maxIter rounds (each round is one neighbour step plus a " +
+        "pointer-doubling closure and a graph contraction, so rounds scale " +
+        "~log(diameter)); returning here would silently split components. " +
+        "Raise maxIter.") { l =>
     // symmetrized edge list; labels flow both directions. A barrier leaf:
     // every round's plan references edges, so it must be constant-size.
     // The edge COUNT (the local-finish gate read at every loop top)
     // rides each edge barrier's materialization job — src is never null
     // (ids), so the non-null count ≡ the former edges.count().
-    sc.setCallSite("resolveComponents.edges")
-    var (edges, ec0) = loopBarrierProbe(
+    l.stage("edges")
+    var (edges, ec0) = Iterate.loopBarrierProbe(
       Similarity.symmetrize(pairs, "src", "dst"), Seq("src"))
     var eCount = ec0(0)._1
-    sc.setCallSite("resolveComponents.labels")
-    var labels = loopBarrier(docs.select(col(idCol).as("id"))
+    l.stage("labels")
+    var labels = Iterate.loopBarrier(docs.select(col(idCol).as("id"))
       .distinct().select($"id", $"id".as("comp")))
     // Pointer-doubling closure: comp ← comp(comp) until stable. Labels
     // are monotone non-increasing and always existing vertex ids, so
-    // each pass halves every pointer chain — O(log chain-length) passes.
-    // Change detection rides along as a column (`ch` = strictly
-    // decreased), so the convergence probe is a scan of the just-
-    // checkpointed blocks, never another join.
-    def jumpClosure(tbl: DataFrame): DataFrame = {
-      var cur = tbl
-      var moving = true
-      while (moving) {
-        val (jumped, st) = loopBarrierProbe(cur.as("c")
-          .join(cur.select($"id".as("jid"), $"comp".as("jcomp")),
-            $"c.comp" === $"jid", "left")
-          .select($"c.id".as("id"),
-            least($"c.comp", coalesce($"jcomp", $"c.comp")).as("comp"),
-            (least($"c.comp", coalesce($"jcomp", $"c.comp")) < $"c.comp").as("ch")),
-          Seq("ch"))
-        moving = st(0)._2 > 0 // Σ of the 0/1 change flags ≡ "any changed"
-        cur = jumped.select($"id", $"comp")
-      }
-      cur
-    }
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      sc.setCallSite(s"resolveComponents.round $it")
-      // local finish: once the contracted graph is driver-small, one
-      // union-find replaces every remaining round. The collect is
-      // BOUNDED by localFinishEdges — same class as the other accepted
-      // driver materializations (centroids, partition totals), and the
-      // union-find's min-id roots are exactly the min-label fixpoint the
-      // distributed rounds converge to, so output is bit-identical.
-      // (localFinishEdges = 0 disables, keeping the loop fully
-      // distributed — DedupSpec pins both paths equal.)
-      // eCount rides the edge barriers' materialization jobs (set at
-      // the initial barrier and re-set at every contraction below)
-      if (eCount <= localFinishEdges) {
-        // the edge list is symmetric, so one direction carries every edge
-        val mapping = graft.ops.Iterate.minIdRoots(edges.where($"src" < $"dst"))
-        if (mapping.nonEmpty) {
-          val mapDf = labels.sparkSession.createDataFrame(mapping)
-            .toDF("_rep", "_fin")
-          labels = loopBarrier(labels.join(broadcast(mapDf),
-              $"comp" === $"_rep", "left")
-            .select($"id", coalesce($"_fin", $"comp").as("comp")))
+    // each pass halves every pointer chain — O(log chain-length) passes,
+    // which 64 bounds for any id count. Change detection rides along as
+    // a column (`ch` = strictly decreased), so the convergence probe is
+    // a scan of the just-checkpointed blocks, never another join.
+    def jumpClosure(tbl: DataFrame): DataFrame =
+      Iterate.loop("resolveComponents.closure", 64,
+          "pointer doubling halves every chain per pass") { c =>
+        var cur = tbl
+        var moving = true
+        while (moving) {
+          c.round(cur)
+          val (jumped, st) = Iterate.loopBarrierProbe(cur.as("c")
+            .join(cur.select($"id".as("jid"), $"comp".as("jcomp")),
+              $"c.comp" === $"jid", "left")
+            .select($"c.id".as("id"),
+              least($"c.comp", coalesce($"jcomp", $"c.comp")).as("comp"),
+              (least($"c.comp", coalesce($"jcomp", $"c.comp")) < $"c.comp").as("ch")),
+            Seq("ch"))
+          moving = st(0)._2 > 0 // Σ of the 0/1 change flags ≡ "any changed"
+          cur = jumped.select($"id", $"comp")
         }
-        converged = true
-        it += 1
-      } else {
-      // neighbour step: min label over self + neighbours (the only part
-      // that moves information ACROSS edges; the closure only compresses
-      // chains already discovered)
-      val nbrMin = edges.join(labels, $"dst" === $"id")
-        .groupBy($"src").agg(min($"comp").as("nbr_comp"))
-      val (stepped, stepSt) = loopBarrierProbe(labels.as("l")
-        .join(nbrMin, $"l.id" === $"src", "left")
-        .select($"l.id".as("id"),
-          least($"l.comp", coalesce($"nbr_comp", $"l.comp")).as("comp"),
-          (least($"l.comp", coalesce($"nbr_comp", $"l.comp")) < $"l.comp").as("ch")),
-        Seq("ch"))
-      val changed = stepSt(0)._2 // Σ of the 0/1 change flags
-      log.info(s"resolveComponents round=$it changed=$changed")
-      if (changed == 0) converged = true
-      else {
-        labels = jumpClosure(stepped.select($"id", $"comp"))
-        // contract: rewrite every edge through the fresh labels. After
-        // jumpClosure every comp value is a fixpoint representative, so
-        // (comp(u), comp(v)) edges connect reps only; self-loops (edges
-        // now inside one component) drop, and dedup collapses the
-        // parallel edges a big cluster produces. Mapping both stored
-        // directions keeps the list symmetric without a re-union.
-        val (contracted, ecSt) = loopBarrierProbe(edges
-          .join(labels.select($"id".as("src"), $"comp".as("csrc")), Seq("src"))
-          .join(labels.select($"id".as("dst"), $"comp".as("cdst")), Seq("dst"))
-          .where($"csrc" =!= $"cdst")
-          .select($"csrc".as("src"), $"cdst".as("dst"))
-          .distinct(), Seq("src"))
-        edges = contracted
-        eCount = ecSt(0)._1
+        cur
       }
-      it += 1
+    // min neighbour label per vertex: the only step that moves
+    // information ACROSS edges (the closure only compresses chains
+    // already discovered)
+    def nbrMin() = edges.join(labels, $"dst" === $"id")
+      .groupBy($"src").agg(min($"comp").as("nbr_comp"))
+    var converged = false
+    while (!converged) {
+      if (l.rounds == maxIter) {
+        l.stage("stability")
+        // The loop only proves convergence via a zero-change round, so a
+        // graph that fully resolved in exactly maxIter rounds lands here
+        // with correct labels. One stability probe (would another
+        // neighbour step change anything?) separates that from a
+        // genuinely split labeling, which the next round() refuses.
+        converged = labels.as("l")
+          .join(nbrMin(), $"l.id" === $"src")
+          .where($"nbr_comp" < $"l.comp").limit(1).count() == 0
       }
-    }
-    if (!converged) {
-      sc.setCallSite("resolveComponents.stability")
-      // The loop only proves convergence via a zero-change round, so a
-      // graph that fully resolved in exactly maxIter rounds lands here
-      // with correct labels. One stability probe (would another
-      // neighbour step change anything?) separates that from a
-      // genuinely split labeling.
-      val probeMin = edges.join(labels, $"dst" === $"id")
-        .groupBy($"src").agg(min($"comp").as("nbr_comp"))
-      val unstable = labels.as("l")
-        .join(probeMin, $"l.id" === $"src")
-        .where($"nbr_comp" < $"l.comp").limit(1).count() > 0
-      if (!unstable) converged = true
-    }
-    if (!converged) {
-      throw new IllegalStateException(
-        s"resolveComponents needed more than $maxIter rounds (each round " +
-        "is one neighbour step plus a pointer-doubling closure and a " +
-        "graph contraction, so rounds scale ~log(diameter)); returning " +
-        "here would silently split components. Raise maxIter.")
+      if (!converged) {
+        l.round(labels, edges)
+        // local finish: once the contracted graph is driver-small, one
+        // union-find replaces every remaining round. The collect is
+        // BOUNDED by localFinishEdges — same class as the other accepted
+        // driver materializations (centroids, partition totals), and the
+        // union-find's min-id roots are exactly the min-label fixpoint the
+        // distributed rounds converge to, so output is bit-identical.
+        // (localFinishEdges = 0 disables, keeping the loop fully
+        // distributed — DedupSpec pins both paths equal.)
+        // eCount rides the edge barriers' materialization jobs (set at
+        // the initial barrier and re-set at every contraction below)
+        if (eCount <= localFinishEdges) {
+          // the edge list is symmetric, so one direction carries every edge
+          val mapping = Iterate.minIdRoots(edges.where($"src" < $"dst"))
+          if (mapping.nonEmpty) {
+            val mapDf = labels.sparkSession.createDataFrame(mapping)
+              .toDF("_rep", "_fin")
+            labels = Iterate.loopBarrier(labels.join(broadcast(mapDf),
+                $"comp" === $"_rep", "left")
+              .select($"id", coalesce($"_fin", $"comp").as("comp")))
+          }
+          converged = true
+        } else {
+          // neighbour step: min label over self + neighbours
+          val (stepped, stepSt) = Iterate.loopBarrierProbe(labels.as("l")
+            .join(nbrMin(), $"l.id" === $"src", "left")
+            .select($"l.id".as("id"),
+              least($"l.comp", coalesce($"nbr_comp", $"l.comp")).as("comp"),
+              (least($"l.comp", coalesce($"nbr_comp", $"l.comp")) < $"l.comp").as("ch")),
+            Seq("ch"))
+          if (stepSt(0)._2 == 0) converged = true // Σ of the 0/1 change flags
+          else {
+            labels = jumpClosure(stepped.select($"id", $"comp"))
+            // contract: rewrite every edge through the fresh labels. After
+            // jumpClosure every comp value is a fixpoint representative, so
+            // (comp(u), comp(v)) edges connect reps only; self-loops (edges
+            // now inside one component) drop, and dedup collapses the
+            // parallel edges a big cluster produces. Mapping both stored
+            // directions keeps the list symmetric without a re-union.
+            val (contracted, ecSt) = Iterate.loopBarrierProbe(edges
+              .join(labels.select($"id".as("src"), $"comp".as("csrc")), Seq("src"))
+              .join(labels.select($"id".as("dst"), $"comp".as("cdst")), Seq("dst"))
+              .where($"csrc" =!= $"cdst")
+              .select($"csrc".as("src"), $"cdst".as("dst"))
+              .distinct(), Seq("src"))
+            edges = contracted
+            eCount = ecSt(0)._1
+          }
+        }
+      }
     }
     labels.select($"id".as(idCol), $"comp".as("component_id"),
       ($"id" === $"comp").as("is_canonical"))

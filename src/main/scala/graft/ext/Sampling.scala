@@ -668,26 +668,29 @@ object Sampling {
         countDistinct($"a").as("_na"), countDistinct($"b").as("_nb"))
       .select(expr("(_n * 10000) div _na").as("_ta"),
         expr("(_n * 10000) div _nb").as("_tb"))
-    var w = cells.crossJoin(broadcast(tot))
-      .select($"a", $"b", $"c", $"_ta", $"_tb", ($"c" * 10000L).as("w"))
-    for (_ <- 1 to rounds) {
-      // each half-round reads the previous w TWICE (marginal aggregate +
-      // join back) — without a loop barrier the logical plan doubles per
-      // half-round (2^(2·rounds) analysis tree; measured 10 s of pure
-      // planning at sf0.1 with every frame cell-sized). The barrier
-      // truncates lineage once per round on the tiny cell frame.
-      w = graft.ops.Iterate.loopBarrier(w)
-      val rt = w.groupBy($"a").agg(sum($"w").as("_rt"))
-      w = w.join(broadcast(rt), "a")
-        .select($"a", $"b", $"c", $"_ta", $"_tb",
-          expr("(w * _ta) div _rt").as("w"))
-      val ct = w.groupBy($"b").agg(sum($"w").as("_ct"))
-      w = w.join(broadcast(ct), "b")
-        .select($"a", $"b", $"c", $"_ta", $"_tb",
-          expr("(w * _tb) div _ct").as("w"))
+    graft.ops.Iterate.loop("rakeWeights", rounds) { l =>
+      var w = cells.crossJoin(broadcast(tot))
+        .select($"a", $"b", $"c", $"_ta", $"_tb", ($"c" * 10000L).as("w"))
+      for (_ <- 1 to rounds) {
+        l.round(w)
+        // each half-round reads the previous w TWICE (marginal aggregate
+        // + join back) — without a loop barrier the logical plan doubles
+        // per half-round (2^(2·rounds) analysis tree; measured 10 s of
+        // pure planning at sf0.1 with every frame cell-sized). The
+        // barrier truncates lineage once per round on the tiny cell frame.
+        w = graft.ops.Iterate.loopBarrier(w)
+        val rt = w.groupBy($"a").agg(sum($"w").as("_rt"))
+        w = w.join(broadcast(rt), "a")
+          .select($"a", $"b", $"c", $"_ta", $"_tb",
+            expr("(w * _ta) div _rt").as("w"))
+        val ct = w.groupBy($"b").agg(sum($"w").as("_ct"))
+        w = w.join(broadcast(ct), "b")
+          .select($"a", $"b", $"c", $"_ta", $"_tb",
+            expr("(w * _tb) div _ct").as("w"))
+      }
+      w.select($"a".as(dimA), $"b".as(dimB), $"c".as("n_docs"),
+        $"w".as("w_q4"), expr("(10000 * w) div (c * 10000)").as("rate_bp"))
     }
-    w.select($"a".as(dimA), $"b".as(dimB), $"c".as("n_docs"),
-      $"w".as("w_q4"), expr("(10000 * w) div (c * 10000)").as("rate_bp"))
   }
 
   /** Largest-remainder (Hamilton) apportionment: split `totalSlots`

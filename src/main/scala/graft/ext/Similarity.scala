@@ -96,19 +96,22 @@ object Similarity {
         expr("""(n * p - element_at(s, cast(i0 + 1 as int))
                        * element_at(s, cast(j0 + 1 as int))) div 1048576""")
           .as("c"))
-    val covB = graft.ops.Iterate.loopBarrier(cov) // read every round
-    var v = spark.range(1, dim + 1)
-      .select($"id".as("dim"), lit(10000L).as("x"))
-    for (_ <- 1 to iters) {
-      val u = covB.join(v, covB("j") === v("dim"))
-        .groupBy($"i").agg(sum($"c" * $"x").as("u"))
-      v = graft.ops.Iterate.loopBarrier(
-        u.crossJoin(broadcast(u.agg(max(abs($"u")).as("m"))))
-          .select($"i".as("dim"),
-            when($"m" === 0L, lit(0L))
-              .otherwise(expr("(u * 10000) div m")).as("x")))
+    graft.ops.Iterate.loop("powerIterate", iters) { l =>
+      val covB = graft.ops.Iterate.loopBarrier(cov) // read every round
+      var v = spark.range(1, dim + 1)
+        .select($"id".as("dim"), lit(10000L).as("x"))
+      for (_ <- 1 to iters) {
+        l.round(v, covB)
+        val u = covB.join(v, covB("j") === v("dim"))
+          .groupBy($"i").agg(sum($"c" * $"x").as("u"))
+        v = graft.ops.Iterate.loopBarrier(
+          u.crossJoin(broadcast(u.agg(max(abs($"u")).as("m"))))
+            .select($"i".as("dim"),
+              when($"m" === 0L, lit(0L))
+                .otherwise(expr("(u * 10000) div m")).as("x")))
+      }
+      (covB, v)
     }
-    (covB, v)
   }
 
   /** Anisotropy readout — the share of total variance the TOP component

@@ -25,14 +25,14 @@ import org.apache.spark.sql.functions._
   * frontier-side dedup, and one anti-join against the visited set —
   * cost tracks the frontier size, which on bounded-degree graphs rises
   * then COLLAPSES (most BFS work is 2-3 hops on near-dup graphs), never
-  * the full node set per round. The visited set is CHECKPOINT-truncated per round
-  * (flat lineage — no exponential plan growth across rounds, the
-  * PageRank/KCore contract) and rounds are bounded by `maxHops`, so the
-  * loop needs no convergence guard: the hop budget IS the bound. On a
-  * 1000-executor cluster the frontier join is AQE-broadcastable
-  * whenever the frontier is small (hop 1 and the tail hops), and the
-  * anti-join keys are already the join keys — one shuffle family per
-  * round on the node id.
+  * the full node set per round. The visited set is carried between
+  * rounds through [[Iterate.loopBarrier]] (flat lineage — no
+  * exponential plan growth across rounds) and rounds are bounded by
+  * `maxHops`, so the loop needs no convergence guard: the hop budget IS
+  * the bound. On a 1000-executor cluster the frontier join is
+  * AQE-broadcastable whenever the frontier is small (hop 1 and the tail
+  * hops), and the anti-join keys are already the join keys — one
+  * shuffle family per round on the node id.
   */
 object Bfs {
 
@@ -48,35 +48,46 @@ object Bfs {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // loop barriers, not plain persists: `visited` is referenced twice
-    // per hop (anti-join + union), so the logical plan doubles per
-    // round without truncation (Iterate.loopBarrier), and the edge
-    // list's expensive upstream must materialize once, not per hop
-    val e = Iterate.loopBarrier(
-      edges.select($"src", $"dst").where($"src" =!= $"dst"))
-    var visited = Iterate.loopBarrier(
+    frontierLoop("Bfs", edges.select($"src", $"dst").where($"src" =!= $"dst"),
+        Nil, 0, maxHops)(_ =>
       seeds.select(seeds.columns.head).toDF("node").distinct()
         .select($"node", lit(0L).as("hops")))
-    var frontier = visited.select($"node")
-    var hop = 0
-    var frontierEmpty = visited.isEmpty
-    while (!frontierEmpty && hop < maxHops) {
-      hop += 1
-      // dedup BEFORE the anti-join: a frontier node with fan-in f would
-      // otherwise probe the visited set f times
-      val next = Iterate.loopBarrier(
-        e.join(frontier, e("src") === frontier("node"))
-          .select(e("dst").as("node")).distinct()
-          .join(visited, Seq("node"), "left_anti")
-          .select($"node", lit(hop.toLong).as("hops")))
-      frontierEmpty = next.isEmpty
-      if (!frontierEmpty) {
-        visited = Iterate.loopBarrier(visited.unionByName(next))
-        frontier = next.select($"node")
-      }
-    }
-    visited
   }
+
+  /** The frontier loop [[run]] and [[boundedDistances]] share:
+    * `start(e)` is the reached set — (keys…, node, hop) — at hop `hop0`;
+    * each round adds the unreached, non-root neighbours of the last
+    * frontier at the next hop. The reached set is referenced twice per
+    * hop (anti-join + union), hence barriers; frontier emptiness rides
+    * each barrier's own job. */
+  private def frontierLoop(op: String, edges: DataFrame, keys: Seq[String],
+      hop0: Int, maxHops: Int)(start: DataFrame => DataFrame): DataFrame =
+    Iterate.loop(op, maxHops - hop0) { l =>
+      l.stage("edges")
+      val e = Iterate.loopBarrier(edges)
+      l.stage("start")
+      var (reached, nNew) = Iterate.loopBarrierCount(start(e))
+      val at = (keys :+ "node").map(col)
+      val hopCol = reached.columns.last
+      var frontier = reached.select(at: _*)
+      while (nNew > 0 && l.rounds < maxHops - hop0) {
+        val hop = hop0 + 1 + l.round(reached, frontier, e)
+        val (next, n) = Iterate.loopBarrierCount(
+          frontier.join(e, frontier("node") === e("src"))
+            // dedup BEFORE the anti-join: a frontier node with fan-in f
+            // would otherwise probe the reached set f times
+            .select(keys.map(frontier(_)) :+ e("dst").as("node"): _*).distinct()
+            .where(keys.foldLeft(lit(true))((c, k) => c && col(k) =!= col("node")))
+            .join(reached, keys :+ "node", "left_anti")
+            .select(at :+ lit(hop.toLong).as(hopCol): _*))
+        nNew = n
+        if (nNew > 0) {
+          reached = Iterate.loopBarrier(reached.unionByName(next))
+          frontier = next.select(at: _*)
+        }
+      }
+      reached
+    }
 
   /** Bounded-radius HARMONIC CENTRALITY (Marchiori & Latora 2000;
     * Boldi & Vigna 2014 for the web-graph form): per node,
@@ -134,29 +145,9 @@ object Bfs {
       s"maxHops must be in 1..8, got $maxHops")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = Iterate.loopBarrier(
-      edges.select($"src", $"dst")
+    frontierLoop("Bfs.distances", edges.select($"src", $"dst")
         .where($"src" =!= $"dst" && $"src".isNotNull && $"dst".isNotNull)
-        .distinct())
-    var dist = Iterate.loopBarrier(
+        .distinct(), Seq("root"), 1, maxHops)(e =>
       e.select($"src".as("root"), $"dst".as("node"), lit(1L).as("d")))
-    var frontier = dist.select($"root", $"node")
-    var hop = 1
-    var done = dist.isEmpty
-    while (!done && hop < maxHops) {
-      hop += 1
-      val next = Iterate.loopBarrier(
-        frontier.join(e, frontier("node") === e("src"))
-          .select(frontier("root"), e("dst").as("node")).distinct()
-          .where($"root" =!= $"node")
-          .join(dist, Seq("root", "node"), "left_anti")
-          .select($"root", $"node", lit(hop.toLong).as("d")))
-      done = next.isEmpty
-      if (!done) {
-        dist = Iterate.loopBarrier(dist.unionByName(next))
-        frontier = next.select($"root", $"node")
-      }
-    }
-    dist
   }
 }

@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   * rides a broadcast cross join. Shuffle is O(edges) per round — the
   * Pregel cost. Each new score frame passes [[Iterate.loopBarrier]]:
   * it is referenced twice per round (the sum AND its own max), which
-  * without the barrier doubles the logical plan per round.
+  * without the barrier doubles the logical plan per round. The edge
+  * list, read every round, passes it once up front.
   *
   * Overflow headroom: Σ a ≤ max_degree·scale and the rescale
   * multiplies by `scale` once more — `degree·scale² ≤ 9.2e18` holds up
@@ -41,29 +42,31 @@ object Hits {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    val e = edges.select($"hub", $"auth")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var a = Iterate.loopBarrier(
-      e.select($"auth").distinct().withColumn("a", lit(scale)))
-    var h: DataFrame = null
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    for (_ <- 1 to iterations) {
-      // raw sums persist for the round: each is read twice (the rescale
-      // AND its own max); loopBarrier materializes eagerly, so the
-      // persist lifetime is exactly this block
-      val hRaw = e.join(a, "auth").groupBy($"hub").agg(sum($"a").as("s")).persist(lvl)
-      h = Iterate.loopBarrier(
-        hRaw.crossJoin(broadcast(hRaw.agg(max($"s").as("m"))))
-          .select($"hub", expr(s"(s * $scale) div m").as("h")))
-      hRaw.unpersist()
-      val aRaw = e.join(h, "hub").groupBy($"auth").agg(sum($"h").as("s")).persist(lvl)
-      a = Iterate.loopBarrier(
-        aRaw.crossJoin(broadcast(aRaw.agg(max($"s").as("m"))))
-          .select($"auth", expr(s"(s * $scale) div m").as("a")))
-      aRaw.unpersist()
+    Iterate.loop("Hits", iterations) { l =>
+      l.stage("edges")
+      val e = Iterate.loopBarrier(edges.select($"hub", $"auth"))
+      var a = Iterate.loopBarrier(
+        e.select($"auth").distinct().withColumn("a", lit(scale)))
+      // one half-round: per `key`, Σ of the scores joined on `on`,
+      // rescaled to max = scale. The raw sums persist for the half-round:
+      // each is read twice (the rescale AND its own max); loopBarrier
+      // materializes eagerly, so the persist lifetime is exactly this block
+      def half(scores: DataFrame, on: String, key: String, out: String) = {
+        val raw = e.join(scores, on).groupBy(col(key))
+          .agg(sum(col(scores.columns.last)).as("s")).persist(lvl)
+        try Iterate.loopBarrier(raw.crossJoin(broadcast(raw.agg(max($"s").as("m"))))
+          .select(col(key), expr(s"(s * $scale) div m").as(out)))
+        finally raw.unpersist()
+      }
+      var h: DataFrame = null
+      for (_ <- 1 to iterations) {
+        l.round(a, e)
+        h = half(a, "auth", "hub", "h")
+        a = half(h, "hub", "auth", "a")
+      }
+      (h.select($"hub".as("id"), $"h".as("score")),
+        a.select($"auth".as("id"), $"a".as("score")))
     }
-    e.unpersist()
-    (h.select($"hub".as("id"), $"h".as("score")),
-      a.select($"auth".as("id"), $"a".as("score")))
   }
 }

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** k-core decomposition by iterative peeling — the graph-density
   * operator next to PageRank / label propagation / connected components:
@@ -33,7 +32,9 @@ import org.apache.spark.storage.StorageLevel
   * remaining cluster barriers with exact-identical output (parity
   * spec-pinned). Distributed rounds are bounded by `maxIter` and the
   * loop THROWS on non-convergence rather than returning a superset of
-  * the core. The frame persisted between rounds keeps lineage flat.
+  * the core. The edge list is carried between rounds through
+  * [[Iterate.loopBarrier]] (flat lineage, superseded rounds freed); its
+  * count rides the barrier's own job.
   */
 object KCore {
 
@@ -46,72 +47,61 @@ object KCore {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    var cur = edges.select($"src", $"dst").where($"src" =!= $"dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var nEdges = cur.count()
-    var converged = false
-    var round = 0
-    while (!converged && nEdges > localFinishEdges) {
-      if (round >= maxIter)
-        throw new IllegalStateException(
-          s"k-core peeling did not converge in $maxIter rounds with " +
-            s"$nEdges edges still above localFinishEdges=$localFinishEdges; " +
-            "raise maxIter or localFinishEdges")
-      val alive = cur.groupBy($"src").agg(count(lit(1)).as("_d"))
-        .where($"_d" >= k)
-        .select($"src".as("_n"))
-      val next = cur
-        .join(alive, cur("src") === $"_n", "left_semi")
-        .join(alive, cur("dst") === $"_n", "left_semi")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nNext = next.count()
-      cur.unpersist()
-      // node removal always removes its edges, so a stable edge count
-      // IS the fixpoint (k >= 1: every tracked node has deg >= 1)
-      converged = nNext == nEdges
-      cur = next
-      nEdges = nNext
-      round += 1
-    }
-    if (converged) {
-      // cur stays persisted: the returned frame reads it lazily (the
-      // caller-owns-cache-scope contract shared with the ext operators)
-      cur.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
-    } else {
-      // local finish: exact bucket peel over the collected remnant
-      val nodeType = cur.schema("src").dataType
-      val rows = cur.collect()
-      cur.unpersist()
-      val deg = scala.collection.mutable.HashMap.empty[Any, Long]
-      val adj = scala.collection.mutable.HashMap
-        .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-      rows.foreach { r =>
-        val (s, d) = (r.get(0), r.get(1))
-        deg.update(s, deg.getOrElse(s, 0L) + 1L)
-        adj.getOrElseUpdate(s, scala.collection.mutable.ArrayBuffer.empty) += d
+    Iterate.loop("KCore", maxIter, s"edges are still above " +
+        s"localFinishEdges=$localFinishEdges; raise maxIter or localFinishEdges") { l =>
+      l.stage("edges")
+      var (cur, nEdges) = Iterate.loopBarrierCount(
+        edges.select($"src", $"dst").where($"src" =!= $"dst"))
+      var converged = false
+      while (!converged && nEdges > localFinishEdges) {
+        l.round(cur)
+        val alive = cur.groupBy($"src").agg(count(lit(1)).as("_d"))
+          .where($"_d" >= k)
+          .select($"src".as("_n"))
+        val (next, nNext) = Iterate.loopBarrierCount(cur
+          .join(alive, cur("src") === $"_n", "left_semi")
+          .join(alive, cur("dst") === $"_n", "left_semi"))
+        // node removal always removes its edges, so a stable edge count
+        // IS the fixpoint (k >= 1: every tracked node has deg >= 1)
+        converged = nNext == nEdges
+        cur = next
+        nEdges = nNext
       }
-      val removed = scala.collection.mutable.HashSet.empty[Any]
-      val queue = scala.collection.mutable.Queue.empty[Any]
-      deg.foreach { case (n, c) => if (c < k) queue.enqueue(n) }
-      while (queue.nonEmpty) {
-        val v = queue.dequeue()
-        if (!removed.contains(v)) {
-          removed += v
-          adj.getOrElse(v, Nil).foreach { u =>
-            if (!removed.contains(u)) {
-              val c = deg(u) - 1L
-              deg.update(u, c)
-              if (c < k) queue.enqueue(u)
+      if (converged) cur.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
+      else { // local finish: exact bucket peel over the collected remnant
+        val nodeType = cur.schema("src").dataType
+        val rows = cur.collect()
+        val deg = scala.collection.mutable.HashMap.empty[Any, Long]
+        val adj = scala.collection.mutable.HashMap
+          .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
+        rows.foreach { r =>
+          val (s, d) = (r.get(0), r.get(1))
+          deg.update(s, deg.getOrElse(s, 0L) + 1L)
+          adj.getOrElseUpdate(s, scala.collection.mutable.ArrayBuffer.empty) += d
+        }
+        val removed = scala.collection.mutable.HashSet.empty[Any]
+        val queue = scala.collection.mutable.Queue.empty[Any]
+        deg.foreach { case (n, c) => if (c < k) queue.enqueue(n) }
+        while (queue.nonEmpty) {
+          val v = queue.dequeue()
+          if (!removed.contains(v)) {
+            removed += v
+            adj.getOrElse(v, Nil).foreach { u =>
+              if (!removed.contains(u)) {
+                val c = deg(u) - 1L
+                deg.update(u, c)
+                if (c < k) queue.enqueue(u)
+              }
             }
           }
         }
+        val out = deg.iterator
+          .filter { case (n, _) => !removed.contains(n) }
+          .map { case (n, c) => Row(n, c) }.toSeq
+        val schema = StructType(Seq(
+          StructField("node", nodeType), StructField("deg", LongType)))
+        spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
       }
-      val out = deg.iterator
-        .filter { case (n, _) => !removed.contains(n) }
-        .map { case (n, c) => Row(n, c) }.toSeq
-      val schema = StructType(Seq(
-        StructField("node", nodeType), StructField("deg", LongType)))
-      spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
     }
   }
 }

@@ -105,112 +105,109 @@ object KTruss {
   /** Decremental cascade: from `cur0` (`(a, b, sup, _da, _db)` —
     * supports VALID for exactly this edge set, endpoint degrees
     * attached once by [[withDeg]]) to the fixpoint where every
-    * remaining edge has `sup ≥ minSup`. Each round drops the frontier, feeds it
-    * to `dropSink` (invoked on a frame over the round's BARRIERED
-    * parent, so it stays valid after `cur` moves on), enumerates the
-    * triangles of the current graph incident to ≥ 1 dropped edge —
-    * frontier ⋈ symmetric adjacency ⋈ adjacency, deduped on the sorted
-    * vertex triple so a triangle losing two edges at once still
-    * subtracts ONE — and decrements the surviving edges of each lost
-    * triangle. Cardinality is carried arithmetically (nCur − frontier
-    * size): one count per round, one barrier per DROPPING round. */
+    * remaining edge has `sup ≥ minSup`. Each round drops the frontier,
+    * enumerates the triangles of the current graph incident to ≥ 1
+    * dropped edge — frontier ⋈ symmetric adjacency ⋈ adjacency, deduped
+    * on the sorted vertex triple so a triangle losing two edges at once
+    * still subtracts ONE — and decrements the surviving edges of each
+    * lost triangle. Cardinality is carried arithmetically (nCur −
+    * frontier size): one count per round, one barrier per DROPPING
+    * round. With `keepDropped` the dropped frontiers come back too,
+    * newest first — each a frame over its round's barriered `cur`,
+    * which [[Iterate.loop]] therefore keeps. */
   private def cascade(cur0: DataFrame, n0: Long, minSup: Long,
-      maxIter: Int, dropSink: DataFrame => Unit): (DataFrame, Long) = {
-    val spark = cur0.sparkSession
-    import spark.implicits._
-    var cur = cur0
-    var nCur = n0
-    var round = 0
-    // frontier size for rounds ≥ 2 rides the previous round's barrier
-    // (a `sup < minSup` flag summed during materialization — r13,
-    // guide §5: the per-round d.count() was a separately planned job
-    // over just-checkpointed blocks). Round 1 counts for real: cur0
-    // comes from a previous level whose threshold was lower.
-    var nDFused: Option[Long] = None
-    while (round < maxIter) {
-      round += 1
-      val d = cur.where($"sup" < minSup)
-      val nD = nDFused.getOrElse(d.count())
-      if (nD == 0L) return (cur, nCur)
-      dropSink(d)
-      val adj = cur.select($"a".as("u"), $"b".as("w"))
-        .unionByName(cur.select($"b".as("u"), $"a".as("w")))
-      // candidate third vertices come from each dropped edge's
-      // SPARSER endpoint (by the carried initial degrees — a pure
-      // projection, zero per-round jobs): expanding from the denser
-      // side would cost deg(hub) rows per dropped hub edge — the same
-      // skew the degree-ordered wedge enumeration in [[support]]
-      // exists to kill
-      val dOriented = d.select(
-        when($"_da" <= $"_db", $"a").otherwise($"b").as("u"),
-        when($"_da" <= $"_db", $"b").otherwise($"a").as("v"))
-      val lost = dOriented
-        .join(adj, Seq("u"))
-        .join(adj.select($"u".as("v"), $"w"), Seq("v", "w"), "left_semi")
-        .select(sort_array(array($"u", $"v", $"w")).as("_t"))
-        .distinct()
-        .select($"_t"(0).as("x"), $"_t"(1).as("y"), $"_t"(2).as("z"))
-      val edges3 = lost.select($"x".as("a"), $"y".as("b"))
-        .unionByName(lost.select($"x".as("a"), $"z".as("b")))
-        .unionByName(lost.select($"y".as("a"), $"z".as("b")))
-      val decr = edges3
-        .join(d.select($"a", $"b"), Seq("a", "b"), "left_anti")
-        .groupBy($"a", $"b").agg(count(lit(1)).as("_d"))
-      val (bar, st) = Iterate.loopBarrierProbe(
-        cur.join(d.select($"a", $"b"), Seq("a", "b"), "left_anti")
-          .join(decr, Seq("a", "b"), "left_outer")
-          .select($"a", $"b",
-            ($"sup" - coalesce($"_d", lit(0L))).as("sup"),
-            $"_da", $"_db")
-          .withColumn("_dr", $"sup" < minSup), Seq("_dr"))
-      cur = bar.drop("_dr")
-      nDFused = Some(st(0)._2)
-      nCur -= nD
+      maxIter: Int, keepDropped: Boolean): (DataFrame, Long, List[DataFrame]) =
+    Iterate.loop("KTruss", maxIter, "raise maxIter") { l =>
+      val spark = cur0.sparkSession
+      import spark.implicits._
+      var cur = cur0
+      var nCur = n0
+      var dropped = List.empty[DataFrame]
+      // frontier size for rounds ≥ 2 rides the previous round's barrier
+      // (a `sup < minSup` flag summed during materialization; a separate
+      // d.count() would be one more job over just-checkpointed blocks).
+      // Round 1 counts for real: cur0 comes from a previous level whose
+      // threshold was lower.
+      var nDFused: Option[Long] = None
+      var done = false
+      while (!done) {
+        l.round(cur :: dropped: _*)
+        val d = cur.where($"sup" < minSup)
+        val nD = nDFused.getOrElse(d.count())
+        if (nD == 0L) done = true
+        else {
+          if (keepDropped) dropped = d :: dropped
+          val adj = cur.select($"a".as("u"), $"b".as("w"))
+            .unionByName(cur.select($"b".as("u"), $"a".as("w")))
+          // candidate third vertices come from each dropped edge's
+          // SPARSER endpoint (by the carried initial degrees — a pure
+          // projection, zero per-round jobs): expanding from the denser
+          // side would cost deg(hub) rows per dropped hub edge — the same
+          // skew the degree-ordered wedge enumeration in [[support]]
+          // exists to kill
+          val dOriented = d.select(
+            when($"_da" <= $"_db", $"a").otherwise($"b").as("u"),
+            when($"_da" <= $"_db", $"b").otherwise($"a").as("v"))
+          val lost = dOriented
+            .join(adj, Seq("u"))
+            .join(adj.select($"u".as("v"), $"w"), Seq("v", "w"), "left_semi")
+            .select(sort_array(array($"u", $"v", $"w")).as("_t"))
+            .distinct()
+            .select($"_t"(0).as("x"), $"_t"(1).as("y"), $"_t"(2).as("z"))
+          val edges3 = lost.select($"x".as("a"), $"y".as("b"))
+            .unionByName(lost.select($"x".as("a"), $"z".as("b")))
+            .unionByName(lost.select($"y".as("a"), $"z".as("b")))
+          val decr = edges3
+            .join(d.select($"a", $"b"), Seq("a", "b"), "left_anti")
+            .groupBy($"a", $"b").agg(count(lit(1)).as("_d"))
+          val (bar, st) = Iterate.loopBarrierProbe(
+            cur.join(d.select($"a", $"b"), Seq("a", "b"), "left_anti")
+              .join(decr, Seq("a", "b"), "left_outer")
+              .select($"a", $"b",
+                ($"sup" - coalesce($"_d", lit(0L))).as("sup"),
+                $"_da", $"_db")
+              .withColumn("_dr", $"sup" < minSup), Seq("_dr"))
+          cur = bar.drop("_dr")
+          nDFused = Some(st(0)._2)
+          nCur -= nD
+        }
+      }
+      (cur, nCur, dropped)
     }
-    throw new IllegalStateException(
-      s"k-truss did not converge in $maxIter rounds — raise maxIter")
-  }
 
   /** One full peel to the k-truss fixpoint over canonical (a, b)
     * edges — the r11 wedge-join-per-round form, kept (with
     * [[decomposePeel]]) as the independent in-JVM oracle for the
     * decremental rewrite. Returns the converged `(a, b, support)`
-    * frame (barriered) and its cardinality.
-    *
-    * `sup0`: supports ALREADY VALID for e0 (a previous peel's converged
-    * frame — [[decomposePeel]]'s phase hand-off). The first round then
-    * filters instead of recomputing the wedge join: if nothing drops,
-    * e0 was already the k-truss and the peel is free; if edges drop,
-    * the loop continues with fresh supports. */
+    * frame (barriered) and its cardinality. */
   private def peel(e0: DataFrame, n0: Long, k: Int,
-      maxIter: Int, sup0: Option[DataFrame] = None): (DataFrame, Long) = {
-    val spark = e0.sparkSession
-    import spark.implicits._
-    val minSup = (k - 2).toLong
-    var e = e0
-    var nPrev = n0
-    var round = 0
-    sup0.foreach { s =>
-      val kept = Iterate.loopBarrier(s.where($"support" >= minSup))
-      val nKept = kept.count()
-      if (nKept == nPrev) return (kept, nKept)
-      nPrev = nKept
-      e = kept.select($"a", $"b")
+      maxIter: Int): (DataFrame, Long) =
+    Iterate.loop("KTruss.peel", maxIter, "raise maxIter") { l =>
+      val spark = e0.sparkSession
+      import spark.implicits._
+      var e = e0
+      var nPrev = n0
+      var fix: Option[(DataFrame, Long)] = None
+      while (fix.isEmpty) {
+        l.round(e)
+        val (kept, nKept) = Iterate.loopBarrierCount(
+          e.join(support(e), Seq("a", "b"), "left_outer")
+            .select($"a", $"b",
+              coalesce($"support", lit(0L)).as("support"))
+            .where($"support" >= k - 2))
+        if (nKept == nPrev) fix = Some((kept, nKept))
+        else { nPrev = nKept; e = kept.select($"a", $"b") }
+      }
+      fix.get
     }
-    while (round < maxIter) {
-      round += 1
-      val kept = Iterate.loopBarrier(
-        e.join(support(e), Seq("a", "b"), "left_outer")
-          .select($"a", $"b",
-            coalesce($"support", lit(0L)).as("support"))
-          .where($"support" >= minSup))
-      val nKept = kept.count()
-      if (nKept == nPrev) return (kept, nKept)
-      nPrev = nKept
-      e = kept.select($"a", $"b")
-    }
-    throw new IllegalStateException(
-      s"k-truss did not converge in $maxIter rounds — raise maxIter")
+
+  /** The canonical edges with supports and degrees attached — the
+    * cascade's input — and their count, which rides the barrier job
+    * (sup is never null — coalesced). */
+  private def supported(edges: DataFrame): (DataFrame, Long) = {
+    val (cur, st) = Iterate.loopBarrierProbe(
+      withDeg(supportsOf(Iterate.loopBarrier(canonical(edges)))), Seq("sup"))
+    (cur, st(0)._1)
   }
 
   private def canonical(edges: DataFrame): DataFrame = {
@@ -225,12 +222,9 @@ object KTruss {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e0 = Iterate.loopBarrier(canonical(edges))
-    // edge count rides the barrier job (sup is never null — coalesced)
-    val (cur0, n0St) = Iterate.loopBarrierProbe(
-      withDeg(supportsOf(e0)), Seq("sup"))
-    val (fix, _) = cascade(cur0, n0St(0)._1, (k - 2).toLong, maxIter,
-      _ => ())
+    val (cur0, n0) = supported(edges)
+    val (fix, _, _) = cascade(cur0, n0, (k - 2).toLong, maxIter,
+      keepDropped = false)
     fix.select($"a", $"b", $"sup".as("support"))
   }
 
@@ -252,7 +246,7 @@ object KTruss {
     * across levels because a level's fixpoint supports ARE valid
     * inputs to the next level's threshold (the edge set is unchanged
     * between levels; only the bar rises). Edges dropped at level k are
-    * labeled k − 1 by the cascade's drop sink; maxK-survivors label
+    * labeled k − 1 from the cascade's dropped frontiers; maxK-survivors label
     * maxK. Per-level cost beyond the shared support pass is
     * frontier-sized, not graph-sized. (Measured against the r11
     * peeling form at the m10 scale corpus: 42 s → see ROUND_NOTES r12;
@@ -265,19 +259,15 @@ object KTruss {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e0 = Iterate.loopBarrier(canonical(edges))
-    // edge count rides the barrier job (sup is never null — coalesced)
-    val (cur1, nSt) = Iterate.loopBarrierProbe(
-      withDeg(supportsOf(e0)), Seq("sup"))
-    var cur = cur1
-    var nCur = nSt(0)._1
+    var (cur, nCur) = supported(edges)
     var k = 3
     var labeled = List.empty[DataFrame]
     while (nCur > 0 && k <= maxK) {
       val lbl = (k - 1).toLong
-      val (kept, nKept) = cascade(cur, nCur, (k - 2).toLong, maxIter,
-        d => labeled =
-          d.select($"a", $"b", lit(lbl).as("trussness")) :: labeled)
+      val (kept, nKept, dropped) = cascade(cur, nCur, (k - 2).toLong,
+        maxIter, keepDropped = true)
+      labeled = dropped.map(_.select($"a", $"b", lit(lbl).as("trussness"))) :::
+        labeled
       cur = kept
       nCur = nKept
       k += 1
@@ -291,9 +281,9 @@ object KTruss {
   }
 
   /** The r11 peeling form of [[decompose]] — successive k = 3..maxK
-    * [[peel]]s with converged-support hand-off, a full wedge join per
-    * dropping round. Kept as the independent in-JVM oracle for the
-    * decremental rewrite (KTrussSpec pins equality on random graphs);
+    * [[peel]]s, a full wedge join per round. Kept as the independent
+    * in-JVM oracle for the decremental rewrite (KTrussSpec pins
+    * equality on random graphs);
     * the driver-side DuckDB oracle replays peeling too, so the shipped
     * query is double-covered. */
   private[graft] def decomposePeel(edges: DataFrame, maxK: Int = 8,
@@ -301,20 +291,15 @@ object KTruss {
     require(maxK >= 3, s"maxK must be >= 3, got $maxK")
     val spark = edges.sparkSession
     import spark.implicits._
-    var cur = Iterate.loopBarrier(canonical(edges))
-    var nCur = cur.count()
+    var (cur, nCur) = Iterate.loopBarrierCount(canonical(edges))
     var k = 3
     var labeled = List.empty[DataFrame]
-    // converged supports of the previous phase — valid for `cur`, so
-    // each phase's first round filters instead of re-wedge-joining
-    var curSup: Option[DataFrame] = None
     while (nCur > 0 && k <= maxK) {
-      val (kept, nKept) = peel(cur, nCur, k, maxIter, curSup)
+      val (kept, nKept) = peel(cur, nCur, k, maxIter)
       labeled = Iterate.loopBarrier(
         cur.join(kept, Seq("a", "b"), "left_anti")
           .select($"a", $"b", lit((k - 1).toLong).as("trussness"))) :: labeled
       cur = kept.select($"a", $"b")
-      curSup = Some(kept)
       nCur = nKept
       k += 1
     }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Synchronous label propagation (LPA, Raghavan et al. 2007) over an
   * edge list — the lightweight community-detection operator next to
@@ -22,10 +21,10 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape (the PageRank contract): each round is ONE equi-join of
   * the n-row label vector to the edge list on `src`, a map-side-combined
   * (dst, label) count, and an argmax aggregate — shuffle is O(edges)
-  * per round; the label vector is persisted per round so lineage stays
-  * flat. The argmax is `max(struct(count, −label))`, an associative
-  * reduction — no per-dst window, no whole-group shuffle beyond the
-  * count's own exchange. */
+  * per round; the label vector is carried between rounds through
+  * [[Iterate.loopBarrier]] so lineage stays flat. The argmax is
+  * `max(struct(count, −label))`, an associative reduction — no per-dst
+  * window, no whole-group shuffle beyond the count's own exchange. */
 object LabelProp {
 
   def run(edges: DataFrame, nodes: DataFrame, iterations: Int = 3): DataFrame = {
@@ -33,31 +32,25 @@ object LabelProp {
     val spark = nodes.sparkSession
     import spark.implicits._
 
-    val e = edges.select($"src", $"dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ids = nodes.select($"id").distinct()
-    var labels = ids.withColumn("lab", $"id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    var prev: DataFrame = null
-    for (_ <- 1 to iterations) {
-      val adopted = labels
-        .join(e, labels("id") === e("src"))
-        .groupBy($"dst", $"lab").agg(count(lit(1)).as("c"))
-        .groupBy($"dst")
-        .agg(max(struct($"c", (-$"lab").as("nl"))).as("m"))
-        .select($"dst", (-$"m.nl").as("newlab"))
-      val next = labels
-        .join(adopted, labels("id") === adopted("dst"), "left")
-        .select($"id", coalesce($"newlab", $"lab").as("lab"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      if (prev != null) prev.unpersist()
-      prev = labels
-      labels = next
+    Iterate.loop("LabelProp", iterations) { l =>
+      l.stage("edges")
+      val e = Iterate.loopBarrier(edges.select($"src", $"dst"))
+      l.stage("nodes")
+      var labels = Iterate.loopBarrier(
+        nodes.select($"id").distinct().withColumn("lab", $"id"))
+      for (_ <- 1 to iterations) {
+        l.round(labels, e)
+        val adopted = labels
+          .join(e, labels("id") === e("src"))
+          .groupBy($"dst", $"lab").agg(count(lit(1)).as("c"))
+          .groupBy($"dst")
+          .agg(max(struct($"c", (-$"lab").as("nl"))).as("m"))
+          .select($"dst", (-$"m.nl").as("newlab"))
+        labels = Iterate.loopBarrier(labels
+          .join(adopted, labels("id") === adopted("dst"), "left")
+          .select($"id", coalesce($"newlab", $"lab").as("lab")))
+      }
+      labels.select($"id", $"lab")
     }
-    if (prev != null) prev.unpersist()
-    e.unpersist()
-    labels.select($"id", $"lab")
   }
 }

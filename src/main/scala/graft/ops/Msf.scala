@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Minimum spanning forest by Borůvka's method — the graph-summarization
   * operator that completes the family (components = reachability, MST =
@@ -33,8 +32,9 @@ import org.apache.spark.storage.StorageLevel
   * grows, cross-component edges only SHRINK), one component-keyed
   * window top-1 (partial-ordered, no global sort), and a CC pass over
   * the CONTRACTED graph (component-count-sized, geometrically
-  * shrinking — the cheap side of the round). Forest and mapping frames are
-  * checkpoint-truncated per round (flat lineage AND flat plans). */
+  * shrinking — the cheap side of the round). Every frame a round hands
+  * on (forest, mapping, crossing edges) passes [[Iterate.loopBarrier]]
+  * (flat lineage AND flat plans, superseded rounds freed). */
 object Msf {
 
   /** @param edges canonical undirected weighted edges (a, b, w) with
@@ -45,32 +45,30 @@ object Msf {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    val e = edges.select($"a", $"b", $"w").where($"a" < $"b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select($"a".as("n")).unionByName(e.select($"b".as("n")))
-      .distinct()
-    // comp is referenced TWICE per round (both edge endpoints), so it
-    // must be a checkpoint barrier, not a plain persist — the logical
-    // plan otherwise doubles per round (see Iterate.loopBarrier)
-    var comp = Iterate.loopBarrier(nodes.select($"n", $"n".as("c")))
-    var forest = e.limit(0)
-    var rounds = 0
-    var done = false
-    while (!done) {
-      val ca = comp.select($"n".as("_na"), $"c".as("ca"))
-      val cb = comp.select($"n".as("_nb"), $"c".as("cb"))
-      val rel = e.join(ca, $"a" === $"_na").join(cb, $"b" === $"_nb")
-        .where($"ca" =!= $"cb")
-        .select($"a", $"b", $"w", $"ca", $"cb")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (rel.isEmpty) {
-        rel.unpersist()
-        done = true
-      } else {
-        if (rounds >= maxRounds)
-          throw new IllegalStateException(
-            s"Borůvka did not converge in $maxRounds rounds — " +
-              "refusing to return a partial forest")
+    Iterate.loop("Msf", maxRounds, "refusing to return a partial forest") { l =>
+      l.stage("edges")
+      val e = Iterate.loopBarrier(
+        edges.select($"a", $"b", $"w").where($"a" < $"b"))
+      val nodes = e.select($"a".as("n")).unionByName(e.select($"b".as("n")))
+        .distinct()
+      // comp is referenced TWICE per round (both edge endpoints), so it
+      // must be a checkpoint barrier, not a plain persist — the logical
+      // plan otherwise doubles per round (see Iterate)
+      var comp = Iterate.loopBarrier(nodes.select($"n", $"n".as("c")))
+      var forest = e.limit(0)
+      // the cross-component edges under the current labels, counted by
+      // the barrier job; none left IS the fixpoint
+      def crossing(comp: DataFrame): (DataFrame, Long) = {
+        val ca = comp.select($"n".as("_na"), $"c".as("ca"))
+        val cb = comp.select($"n".as("_nb"), $"c".as("cb"))
+        Iterate.loopBarrierCount(
+          e.join(ca, $"a" === $"_na").join(cb, $"b" === $"_nb")
+            .where($"ca" =!= $"cb")
+            .select($"a", $"b", $"w", $"ca", $"cb"))
+      }
+      var (rel, nRel) = crossing(comp)
+      while (nRel > 0) {
+        l.round(comp, forest, rel, e)
         val tch = rel.select($"ca".as("tc"), $"w", $"a", $"b", $"ca", $"cb")
           .unionByName(
             rel.select($"cb".as("tc"), $"w", $"a", $"b", $"ca", $"cb"))
@@ -80,13 +78,12 @@ object Msf {
         // incident-edge list collapses to partial minima on the map
         // side instead of being sorted whole in one window task — the
         // hot-component analogue of the low-cardinality-window fix
-        val sel = tch
+        val (sel, selN) = Iterate.loopBarrierCount(tch
           .groupBy($"tc")
           .agg(min(struct($"w", $"a", $"b", $"ca", $"cb")).as("_m"))
           .select($"_m.a".as("a"), $"_m.b".as("b"), $"_m.w".as("w"),
             $"_m.ca".as("ca"), $"_m.cb".as("cb"))
-          .distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .distinct())
         forest = Iterate.loopBarrier(
           forest.unionByName(sel.select($"a", $"b", $"w")))
         // merge the contracted graph: selected edges over component
@@ -99,7 +96,6 @@ object Msf {
         // operator's edge/label barrier setup (~8 driver jobs per
         // Borůvka round spent re-barriering a KB-sized frame; guide
         // §5). Above the bound, the fully distributed pass as before.
-        val selN = sel.count() // cheap: sel is persisted
         comp = Iterate.loopBarrier(
           if (selN <= graft.ext.Dedup.componentsLocalFinishEdges) {
             val mapping = Iterate.minIdRoots(sel.select($"ca", $"cb"))
@@ -116,12 +112,11 @@ object Msf {
                 comp("c") === $"_oc", "left")
               .select($"n", coalesce($"_nc", $"c").as("c"))
           })
-        sel.unpersist()
-        rel.unpersist()
-        rounds += 1
+        val (nextRel, n) = crossing(comp)
+        rel = nextRel
+        nRel = n
       }
+      forest
     }
-    e.unpersist()
-    forest
   }
 }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed PageRank over an edge list — the iterative-graph
   * operator next to connected components (`ext.Dedup.resolveComponents`),
@@ -21,9 +20,11 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape: each of the K iterations is ONE equi-join of the rank
   * vector (n rows) to the edge list on `src` + one map-side-combined
   * sum on `dst` — shuffle is O(edges) per round, the textbook Pregel
-  * cost, with the rank vector persisted between rounds so lineage stays
-  * flat (no exponential re-computation). K is a parameter, not a
-  * convergence loop: deterministic job count, no driver-side data. */
+  * cost. The rank vector is carried between rounds through
+  * [[Iterate.loopBarrier]] (flat lineage, measured stats, superseded
+  * rounds freed). K is a parameter, not a convergence loop:
+  * deterministic job count, no driver-side data. Empty node set:
+  * empty result. */
 object PageRank {
 
   def run(edges: DataFrame, nodes: DataFrame, iterations: Int = 4,
@@ -32,51 +33,37 @@ object PageRank {
     val spark = nodes.sparkSession
     import spark.implicits._
 
-    // e feeds BOTH sides of the eDeg merge below; persist it so an
-    // expensive upstream (near-dup self-join edges) materializes once,
-    // not twice, when eDeg is first computed (ADVICE r12).
-    val e = edges.select($"src", $"dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // out-degree is LOOP-INVARIANT: merge it onto the edge list ONCE
-    // (guide §2.4 — two operations keyed the same way share one
-    // exchange) instead of re-joining ranks⋈deg⋈edges every round.
-    // Per round this drops one node-scale⋈edge-scale join; the merged
-    // list is the same width class (src, dst, out_deg).
-    val eDeg = e.join(
-        e.groupBy($"src").agg(count(lit(1)).as("out_deg")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    eDeg.count()
-    e.unpersist()
-    val ids = nodes.select($"id").distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = ids.count()
-    require(n > 0, "empty node set")
-    val r0 = scale / n
-    val base = ((10000L - dampBp) * r0) / 10000L
-
-    var ranks = ids.withColumn("r", lit(r0))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ranks.count()
-    var prev: DataFrame = null
-    for (_ <- 1 to iterations) {
-      val contribs = ranks
-        .join(eDeg, ranks("id") === eDeg("src"))
-        .select($"dst", expr("r div out_deg").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("s"))
-      val next = ids
-        .join(contribs, ids("id") === contribs("dst"), "left")
-        .select($"id",
-          (lit(base) + expr(s"($dampBp * coalesce(s, 0L)) div 10000")).as("r"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      if (prev != null) prev.unpersist()
-      prev = ranks
-      ranks = next
+    Iterate.loop("PageRank", iterations) { l =>
+      // e feeds BOTH sides of the eDeg merge below, so an expensive
+      // upstream (near-dup self-join edges) materializes once, not twice.
+      // Out-degree is LOOP-INVARIANT: merge it onto the edge list ONCE
+      // (two operations keyed the same way share one exchange) instead of
+      // re-joining ranks⋈deg⋈edges every round. Per round this drops one node-scale⋈edge-scale join; the
+      // merged list is the same width class (src, dst, out_deg).
+      l.stage("edges")
+      val e = Iterate.loopBarrier(edges.select($"src", $"dst"))
+      val eDeg = Iterate.loopBarrier(e.join(
+        e.groupBy($"src").agg(count(lit(1)).as("out_deg")), "src"))
+      l.stage("nodes")
+      val (ids, n) = Iterate.loopBarrierCount(nodes.select($"id").distinct())
+      if (n == 0) ids.select($"id", lit(0L).as("rank"))
+      else {
+        val r0 = scale / n
+        val base = ((10000L - dampBp) * r0) / 10000L
+        var ranks = ids.withColumn("r", lit(r0))
+        for (_ <- 1 to iterations) {
+          l.round(ranks, eDeg, ids)
+          val contribs = ranks
+            .join(eDeg, ranks("id") === eDeg("src"))
+            .select($"dst", expr("r div out_deg").as("c"))
+            .groupBy($"dst").agg(sum($"c").as("s"))
+          ranks = Iterate.loopBarrier(ids
+            .join(contribs, ids("id") === contribs("dst"), "left")
+            .select($"id", (lit(base) +
+              expr(s"($dampBp * coalesce(s, 0L)) div 10000")).as("r")))
+        }
+        ranks.select($"id", $"r".as("rank"))
+      }
     }
-    if (prev != null) prev.unpersist()
-    eDeg.unpersist()
-    val out = ranks.select($"id", $"r".as("rank"))
-    ids.unpersist()
-    out
   }
 }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Personalized PageRank over a WEIGHTED edge list — topic-sensitive
   * relevance from a seed set (Haveliwala WWW'02): teleport mass returns
@@ -28,11 +27,12 @@ import org.apache.spark.storage.StorageLevel
   * improvement: the rank vector is FILTERED to r > 0 before the join,
   * so early rounds touch only the seed neighborhood (frontier-sized,
   * like BFS) instead of every node; mass can only exist where a path
-  * from a seed exists. Rank vector persisted per round, flat lineage,
-  * deterministic job count. Output keeps only r > 0 rows (the
+  * from a seed exists. The rank vector is carried between rounds
+  * through [[Iterate.loopBarrier]] (flat lineage, superseded rounds
+  * freed), deterministic job count. Output keeps only r > 0 rows (the
   * reachable-from-seeds set; an unreachable node's rank is identically
   * zero, and at 100-TB graph sizes materializing those rows is pure
-  * waste). */
+  * waste). Empty seed set: empty result. */
 object PersonalizedPageRank {
 
   /** @param edges (src, dst, w) directed weighted edges, w > 0 integer */
@@ -42,52 +42,41 @@ object PersonalizedPageRank {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // read every iteration — persist so an expensive upstream (the
-    // near-dup self-join) materializes once instead of once per round.
-    // The out-weight total is LOOP-INVARIANT: merged onto the edge list
-    // ONCE (guide §2.4) instead of re-joining live⋈wtot⋈edges per round.
-    // e itself feeds BOTH sides of the merge, so persist it too and
-    // free it once the merged list is materialized (ADVICE r12).
-    val e = edges.select($"src", $"dst", $"w").where($"w" > 0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eW = e.join(
-        e.groupBy($"src").agg(sum($"w").as("wtot")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    eW.count()
-    e.unpersist()
-    val s = seeds.select(seeds.columns.head).toDF("id").distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nS = s.count()
-    require(nS > 0, "empty seed set")
-    val r0 = scale / nS
-    val base = ((10000L - dampBp) * r0) / 10000L
-
-    var ranks = s.select($"id", lit(r0).as("r"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ranks.count()
-    var prev: DataFrame = null
-    for (_ <- 1 to iterations) {
-      val live = ranks.where($"r" > 0)
-      val contribs = live
-        .join(eW, live("id") === eW("src"))
-        .select($"dst", expr("(r * w) div wtot").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("cs"))
-      val next = contribs.select($"dst".as("id"), $"cs")
-        .join(s.withColumn("_seed", lit(1)), Seq("id"), "full_outer")
-        .select($"id",
-          (when($"_seed".isNotNull, lit(base)).otherwise(lit(0L)) +
-            expr(s"($dampBp * coalesce(cs, 0L)) div 10000")).as("r"))
-        .where($"r" > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      if (prev != null) prev.unpersist()
-      prev = ranks
-      ranks = next
+    Iterate.loop("PersonalizedPageRank", iterations) { l =>
+      // read every iteration — a barrier, so an expensive upstream (the
+      // near-dup self-join) materializes once instead of once per round.
+      // The out-weight total is LOOP-INVARIANT: merged onto the edge list
+      // ONCE instead of re-joining live⋈wtot⋈edges per round. e itself
+      // feeds BOTH sides of the merge.
+      l.stage("edges")
+      val e = Iterate.loopBarrier(
+        edges.select($"src", $"dst", $"w").where($"w" > 0))
+      val eW = Iterate.loopBarrier(e.join(
+        e.groupBy($"src").agg(sum($"w").as("wtot")), "src"))
+      l.stage("seeds")
+      val (s, nS) = Iterate.loopBarrierCount(
+        seeds.select(seeds.columns.head).toDF("id").distinct())
+      if (nS == 0) s.select($"id", lit(0L).as("rank"))
+      else {
+        val r0 = scale / nS
+        val base = ((10000L - dampBp) * r0) / 10000L
+        var ranks = s.select($"id", lit(r0).as("r"))
+        for (_ <- 1 to iterations) {
+          l.round(ranks, eW, s)
+          val live = ranks.where($"r" > 0)
+          val contribs = live
+            .join(eW, live("id") === eW("src"))
+            .select($"dst", expr("(r * w) div wtot").as("c"))
+            .groupBy($"dst").agg(sum($"c").as("cs"))
+          ranks = Iterate.loopBarrier(contribs.select($"dst".as("id"), $"cs")
+            .join(s.withColumn("_seed", lit(1)), Seq("id"), "full_outer")
+            .select($"id",
+              (when($"_seed".isNotNull, lit(base)).otherwise(lit(0L)) +
+                expr(s"($dampBp * coalesce(cs, 0L)) div 10000")).as("r"))
+            .where($"r" > 0))
+        }
+        ranks.select($"id", $"r".as("rank"))
+      }
     }
-    if (prev != null) prev.unpersist()
-    eW.unpersist()
-    val out = ranks.select($"id", $"r".as("rank"))
-    s.unpersist()
-    out
   }
 }

@@ -33,15 +33,12 @@ object Sssp {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // every stage this loop submits carries the round that caused it
-    // (Spark otherwise names it after the thread that ran the job)
-    val sc = spark.sparkContext
-    try {
+    Iterate.loop("Sssp", maxRounds, "refusing to return inflated distances") { l =>
       // loop barriers, not plain persists: each round references `dist`
       // TWICE (union + join), so without plan truncation the logical tree
       // doubles per round and the driver wedges in analysis at ~10 rounds
-      // even with every byte cached (see Iterate.loopBarrier)
-      sc.setCallSite("Sssp.edges")
+      // even with every byte cached (see Iterate)
+      l.stage("edges")
       val e = Iterate.loopBarrier(
         edges.select($"src", $"dst", $"w").where($"w" > 0))
       // the (count, Σd) convergence signature rides the barrier's own
@@ -51,30 +48,23 @@ object Sssp {
       // of total task time at sf0.1; guide §5 driver overhead). `d` is
       // never null, so (count, sum) here ≡ the former
       // agg(count(lit(1)), coalesce(sum(d), 0)) probe exactly.
-      sc.setCallSite("Sssp.seeds")
+      l.stage("seeds")
       var (dist, sig0) = Iterate.loopBarrierProbe(
         seeds.select(seeds.columns.head).toDF("node").distinct()
           .select($"node", lit(0L).as("d")), Seq("d"))
       var sig = sig0(0)
-      var round = 0
       var converged = false
       while (!converged) {
-        if (round >= maxRounds)
-          throw new IllegalStateException(
-            s"Bellman-Ford did not converge in $maxRounds rounds — " +
-              "refusing to return inflated distances")
-        sc.setCallSite(s"Sssp.round $round")
+        l.round(dist, e)
         val cand = dist.join(e, dist("node") === e("src"))
           .select($"dst".as("node"), ($"d" + $"w").as("d"))
         val (next, st) = Iterate.loopBarrierProbe(dist.unionByName(cand)
           .groupBy($"node").agg(min($"d").as("d")), Seq("d"))
-        val nextSig = st(0)
         dist = next
-        converged = nextSig == sig
-        sig = nextSig
-        round += 1
+        converged = st(0) == sig
+        sig = st(0)
       }
       dist.select($"node", $"d".as("dist"))
-    } finally sc.clearCallSite()
+    }
   }
 }

@@ -891,61 +891,60 @@ object StreamingIngest {
     * replay anchors 6 at min(3,5)=3). Since kept is monotone and every
     * smaller id is final by convergence, min(kept smaller neighbor) at
     * convergence IS the literal sequential-greedy anchor. Frames are
-    * batch-sized; each round is loopBarrier-truncated ([[graft.ops.Iterate]]). */
+    * batch-sized; each round hands its sets on through
+    * [[graft.ops.Iterate.loopBarrier]]. */
   private[graft] def sequentialGreedy(idxRejected: DataFrame,
       edges: DataFrame, ids: DataFrame, maxRounds: Int = 60): DataFrame = {
     import graft.ops.Iterate
-    val idxRej = Iterate.loopBarrier(
-      idxRejected.select(col("_nid"), col("dup_of")))
-    // the loop only needs the rejected-ID SET; in-batch anchors wait
-    // for the final kept set
-    var rejectedIds = idxRej.select(col("_nid"))
-    var kept = ids.select(col("_nid")).limit(0)
-    var undecided = Iterate.loopBarrier(
-      ids.select(col("_nid")).distinct()
-        .join(rejectedIds, Seq("_nid"), "left_anti"))
-    val e = Iterate.loopBarrier(
-      edges.select(col("_oid"), col("_nid")).distinct())
-    var nUndecided = undecided.count()
-    var round = 0
-    while (nUndecided > 0) {
-      round += 1
-      if (round > maxRounds) throw new IllegalStateException(
-        s"sequentialGreedy did not resolve in $maxRounds rounds " +
-          s"($nUndecided ids undecided) — raise maxRounds")
-      // edges whose smaller endpoint is rejected can never reject
-      val live = Iterate.loopBarrier(
-        e.join(rejectedIds.select(col("_nid").as("_oid")), Seq("_oid"), "left_anti"))
-      val blocked = live.select(col("_nid")).distinct()
-      val newKept = Iterate.loopBarrier(
-        undecided.join(blocked, Seq("_nid"), "left_anti"))
-      kept = Iterate.loopBarrier(kept.unionByName(newKept))
-      val newRej = Iterate.loopBarrier(
-        live.join(kept.select(col("_nid").as("_oid")), Seq("_oid"))
-          .join(undecided.join(newKept, Seq("_nid"), "left_anti"), Seq("_nid"))
-          .select(col("_nid")).distinct())
-      rejectedIds = Iterate.loopBarrier(rejectedIds.unionByName(newRej))
-      undecided = Iterate.loopBarrier(
-        undecided.join(newKept, Seq("_nid"), "left_anti")
-          .join(newRej, Seq("_nid"), "left_anti"))
-      val n2 = undecided.count()
-      // progress is guaranteed (the min undecided id always resolves);
-      // the guard keeps a logic regression from spinning silently
-      if (n2 >= nUndecided) throw new IllegalStateException(
-        s"sequentialGreedy made no progress at round $round ($n2 undecided)")
-      nUndecided = n2
+    Iterate.loop("sequentialGreedy", maxRounds, "raise maxRounds") { l =>
+      l.stage("setup")
+      val idxRej = Iterate.loopBarrier(
+        idxRejected.select(col("_nid"), col("dup_of")))
+      // the loop only needs the rejected-ID SET; in-batch anchors wait
+      // for the final kept set
+      var rejectedIds = idxRej.select(col("_nid"))
+      var kept = ids.select(col("_nid")).limit(0)
+      var (undecided, nUndecided) = Iterate.loopBarrierCount(
+        ids.select(col("_nid")).distinct()
+          .join(rejectedIds, Seq("_nid"), "left_anti"))
+      val e = Iterate.loopBarrier(
+        edges.select(col("_oid"), col("_nid")).distinct())
+      while (nUndecided > 0) {
+        val round = l.round(undecided, kept, rejectedIds, e, idxRej) + 1
+        // edges whose smaller endpoint is rejected can never reject
+        val live = Iterate.loopBarrier(
+          e.join(rejectedIds.select(col("_nid").as("_oid")), Seq("_oid"), "left_anti"))
+        val blocked = live.select(col("_nid")).distinct()
+        val newKept = Iterate.loopBarrier(
+          undecided.join(blocked, Seq("_nid"), "left_anti"))
+        kept = Iterate.loopBarrier(kept.unionByName(newKept))
+        val newRej = Iterate.loopBarrier(
+          live.join(kept.select(col("_nid").as("_oid")), Seq("_oid"))
+            .join(undecided.join(newKept, Seq("_nid"), "left_anti"), Seq("_nid"))
+            .select(col("_nid")).distinct())
+        rejectedIds = Iterate.loopBarrier(rejectedIds.unionByName(newRej))
+        val (next, n2) = Iterate.loopBarrierCount(
+          undecided.join(newKept, Seq("_nid"), "left_anti")
+            .join(newRej, Seq("_nid"), "left_anti"))
+        // progress is guaranteed (the min undecided id always resolves);
+        // the guard keeps a logic regression from spinning silently
+        if (n2 >= nUndecided) throw new IllegalStateException(
+          s"sequentialGreedy made no progress at round $round ($n2 undecided)")
+        undecided = next
+        nUndecided = n2
+      }
+      // anchor assignment vs the FINAL kept set (kept ids are never
+      // revoked, so every batch-rejected id has >=1 kept smaller
+      // neighbor and its min is the literal replay's anchor);
+      // idx-rejected anchors stand as given
+      val batchRej = rejectedIds
+        .join(idxRej.select(col("_nid")), Seq("_nid"), "left_anti")
+      val anchored = batchRej
+        .join(e, Seq("_nid"))
+        .join(kept.select(col("_nid").as("_oid")), Seq("_oid"))
+        .groupBy(col("_nid")).agg(min(col("_oid")).as("dup_of"))
+      idxRej.unionByName(anchored)
     }
-    // anchor assignment vs the FINAL kept set (kept ids are never
-    // revoked, so every batch-rejected id has >=1 kept smaller
-    // neighbor and its min is the literal replay's anchor);
-    // idx-rejected anchors stand as given
-    val batchRej = rejectedIds
-      .join(idxRej.select(col("_nid")), Seq("_nid"), "left_anti")
-    val anchored = batchRej
-      .join(e, Seq("_nid"))
-      .join(kept.select(col("_nid").as("_oid")), Seq("_oid"))
-      .groupBy(col("_nid")).agg(min(col("_oid")).as("dup_of"))
-    idxRej.unionByName(anchored)
   }
 
 

@@ -14,8 +14,8 @@ object GraftSqlShim {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Eager local checkpoint with MEASURED statistics — the loop barrier
-    * for iterative relational operators (Iterate.loopBarrier,
-    * Dedup.loopBarrier). Replaces the old
+    * for iterative relational operators (graft.ops.Iterate.loopBarrier,
+    * the only caller). Replaces the old
     * `createDataFrame(ck.rdd, ck.schema)` rebuild, which had two costs
     * measured in the r12 optimization round:
     *
@@ -33,7 +33,7 @@ object GraftSqlShim {
     * This keeps the checkpoint's own `LogicalRDD` (unsafe rows end to
     * end, physical partitioning preserved) and swaps its origin stats —
     * whose carried-over derived `sizeInBytes` doubles in BIT LENGTH per
-    * join round (the BigInteger driver hazard resolveComponents
+    * join round (the BigInteger driver hazard graft.ops.Iterate
     * documents) — for the checkpoint's measured block sizes: exact,
     * bounded, and scale-adaptive. A frame measured under the broadcast
     * threshold broadcasts (no per-round shuffle of the big side); a
@@ -45,6 +45,13 @@ object GraftSqlShim {
     val ck = ds.localCheckpoint(true).asInstanceOf[classic.Dataset[Row]]
     swapMeasuredStats(ck)
   }
+
+  /** Frees a superseded loop barrier's checkpoint blocks. Direct rather
+    * than `RDD.unpersist`, which logs a warning for every locally
+    * checkpointed RDD that its lineage cannot be recomputed — exactly
+    * why the loop let go of it. */
+  def freeBarrier(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** Rebuild a just-checkpointed Dataset's LogicalRDD leaf with the
     * checkpoint's measured block sizes as statistics (the second half

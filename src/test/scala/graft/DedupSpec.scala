@@ -319,6 +319,11 @@ class DedupSpec extends SparkSpec {
       Dedup.resolveComponents(docs, star, maxIter = 1, localFinishEdges = 0)
     }
     assert(e.getMessage.contains("needed more than"))
+    e match {
+      case nc: graft.ops.Iterate.NotConverged =>
+        assert(nc.op === "resolveComponents" && nc.limit === 1)
+      case other => fail(s"expected Iterate.NotConverged, got $other")
+    }
     // and one more round is all it takes
     val ok = Dedup.resolveComponents(docs, star, maxIter = 2,
       localFinishEdges = 0).collect()

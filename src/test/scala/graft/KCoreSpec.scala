@@ -59,5 +59,12 @@ class KCoreSpec extends SparkSpec {
     val e = intercept[IllegalStateException](
       KCore.run(path, k = 2, maxIter = 1, localFinishEdges = 0L).count())
     assert(e.getMessage.contains("did not converge"))
+    e match {
+      case nc: graft.ops.Iterate.NotConverged =>
+        assert(nc.op === "KCore" && nc.limit === 1)
+        // the last probe is the edge count still above the bound
+        assert(nc.lastProbe.nonEmpty && nc.lastProbe.head._1 > 0L)
+      case other => fail(s"expected Iterate.NotConverged, got $other")
+    }
   }
 }

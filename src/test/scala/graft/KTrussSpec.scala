@@ -116,6 +116,11 @@ class KTrussSpec extends SparkSpec {
       KTruss.decompose(sym(house), maxIter = 1)
     }
     assert(e.getMessage.contains("did not converge"))
+    e match {
+      case nc: graft.ops.Iterate.NotConverged =>
+        assert(nc.op === "KTruss" && nc.limit === 1)
+      case other => fail(s"expected Iterate.NotConverged, got $other")
+    }
   }
 
   test("non-convergence guard throws instead of returning a superset") {
@@ -123,6 +128,11 @@ class KTrussSpec extends SparkSpec {
       KTruss.run(sym(house), k = 3, maxIter = 1)
     }
     assert(e.getMessage.contains("did not converge"))
+    e match {
+      case nc: graft.ops.Iterate.NotConverged =>
+        assert(nc.op === "KTruss" && nc.limit === 1)
+      case other => fail(s"expected Iterate.NotConverged, got $other")
+    }
   }
 
   test("peel action count: one barrier + one count per round, nothing recounted") {

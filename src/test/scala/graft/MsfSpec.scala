@@ -49,6 +49,13 @@ class MsfSpec extends SparkSpec {
     assert(run(g) === g.toSet)
     val e = intercept[IllegalStateException](run(g, maxRounds = 1))
     assert(e.getMessage.contains("partial forest"))
+    e match {
+      case nc: graft.ops.Iterate.NotConverged =>
+        assert(nc.op === "Msf" && nc.limit === 1)
+        // the last probe counts the cross-component edges still left
+        assert(nc.lastProbe.nonEmpty && nc.lastProbe.head._1 > 0L)
+      case other => fail(s"expected Iterate.NotConverged, got $other")
+    }
   }
 
   test("randomized parity with sequential Kruskal under the same order") {

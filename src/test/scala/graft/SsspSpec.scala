@@ -32,6 +32,13 @@ class SsspSpec extends SparkSpec {
     assert(run(chain, Seq(1L)) === (1L to 7L).map(i => i -> (i - 1)).toMap)
     val e = intercept[IllegalStateException](run(chain, Seq(1L), maxRounds = 2))
     assert(e.getMessage.contains("inflated"))
+    e match {
+      case nc: graft.ops.Iterate.NotConverged =>
+        assert(nc.op === "Sssp" && nc.limit === 2)
+        // (reached nodes, Σd) after round 2: nodes 1..3 at 0 + 1 + 2
+        assert(nc.lastProbe === Seq((3L, 3L)))
+      case other => fail(s"expected Iterate.NotConverged, got $other")
+    }
   }
 
   test("randomized parity with sequential Dijkstra") {
