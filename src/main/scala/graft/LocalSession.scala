@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared SparkSession builder for the single-JVM local[N] entry points
-  * (Bench / Verify / JudgeProbe).
+  * (Bench / Verify).
   *
   * Two hardenings beyond the obvious settings, both learned from a bench
   * run that died mid-flight at sf0.1:

@@ -659,16 +659,17 @@ object Sampling {
   def rakeWeights(rows: DataFrame, dimA: String = "lang",
       dimB: String = "source", rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val cells = rows
-      .select(coalesce(col(dimA).cast("string"), lit("∅")).as("a"),
-        coalesce(col(dimB).cast("string"), lit("∅")).as("b"))
-      .groupBy($"a", $"b").agg(count(lit(1)).as("c"))
-      .persistScoped
-    val tot = cells.agg(sum($"c").as("_n"),
-        countDistinct($"a").as("_na"), countDistinct($"b").as("_nb"))
-      .select(expr("(_n * 10000) div _na").as("_ta"),
-        expr("(_n * 10000) div _nb").as("_tb"))
     graft.ops.Iterate.loop("rakeWeights", rounds) { l =>
+      // the marginal totals AND the first weights read the cells
+      l.stage("cells")
+      val cells = graft.ops.Iterate.loopBarrier(rows
+        .select(coalesce(col(dimA).cast("string"), lit("∅")).as("a"),
+          coalesce(col(dimB).cast("string"), lit("∅")).as("b"))
+        .groupBy($"a", $"b").agg(count(lit(1)).as("c")))
+      val tot = cells.agg(sum($"c").as("_n"),
+          countDistinct($"a").as("_na"), countDistinct($"b").as("_nb"))
+        .select(expr("(_n * 10000) div _na").as("_ta"),
+          expr("(_n * 10000) div _nb").as("_tb"))
       var w = cells.crossJoin(broadcast(tot))
         .select($"a", $"b", $"c", $"_ta", $"_tb", ($"c" * 10000L).as("w"))
       for (_ <- 1 to rounds) {
@@ -834,35 +835,43 @@ object Sampling {
     * into a TakeOrdered(1); selected vectors are a k-bounded driver
     * materialization. k passes over 100 TB is the honest cost of the
     * sequential greedy; the batched variants (pick several per round)
-    * trade approximation quality for passes and drop in here unchanged. */
+    * trade approximation quality for passes and drop in here unchanged.
+    * The scanned corpus is one [[graft.ops.Iterate]] loop barrier, freed
+    * on return (the coreset is built on the driver). An empty corpus
+    * gives the empty coreset; a non-empty one with fewer than k
+    * distinct vectors throws. */
   def kCenterCoreset(embeddings: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && k <= 32, s"k must be in [1, 32], got $k")
     val spark = embeddings.sparkSession
     import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
     import Similarity.dot
-    val e = embeddings
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .where(col("v").isNotNull)
-      .persistScoped // scanned once per round
-    val seed = e.orderBy($"id").limit(1).collect()
-    require(seed.nonEmpty, "kCenterCoreset needs a non-empty corpus")
-    var sel = Vector((seed(0).getLong(0), seed(0).getSeq[Float](1), 0L))
-    while (sel.size < k) {
-      val d2s = sel.map { case (_, vec, _) =>
-        val lv = typedLit(vec)
-        dot($"v", $"v") - lit(2.0) * dot($"v", lv) + dot(lv, lv)
+    val sel = graft.ops.Iterate.loop("kCenterCoreset", k - 1) { l =>
+      l.stage("corpus")
+      val e = graft.ops.Iterate.loopBarrier(embeddings
+        .select(col(idCol).as("id"), col(vecCol).as("v"))
+        .where(col("v").isNotNull))
+      // an empty corpus selects nothing: the empty coreset
+      var sel = e.orderBy($"id").limit(1).collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1), 0L)).toVector
+      while (sel.nonEmpty && sel.size < k) {
+        l.round(e)
+        val d2s = sel.map { case (_, vec, _) =>
+          val lv = typedLit(vec)
+          dot($"v", $"v") - lit(2.0) * dot($"v", lv) + dot(lv, lv)
+        }
+        val minD2 = if (d2s.size == 1) d2s.head else least(d2s: _*)
+        val top = e.where(!$"id".isin(sel.map(_._1): _*))
+          .select($"id", $"v", minD2.as("_d2"))
+          .orderBy($"_d2".desc, $"id".asc)
+          .limit(1).collect()
+        require(top.nonEmpty,
+          s"corpus has fewer than k=$k distinct vectors (got ${sel.size})")
+        val r = top(0)
+        sel = sel :+ ((r.getLong(0), r.getSeq[Float](1),
+          math.floor(r.getDouble(2) * 1000000.0).toLong))
       }
-      val minD2 = if (d2s.size == 1) d2s.head else least(d2s: _*)
-      val top = e.where(!$"id".isin(sel.map(_._1): _*))
-        .select($"id", $"v", minD2.as("_d2"))
-        .orderBy($"_d2".desc, $"id".asc)
-        .limit(1).collect()
-      require(top.nonEmpty,
-        s"corpus has fewer than k=$k distinct vectors (got ${sel.size})")
-      val r = top(0)
-      sel = sel :+ ((r.getLong(0), r.getSeq[Float](1),
-        math.floor(r.getDouble(2) * 1000000.0).toLong))
+      sel
     }
     sel.zipWithIndex
       .map { case ((id, _, d2q6), i) => ((i + 1).toLong, id, d2q6) }

@@ -82,22 +82,24 @@ object Similarity {
       iters: Int): (DataFrame, DataFrame) = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = embeddings.sparkSession
-    val q = embeddings.where(dot($"embedding", $"embedding") > 0)
-      .select(transform($"embedding",
-        x => floor(x * 1000).cast("long")).as("_v"))
-      .persistScoped // read by the sums pass AND the product pass
-    val sums = q.agg(count(lit(1)).as("n"),
-      array((0 until dim).map(i => sum(element_at($"_v", i + 1))): _*).as("s"))
-    val pr = q.select(posexplode($"_v").as(Seq("i0", "xi")), $"_v")
-      .select($"i0", $"xi", posexplode($"_v").as(Seq("j0", "xj")))
-      .groupBy($"i0", $"j0").agg(sum($"xi" * $"xj").as("p"))
-    val cov = pr.crossJoin(broadcast(sums))
-      .select(($"i0" + 1).cast("long").as("i"), ($"j0" + 1).cast("long").as("j"),
-        expr("""(n * p - element_at(s, cast(i0 + 1 as int))
-                       * element_at(s, cast(j0 + 1 as int))) div 1048576""")
-          .as("c"))
     graft.ops.Iterate.loop("powerIterate", iters) { l =>
-      val covB = graft.ops.Iterate.loopBarrier(cov) // read every round
+      // the sums pass AND the product pass read q
+      l.stage("vectors")
+      val q = graft.ops.Iterate.loopBarrier(
+        embeddings.where(dot($"embedding", $"embedding") > 0)
+          .select(transform($"embedding",
+            x => floor(x * 1000).cast("long")).as("_v")))
+      val sums = q.agg(count(lit(1)).as("n"),
+        array((0 until dim).map(i => sum(element_at($"_v", i + 1))): _*).as("s"))
+      val pr = q.select(posexplode($"_v").as(Seq("i0", "xi")), $"_v")
+        .select($"i0", $"xi", posexplode($"_v").as(Seq("j0", "xj")))
+        .groupBy($"i0", $"j0").agg(sum($"xi" * $"xj").as("p"))
+      l.stage("comoments")
+      val covB = graft.ops.Iterate.loopBarrier(pr.crossJoin(broadcast(sums))
+        .select(($"i0" + 1).cast("long").as("i"), ($"j0" + 1).cast("long").as("j"),
+          expr("""(n * p - element_at(s, cast(i0 + 1 as int))
+                         * element_at(s, cast(j0 + 1 as int))) div 1048576""")
+            .as("c"))) // read every round
       var v = spark.range(1, dim + 1)
         .select($"id".as("dim"), lit(10000L).as("x"))
       for (_ <- 1 to iters) {
@@ -395,12 +397,13 @@ object Similarity {
     *    splitmix hash of (id, round) as the uniform draw — so the sample
     *    is a pure function of the data, no RNG state. One job per round
     *    (a mapPartitions that both samples and partial-sums the next
-    *    round's Σcost), one fused count+first-seed job, one candidate
-    *    weighting job, then a driver-local weighted farthest-first
-    *    reduction of the ≤ rounds·oversample+1 candidates down to k.
-    *    TOTAL: `rounds + 2` corpus scans for ANY nCells — replacing the
-    *    previous per-seed driver loop whose O(nCells) full scans were
-    *    the one remaining scale-killer shape (4096 cells = 4096 scans).
+    *    round's Σcost), one candidate weighting job, then a driver-local
+    *    weighted farthest-first reduction of the ≤ rounds·oversample+1
+    *    candidates down to k. TOTAL: `rounds + 3` jobs for ANY nCells
+    *    (with the counting barrier and the lowest-id lookup below) —
+    *    replacing the previous per-seed driver loop whose O(nCells)
+    *    full scans were the one remaining scale-killer shape (4096
+    *    cells = 4096 scans).
     *  - `"farthest"`: exact Gonzalez k-center — repeatedly add the
     *    corpus vector with the smallest maximum cosine against the
     *    chosen set (ties to the lowest id). One scan PER SEED, so only
@@ -417,6 +420,12 @@ object Similarity {
     * argmax-dot stays ≡ cosine ranking; a cell that comes back empty (or
     * with a zero mean) keeps its previous centroid.
     *
+    * The non-zero corpus vectors are one [[graft.ops.Iterate]] loop
+    * barrier — its job also counts them — and every seeding and Lloyd
+    * round reads it, named `ivfCentroidsKmeans.round N`. The centroids
+    * are built on the driver, so the barrier is freed on return. A
+    * corpus with no non-zero vector seeds no cell: the result is empty.
+    *
     * Both seedings are exactly deterministic; the Lloyd means sum
     * doubles in partition order, so refined centroids are deterministic
     * only up to floating-point ordering. The contract here is recall,
@@ -431,34 +440,44 @@ object Similarity {
     require(seeding == "parallel" || seeding == "farthest",
       s"seeding must be 'parallel' or 'farthest', got '$seeding'")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val vecs = corpus
-      .where(dot(col(vecCol), col(vecCol)) > 0)
-      .select(col(idCol).cast("long").as("_id"), col(vecCol).as("_v"))
-      .persistScoped
-    var cents =
-      if (seeding == "parallel")
-        parallelSeeds(vecs, nCells, rounds,
-          if (oversample > 0) oversample else math.max(2 * nCells, 8))
-      else farthestFirstSeeds(vecs, nCells)
-    // Lloyd refinement: narrow assignment, one O(nCells·dim) aggregate
-    val dim = cents.head.length
-    for (_ <- 0 until iters) {
-      val assigned = vecs.select(ivfCell($"_v", cents.toArray).as("_cell"), $"_v")
-      val sums = (0 until dim).map(i =>
-        sum(element_at($"_v", i + 1).cast("double")).as(s"_s$i"))
-      val rows = assigned.groupBy($"_cell")
-        .agg(count(lit(1L)).as("_n"), sums: _*)
-        .collect()
-      val byCell = rows.map(r => r.getInt(0) -> r).toMap
-      cents = cents.indices.map { c =>
-        byCell.get(c).map { r =>
-          val n = r.getLong(1).toDouble
-          val mean = Array.tabulate(dim)(i => r.getDouble(2 + i) / n)
-          if (mean.exists(_ != 0.0)) normalized(mean) else cents(c)
-        }.getOrElse(cents(c))
-      }.toVector
+    val seedRounds = if (seeding == "parallel") rounds else nCells - 1
+    graft.ops.Iterate.loop("ivfCentroidsKmeans", seedRounds + iters) { l =>
+      l.stage("corpus")
+      val (vecs, n) = graft.ops.Iterate.loopBarrierCount(corpus
+        .where(dot(col(vecCol), col(vecCol)) > 0)
+        .select(col(idCol).cast("long").as("_id"), col(vecCol).as("_v")))
+      // no non-zero vector: no cell can be seeded, so the index is empty
+      val k = math.min(nCells.toLong, n).toInt
+      if (k == 0) Array.empty[Array[Double]]
+      else {
+        val first = vecs.orderBy($"_id").limit(1).collect()(0)
+        var cents =
+          if (seeding == "parallel")
+            parallelSeeds(l, vecs, n, k, first, rounds,
+              if (oversample > 0) oversample else math.max(2 * nCells, 8))
+          else farthestFirstSeeds(l, vecs, k, first)
+        // Lloyd refinement: narrow assignment, one O(nCells·dim) aggregate
+        val dim = cents.head.length
+        for (_ <- 0 until iters) {
+          l.round(vecs)
+          val assigned = vecs.select(ivfCell($"_v", cents.toArray).as("_cell"), $"_v")
+          val sums = (0 until dim).map(i =>
+            sum(element_at($"_v", i + 1).cast("double")).as(s"_s$i"))
+          val rows = assigned.groupBy($"_cell")
+            .agg(count(lit(1L)).as("_n"), sums: _*)
+            .collect()
+          val byCell = rows.map(r => r.getInt(0) -> r).toMap
+          cents = cents.indices.map { c =>
+            byCell.get(c).map { r =>
+              val members = r.getLong(1).toDouble
+              val mean = Array.tabulate(dim)(i => r.getDouble(2 + i) / members)
+              if (mean.exists(_ != 0.0)) normalized(mean) else cents(c)
+            }.getOrElse(cents(c))
+          }.toVector
+        }
+        cents.toArray
+      }
     }
-    cents.toArray
   }
 
   private def asDoubles(r: org.apache.spark.sql.Row, field: String = "_v"): Array[Double] =
@@ -484,15 +503,13 @@ object Similarity {
     (z >>> 11).toDouble / (1L << 53).toDouble
   }
 
-  /** Gonzalez farthest-first: one scan per seed — small-k / oracle path. */
-  private def farthestFirstSeeds(vecs: DataFrame, nCells: Int): Vector[Array[Double]] = {
-    // the count also materializes the persist barrier before the
-    // per-seed scans fan out over it
-    val k = math.min(nCells.toLong, vecs.count()).toInt
-    require(k >= 1, "k-means seeding needs at least one non-zero vector")
-    val first = vecs.orderBy($"_id").limit(1).collect()(0)
+  /** Gonzalez farthest-first from the lowest-id vector `first`: one
+    * scan per seed — small-k / oracle path. */
+  private def farthestFirstSeeds(l: graft.ops.Iterate.Loop, vecs: DataFrame,
+      k: Int, first: org.apache.spark.sql.Row): Vector[Array[Double]] = {
     var cents = Vector(normalized(asDoubles(first)))
     while (cents.size < k) {
+      l.round(vecs)
       val maxCos = array_max(array(cents.map(c =>
         dot($"_v", array(c.map(lit): _*)) / norm($"_v")): _*))
       val far = vecs.select($"_id", $"_v", maxCos.as("_mx"))
@@ -502,12 +519,13 @@ object Similarity {
     cents
   }
 
-  /** k-means‖-style oversampled seeding: `rounds + 2` scans total,
-    * independent of k. Candidate maths run per-partition in the closure
+  /** k-means‖-style oversampled seeding from the lowest-id vector
+    * `first`: `rounds + 1` scans of `vecs`, independent of k. Candidate maths run per-partition in the closure
     * (not as inlined-literal Columns) deliberately: the candidate set is
     * a few hundred × dim doubles, and inlining that as expression-tree
     * literals is the plan-string blowup [[ivfCell]]'s doc warns about. */
-  private def parallelSeeds(vecs: DataFrame, nCells: Int, rounds: Int,
+  private def parallelSeeds(l: graft.ops.Iterate.Loop, vecs: DataFrame,
+      n: Long, k: Int, first: org.apache.spark.sql.Row, rounds: Int,
       oversample: Int): Vector[Array[Double]] = {
     def maxCos(v: Array[Double], cands: Seq[Array[Double]]): Double = {
       val nv = math.sqrt(v.map(x => x * x).sum)
@@ -520,32 +538,15 @@ object Similarity {
       }
       best
     }
-    // scan 1 (fused): corpus size + lowest-id vector, one mapPartitions
-    // job that also materializes the persist barrier
-    val firsts = vecs.toDF().mapPartitions { it =>
-      var n = 0L
-      var bestId = Long.MaxValue
-      var bestVec: Array[Double] = null
-      it.foreach { r =>
-        n += 1
-        val id = r.getLong(0)
-        if (id < bestId) { bestId = id; bestVec = asDoubles(r) }
-      }
-      if (n == 0) Iterator.empty
-      else Iterator.single((n, bestId, bestVec))
-    }(org.apache.spark.sql.Encoders.kryo[(Long, Long, Array[Double])]).collect()
-    require(firsts.nonEmpty, "k-means seeding needs at least one non-zero vector")
-    val n = firsts.map(_._1).sum
-    val k = math.min(nCells.toLong, n).toInt
-    val seed0 = firsts.minBy(_._2)
-    var candIds = Vector(seed0._2)
-    var cands = Vector(normalized(seed0._3))
+    var candIds = Vector(first.getLong(0))
+    var cands = Vector(normalized(asDoubles(first)))
     // per round: sample with p = min(1, oversample·cost/Σcost_prev) AND
     // partial-sum this round's Σcost in the same pass. Round 1 has no
     // Σcost yet; 2n is a sound upper bound (spherical cost ≤ 2/point) —
     // it only makes the first round's sample conservative.
     var phi = 2.0 * n
     for (r <- 1 to rounds) {
+      l.round(vecs)
       val candsNow = cands // stable closure capture
       val phiNow = phi
       val sampled = vecs.toDF().mapPartitions { it =>
@@ -569,6 +570,7 @@ object Similarity {
       cands ++= fresh.map(h => normalized(h._2))
     }
     // weighting scan: how many corpus points each candidate owns
+    l.stage("weights")
     val candsFinal = cands
     val weights = vecs.toDF().mapPartitions { it =>
       val w = new Array[Long](candsFinal.size)
@@ -628,10 +630,12 @@ object Similarity {
     * plan-string rendering the BOTTLENECK of the whole benchmark (the
     * driver sat at 100% CPU inside explainString). Literal-heavy
     * expressions must stay linear in the literal count. */
-  def ivfCell(vec: Column, cents: Array[Array[Double]]): Column = {
-    val scores = array(cents.map(c => dot(vec, array(c.map(lit): _*))): _*)
-    (array_position(scores, array_max(scores)) - 1).cast("int")
-  }
+  def ivfCell(vec: Column, cents: Array[Array[Double]]): Column =
+    if (cents.isEmpty) lit(null).cast("int") // an empty index has no cell
+    else {
+      val scores = array(cents.map(c => dot(vec, array(c.map(lit): _*))): _*)
+      (array_position(scores, array_max(scores)) - 1).cast("int")
+    }
 
   /** Embedding-cosine near-dup pairs (blocked by label to bound the
     * candidate set; at scale the block key would be an LSH bucket). */

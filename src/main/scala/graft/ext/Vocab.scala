@@ -40,6 +40,18 @@ object Vocab {
       .toMap
   }
 
+  /** Greedy left-to-right application of ONE merge to a symbol array:
+    * a fold that replaces a trailing `l` followed by `r` with the
+    * merged symbol — consumption of the left element makes overlapping
+    * matches (l == r runs) resolve exactly as sequential BPE does. */
+  private def mergeFold(syms: org.apache.spark.sql.Column,
+      l: String, r: String): org.apache.spark.sql.Column =
+    aggregate(syms, typedLit(Array.empty[String]),
+      (acc, s) => when(
+        size(acc) > 0 && element_at(acc, -1) === lit(l) && s === lit(r),
+        concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
+        .otherwise(concat(acc, array(s))))
+
   /** BPE merge training (Sennrich et al., ACL 2016): run `rounds`
     * merge iterations over the corpus and return the learned merge
     * table — (round, lhs, rhs, n) per iteration, the exact artifact a
@@ -56,59 +68,52 @@ object Vocab {
     * cut is deterministic), then a NARROW greedy left-to-right merge
     * fold over each word's symbol array — no shuffle in the apply
     * step, and words reduced to one symbol drop out (they can never
-    * pair again). Rounds persist so lineage stays flat.
+    * pair again). Each round's word table is a [[graft.ops.Iterate]]
+    * loop barrier, so lineage stays flat and the superseded table is
+    * freed; the merge table is built on the driver, so nothing stays
+    * cached once training returns.
     *
     * `wordPattern` keeps training on ASCII-safe words by default
     * (cross-engine substring semantics on multi-byte text differ;
     * the operator itself is agnostic). Stops early if the corpus runs
-    * out of pairs. */
-  /** Greedy left-to-right application of ONE merge to a symbol array:
-    * a fold that replaces a trailing `l` followed by `r` with the
-    * merged symbol — consumption of the left element makes overlapping
-    * matches (l == r runs) resolve exactly as sequential BPE does. */
-  private def mergeFold(syms: org.apache.spark.sql.Column,
-      l: String, r: String): org.apache.spark.sql.Column =
-    aggregate(syms, typedLit(Array.empty[String]),
-      (acc, s) => when(
-        size(acc) > 0 && element_at(acc, -1) === lit(l) && s === lit(r),
-        concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-        .otherwise(concat(acc, array(s))))
-
+    * out of pairs, so an empty corpus trains zero merges. */
   def bpeMerges(docs: DataFrame, rounds: Int, textCol: String = "text",
       wordPattern: String = "^[a-z]+$"): DataFrame = {
     require(rounds >= 1 && rounds <= 64,
       s"rounds must be in [1, 64], got $rounds")
     val spark = docs.sparkSession
-    var cur = docs
-      .select(explode(TextStats.tokens(col(textCol))).as("w"))
-      .filter($"w".rlike(wordPattern) && length($"w") >= 2)
-      .groupBy($"w").agg(count(lit(1)).as("cnt"))
-      .select($"cnt",
-        transform(sequence(lit(1), length($"w")), i => $"w".substr(i, lit(1)))
-          .as("syms"))
-      .persistScoped
-    val out = Seq.newBuilder[(Long, String, String, Long)]
-    var exhausted = false
-    for (r <- 1 to rounds if !exhausted) {
-      val top = cur
-        .select($"cnt", explode(
-          transform(sequence(lit(1), size($"syms") - 1),
-            i => struct(element_at($"syms", i).as("l"),
-              element_at($"syms", i + 1).as("r")))).as("p"))
-        .groupBy($"p.l", $"p.r").agg(sum($"cnt").as("n"))
-        .orderBy($"n".desc, $"l".asc, $"r".asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, rr, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        out += ((r.toLong, l, rr, n))
-        cur = cur.select($"cnt", mergeFold($"syms", l, rr).as("syms"))
-          .filter(size($"syms") >= 2)
-          .persistScoped
+    val merges = graft.ops.Iterate.loop("bpeMerges", rounds) { l =>
+      var next = docs
+        .select(explode(TextStats.tokens(col(textCol))).as("w"))
+        .filter($"w".rlike(wordPattern) && length($"w") >= 2)
+        .groupBy($"w").agg(count(lit(1)).as("cnt"))
+        .select($"cnt",
+          transform(sequence(lit(1), length($"w")), i => $"w".substr(i, lit(1)))
+            .as("syms"))
+      val out = Seq.newBuilder[(Long, String, String, Long)]
+      var exhausted = false
+      while (!exhausted && l.rounds < rounds) {
+        val r = l.round(next) + 1
+        val cur = graft.ops.Iterate.loopBarrier(next)
+        val top = cur
+          .select($"cnt", explode(
+            transform(sequence(lit(1), size($"syms") - 1),
+              i => struct(element_at($"syms", i).as("l"),
+                element_at($"syms", i + 1).as("r")))).as("p"))
+          .groupBy($"p.l", $"p.r").agg(sum($"cnt").as("n"))
+          .orderBy($"n".desc, $"l".asc, $"r".asc)
+          .limit(1).collect()
+        if (top.isEmpty) exhausted = true
+        else {
+          val (lhs, rhs, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          out += ((r.toLong, lhs, rhs, n))
+          next = cur.select($"cnt", mergeFold($"syms", lhs, rhs).as("syms"))
+            .filter(size($"syms") >= 2)
+        }
       }
+      out.result()
     }
-    spark.createDataFrame(out.result())
-      .toDF("round", "lhs", "rhs", "n")
+    spark.createDataFrame(merges).toDF("round", "lhs", "rhs", "n")
   }
 
   /** Apply a learned BPE merge sequence (from [[bpeMerges]]) to every
@@ -124,12 +129,12 @@ object Vocab {
     * occurrence, and documents pick up their pieces through one equi
     * join on the word. The fold chain is narrow (k nested folds in one
     * projection); words not matching `wordPattern` pass through as a
-    * single piece (the byte-fallback analogue). */
+    * single piece (the byte-fallback analogue). Zero merges is valid:
+    * every matching word encodes as its characters. */
   def bpeEncode(docs: DataFrame, merges: Seq[(String, String)],
       headPieces: Int = 32, idCol: String = "doc_id",
       textCol: String = "text",
       wordPattern: String = "^[a-z]+$"): DataFrame = {
-    require(merges.nonEmpty, "merges must not be empty")
     require(headPieces >= 1, s"headPieces must be >= 1, got $headPieces")
     val docWords = docs.select(col(idCol),
       posexplode(TextStats.tokens(col(textCol))).as(Seq("pos", "w")))

@@ -18,7 +18,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    round even when every frame is persisted: execution reads the
   *    cache, but analysis walks a 2^rounds tree (ext_sssp at sf0.1
   *    wedged >10 min in planning with all data cached).
-  *  - the rebuild (GraftSqlShim.measuredBarrier) REPLACES the origin
+  *  - the rebuild (GraftSqlShim.measuredBarrierProbe) REPLACES the origin
   *    stats `localCheckpoint` copies onto its `LogicalRDD` leaf with the
   *    checkpoint's measured block size. Catalyst's size-only join
   *    estimate is `size(left) · size(right)`, so carried stats DOUBLE
@@ -124,30 +124,24 @@ private[graft] object Iterate {
       case r: LogicalRDD => r.rdd.id
     }).toSet
 
-  private def tracked(b: DataFrame): DataFrame = {
-    Option(active.get).foreach(l => b.queryExecution.analyzed match {
-      case r: LogicalRDD => l.made(r.rdd.id) = r.rdd
-      case _ => // unexpected barrier shape: left to the ContextCleaner
-    })
-    b
-  }
-
-  def loopBarrier(df: DataFrame): DataFrame = {
-    barrierCount.incrementAndGet()
-    tracked(GraftSqlShim.measuredBarrier(df))
-  }
+  def loopBarrier(df: DataFrame): DataFrame = loopBarrierProbe(df, Nil)._1
 
   /** [[loopBarrier]] whose materialization job ALSO computes the
     * caller's convergence probe — per long/boolean column named, the
     * (non-null count, Σ value) pair over the checkpointed rows: one
     * driver job instead of a checkpoint plus a separately planned probe
-    * aggregate. The enclosing [[loop]] keeps the values. */
+    * aggregate. The enclosing [[loop]] keeps the values and the
+    * barrier, which it frees once no round reads it. */
   def loopBarrierProbe(df: DataFrame, probeCols: Seq[String])
       : (DataFrame, Array[(Long, Long)]) = {
     barrierCount.incrementAndGet()
     val (b, st) = GraftSqlShim.measuredBarrierProbe(df, probeCols)
-    Option(active.get).foreach(_.lastProbe = st.toSeq)
-    (tracked(b), st)
+    Option(active.get).foreach { l =>
+      if (probeCols.nonEmpty) l.lastProbe = st.toSeq
+      val rdd = GraftSqlShim.barrierRdd(b)
+      l.made(rdd.id) = rdd
+    }
+    (b, st)
   }
 
   /** [[loopBarrierProbe]] of the frame's row count. */

@@ -306,29 +306,35 @@ object Journeys {
     *
     * Scale shape: the corpus collapses to the k²-row transition matrix
     * first (one user-keyed window + one aggregate — all [[transitions]]
-    * cost); the iteration then runs on state-cardinality frames. */
+    * cost); the iteration then runs on state-cardinality frames. The
+    * matrix, the state set and each round's π are [[Iterate]] loop
+    * barriers: the result reads only the last π. */
   def stationaryDistribution(events: DataFrame, iters: Int = 3,
       userCol: String = "user_id", tsCol: String = "ts",
       typeCol: String = "event_type", tieCol: String = "event_id"): DataFrame = {
     RangeJoin.requireTs(events, tsCol, "stationaryDistribution")
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val t = transitions(events, userCol, tsCol, typeCol, tieCol)
-      .select($"from_type", $"to_type", $"p_bp")
-      .persistScoped // each iteration joins this matrix
-    val states = t.select($"from_type".as("state")).distinct().persistScoped
-    val k = states.agg(count(lit(1)).as("_k"))
-    var pi = states.crossJoin(broadcast(k))
-      .select($"state", expr("100000000 div _k").as("pi_q8"))
-    for (_ <- 1 to iters) {
-      val next = pi.toDF("from_type", "pi_q8")
-        .join(t, Seq("from_type"))
-        .select($"to_type".as("state"),
-          expr("(pi_q8 * p_bp) div 10000").as("_m"))
-        .groupBy($"state").agg(sum($"_m").as("_pi"))
-      pi = states.join(next, Seq("state"), "left")
-        .select($"state", coalesce($"_pi", lit(0L)).as("pi_q8"))
+    Iterate.loop("stationaryDistribution", iters) { l =>
+      l.stage("transitions")
+      val t = Iterate.loopBarrier( // each iteration joins this matrix
+        transitions(events, userCol, tsCol, typeCol, tieCol)
+          .select($"from_type", $"to_type", $"p_bp"))
+      val (states, k) = Iterate.loopBarrierCount(
+        t.select($"from_type".as("state")).distinct())
+      var pi = states.select($"state",
+        lit(if (k == 0) 0L else 100000000L / k).as("pi_q8"))
+      for (_ <- 1 to iters) {
+        l.round(pi, t, states)
+        val next = pi.toDF("from_type", "pi_q8")
+          .join(t, Seq("from_type"))
+          .select($"to_type".as("state"),
+            expr("(pi_q8 * p_bp) div 10000").as("_m"))
+          .groupBy($"state").agg(sum($"_m").as("_pi"))
+        pi = Iterate.loopBarrier(states.join(next, Seq("state"), "left")
+          .select($"state", coalesce($"_pi", lit(0L)).as("pi_q8")))
+      }
+      pi.select($"state".as(typeCol), $"pi_q8")
     }
-    pi.select($"state".as(typeCol), $"pi_q8")
   }
 
   /** Batch sessionization with session ORDINALS: gaps-and-islands per

@@ -102,7 +102,7 @@ object KTruss {
       .select($"a", $"b", $"sup", $"_da", $"_db")
   }
 
-  /** Decremental cascade: from `cur0` (`(a, b, sup, _da, _db)` —
+  /** Decremental cascade: from `start` (`(a, b, sup, _da, _db)` —
     * supports VALID for exactly this edge set, endpoint degrees
     * attached once by [[withDeg]]) to the fixpoint where every
     * remaining edge has `sup ≥ minSup`. Each round drops the frontier,
@@ -114,20 +114,21 @@ object KTruss {
     * frontier size): one count per round, one barrier per DROPPING
     * round. With `keepDropped` the dropped frontiers come back too,
     * newest first — each a frame over its round's barriered `cur`,
-    * which [[Iterate.loop]] therefore keeps. */
-  private def cascade(cur0: DataFrame, n0: Long, minSup: Long,
-      maxIter: Int, keepDropped: Boolean): (DataFrame, Long, List[DataFrame]) =
+    * which [[Iterate.loop]] therefore keeps. `start` — the frame and
+    * its cardinality — is evaluated inside the loop, so barriers it
+    * builds are the loop's too. */
+  private def cascade(minSup: Long, maxIter: Int, keepDropped: Boolean)(
+      start: => (DataFrame, Long)): (DataFrame, Long, List[DataFrame]) =
     Iterate.loop("KTruss", maxIter, "raise maxIter") { l =>
-      val spark = cur0.sparkSession
+      var (cur, nCur) = start
+      val spark = cur.sparkSession
       import spark.implicits._
-      var cur = cur0
-      var nCur = n0
       var dropped = List.empty[DataFrame]
       // frontier size for rounds ≥ 2 rides the previous round's barrier
       // (a `sup < minSup` flag summed during materialization; a separate
       // d.count() would be one more job over just-checkpointed blocks).
-      // Round 1 counts for real: cur0 comes from a previous level whose
-      // threshold was lower.
+      // Round 1 counts for real: `start` comes from a previous level
+      // whose threshold was lower.
       var nDFused: Option[Long] = None
       var done = false
       while (!done) {
@@ -222,9 +223,8 @@ object KTruss {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val spark = edges.sparkSession
     import spark.implicits._
-    val (cur0, n0) = supported(edges)
-    val (fix, _, _) = cascade(cur0, n0, (k - 2).toLong, maxIter,
-      keepDropped = false)
+    val (fix, _, _) = cascade((k - 2).toLong, maxIter, keepDropped = false)(
+      supported(edges))
     fix.select($"a", $"b", $"sup".as("support"))
   }
 
@@ -259,25 +259,28 @@ object KTruss {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     val spark = edges.sparkSession
     import spark.implicits._
-    var (cur, nCur) = supported(edges)
-    var k = 3
-    var labeled = List.empty[DataFrame]
-    while (nCur > 0 && k <= maxK) {
-      val lbl = (k - 1).toLong
-      val (kept, nKept, dropped) = cascade(cur, nCur, (k - 2).toLong,
-        maxIter, keepDropped = true)
-      labeled = dropped.map(_.select($"a", $"b", lit(lbl).as("trussness"))) :::
-        labeled
-      cur = kept
-      nCur = nKept
-      k += 1
+    Iterate.loop("KTruss.decompose", maxK - 2) { l =>
+      var (cur, nCur) = supported(edges)
+      var k = 3
+      var labeled = List.empty[DataFrame]
+      while (nCur > 0 && k <= maxK) {
+        l.round(cur :: labeled: _*)
+        val lbl = (k - 1).toLong
+        val (kept, nKept, dropped) = cascade((k - 2).toLong, maxIter,
+          keepDropped = true)((cur, nCur))
+        labeled = dropped.map(_.select($"a", $"b", lit(lbl).as("trussness"))) :::
+          labeled
+        cur = kept
+        nCur = nKept
+        k += 1
+      }
+      if (nCur > 0) // saturate: maxK-peel survivors are "at least maxK"
+        labeled = cur.select($"a", $"b", lit(maxK.toLong).as("trussness")) ::
+          labeled
+      if (labeled.isEmpty) // empty graph: empty labeling, correct schema
+        cur.select($"a", $"b", lit(2L).as("trussness"))
+      else labeled.reduce(_ unionByName _)
     }
-    if (nCur > 0) // saturate: maxK-peel survivors are "at least maxK"
-      labeled = cur.select($"a", $"b", lit(maxK.toLong).as("trussness")) ::
-        labeled
-    if (labeled.isEmpty) // empty graph: empty labeling, correct schema
-      cur.select($"a", $"b", lit(2L).as("trussness"))
-    else labeled.reduce(_ unionByName _)
   }
 
   /** The r11 peeling form of [[decompose]] — successive k = 3..maxK
@@ -291,23 +294,26 @@ object KTruss {
     require(maxK >= 3, s"maxK must be >= 3, got $maxK")
     val spark = edges.sparkSession
     import spark.implicits._
-    var (cur, nCur) = Iterate.loopBarrierCount(canonical(edges))
-    var k = 3
-    var labeled = List.empty[DataFrame]
-    while (nCur > 0 && k <= maxK) {
-      val (kept, nKept) = peel(cur, nCur, k, maxIter)
-      labeled = Iterate.loopBarrier(
-        cur.join(kept, Seq("a", "b"), "left_anti")
-          .select($"a", $"b", lit((k - 1).toLong).as("trussness"))) :: labeled
-      cur = kept.select($"a", $"b")
-      nCur = nKept
-      k += 1
+    Iterate.loop("KTruss.decomposePeel", maxK - 2) { l =>
+      var (cur, nCur) = Iterate.loopBarrierCount(canonical(edges))
+      var k = 3
+      var labeled = List.empty[DataFrame]
+      while (nCur > 0 && k <= maxK) {
+        l.round(cur :: labeled: _*)
+        val (kept, nKept) = peel(cur, nCur, k, maxIter)
+        labeled = Iterate.loopBarrier(
+          cur.join(kept, Seq("a", "b"), "left_anti")
+            .select($"a", $"b", lit((k - 1).toLong).as("trussness"))) :: labeled
+        cur = kept.select($"a", $"b")
+        nCur = nKept
+        k += 1
+      }
+      if (nCur > 0) // saturate: maxK-peel survivors are "at least maxK"
+        labeled = Iterate.loopBarrier(
+          cur.select($"a", $"b", lit(maxK.toLong).as("trussness"))) :: labeled
+      if (labeled.isEmpty) // empty graph: empty labeling, correct schema
+        cur.select($"a", $"b", lit(2L).as("trussness"))
+      else labeled.reduce(_ unionByName _)
     }
-    if (nCur > 0) // saturate: maxK-peel survivors are "at least maxK"
-      labeled = Iterate.loopBarrier(
-        cur.select($"a", $"b", lit(maxK.toLong).as("trussness"))) :: labeled
-    if (labeled.isEmpty) // empty graph: empty labeling, correct schema
-      cur.select($"a", $"b", lit(2L).as("trussness"))
-    else labeled.reduce(_ unionByName _)
   }
 }

@@ -1262,11 +1262,7 @@ object ExtQueries extends QueryGroup {
     * component min, since the edge list is symmetrized). */
   def dedupComponents(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
-      .persistScoped
     Dedup.resolveComponents(emb, pairs, idCol = "vec_id").orderBy($"vec_id")
   }
 
@@ -1296,11 +1292,7 @@ object ExtQueries extends QueryGroup {
     * Two cascaded bounded aggregates over the component labels. */
   def dedupClusterStats(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
-      .persistScoped
     Dedup.resolveComponents(emb, pairs, idCol = "vec_id")
       .groupBy($"component_id").agg(count(lit(1)).as("sz"))
       .groupBy($"sz").agg(count(lit(1)).as("n_components"))
@@ -1367,11 +1359,7 @@ object ExtQueries extends QueryGroup {
     * means at scale. */
   def splitLeakageSafe(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
-      .persistScoped
     Dedup.resolveComponents(emb, pairs, idCol = "vec_id")
       .select($"vec_id", $"component_id",
         Sampling.splitAssign($"component_id",
@@ -1400,11 +1388,7 @@ object ExtQueries extends QueryGroup {
     import org.apache.spark.sql.expressions.Window
     val emb = load(spark, dir, "embeddings")
     val docs = load(spark, dir, "documents")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
-      .persistScoped
     val comps = Dedup.resolveComponents(emb, pairs, idCol = "vec_id")
     val q = TextStats.analyze(docs).select($"doc_id", $"quality_q4")
     val best = Window.partitionBy($"component_id")
@@ -2326,11 +2310,7 @@ object ExtQueries extends QueryGroup {
     * reference, so the fixed unroll IS the independent formulation). */
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
-      .persistScoped
     val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.PageRank.run(edges, emb.select($"vec_id".as("id")),
         iterations = 4)
@@ -2457,11 +2437,7 @@ object ExtQueries extends QueryGroup {
     * joins), run past the fixpoint so the final iteration IS the core. */
   def kcore(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
-      .persistScoped
     val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.KCore.run(edges, k = 2, maxIter = 30)
       .orderBy($"node")
@@ -2507,11 +2483,7 @@ object ExtQueries extends QueryGroup {
     * independently of the Spark frontier loop. */
   def bfsHops(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
-      .persistScoped
     val edges = Similarity.symmetrize(pairs, "src", "dst")
     val seeds = emb
       .where(Similarity.dot($"embedding", $"embedding") > 0 &&
@@ -2558,11 +2530,7 @@ object ExtQueries extends QueryGroup {
     * semantics written independently of the Spark frontier loop. */
   def harmonicQ(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
-      .persistScoped
     val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.Bfs.harmonic(edges, maxHops = 3).orderBy($"id")
   }
@@ -2612,11 +2580,7 @@ object ExtQueries extends QueryGroup {
     * are the radius and diameter lower bounds of the near-dup graph. */
   def eccentricityQ(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
-      .persistScoped
     val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.Bfs.eccentricity(edges, maxHops = 3).orderBy($"id")
   }
@@ -2809,11 +2773,7 @@ object ExtQueries extends QueryGroup {
     * chained CTEs with a window argmax per round. */
   def labelProp(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
-      .persistScoped
     val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.LabelProp.run(edges, emb.select($"vec_id".as("id")),
         iterations = 3)
@@ -2871,9 +2831,8 @@ object ExtQueries extends QueryGroup {
     * to end (the Moments contract). */
   def assortativity(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
+    // persisted: the cosine pair kernel is the expensive stage, and the
+    // edge list AND its degree table (joined to both endpoints) read it
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
     val edges = Similarity.symmetrize(pairs, "u", "v")
@@ -2929,9 +2888,9 @@ object ExtQueries extends QueryGroup {
     * 3-round LPA labels as ext_label_prop (one shared oracle chain). */
   def communityConductance(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
+    // persisted: the cosine pair kernel is the expensive stage, and
+    // LabelProp's edge barrier AND conductance's cut and degree passes
+    // read it
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
     val edges = Similarity.symmetrize(pairs, "src", "dst")
@@ -3001,11 +2960,7 @@ object ExtQueries extends QueryGroup {
     * loop. */
   def ktrussQ(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
-      .persistScoped
     val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.KTruss.run(edges, k = 3).orderBy($"a", $"b")
   }
@@ -3058,11 +3013,7 @@ object ExtQueries extends QueryGroup {
     * 8-survivor join arm IS the saturated label). */
   def trussDecomposeQ(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
-      .persistScoped
     val edges = Similarity.symmetrize(pairs, "src", "dst")
     graft.ops.KTruss.decompose(edges, maxK = 8).orderBy($"a", $"b")
   }
@@ -3123,9 +3074,8 @@ object ExtQueries extends QueryGroup {
     * self-join) — a completely different orientation, same triangles. */
   def triangles(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
+    // persisted: the cosine pair kernel is the expensive stage, and the
+    // oriented edge list AND its degree table read it
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
     graft.ops.Triangles.perNode(pairs).orderBy($"id")
@@ -3154,9 +3104,8 @@ object ExtQueries extends QueryGroup {
     * re-derives degrees and triangles with the id-order orientation. */
   def clusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
+    // persisted: the cosine pair kernel is the expensive stage, and the
+    // degree pass AND the triangle count read it
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
     graft.ops.Triangles.localClustering(pairs).orderBy($"id")
@@ -5253,9 +5202,8 @@ object ExtQueries extends QueryGroup {
   def negativeSampling(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
     val nVecs = emb.count()
-    // barrier: the cosine pair kernel is the expensive stage, and every
-    // consumer (iterative rounds, final metric passes) would
-    // re-evaluate it without the persist
+    // persisted: the cosine pair kernel is the expensive stage, and the
+    // anchor set AND the positive-exclusion anti-join read it
     val pairs = Similarity.cosineNearDup(emb, 0.3).select($"id_a", $"id_b")
       .persistScoped
     val pos = Similarity.symmetrize(pairs, "a", "p")

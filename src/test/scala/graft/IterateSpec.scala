@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.ext.Dedup
+import org.apache.spark.sql.execution.LogicalRDD
+import graft.ext.{Dedup, Sampling, Similarity, Vocab}
+import graft.queries.ExtQueries
 import graft.ops._
 import graft.streaming.StreamingIngest
 
@@ -13,18 +15,27 @@ class IterateSpec extends SparkSpec {
 
   private def site = spark.sparkContext.getLocalProperty("callSite.short")
 
+  /** RDD ids cached after `run` that are newer than a fresh id taken
+    * before it: RDD ids only grow, so this is exactly what that run
+    * left behind. */
+  private def cachedBy[A](run: => A): (Set[Int], A) = {
+    val sc = spark.sparkContext
+    val mark = sc.emptyRDD[Int].id
+    val out = run
+    (sc.getRDDStorageInfo.map(_.id).filter(_ > mark).toSet, out)
+  }
+
   test("superseded rounds are freed: PageRank holds as many cached RDDs " +
       "after 8 rounds as after 2") {
-    val sc = spark.sparkContext
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
     val nodes = (1L to 5L).toDF("id")
-    // RDD ids only grow, so counting the cached ones above a fresh id
-    // sees exactly what this run left behind
     def held(iterations: Int): (Int, DataFrame) = {
-      val mark = sc.emptyRDD[Int].id
-      val out = PageRank.run(edges, nodes, iterations)
-      out.collect()
-      (sc.getRDDStorageInfo.count(_.id > mark), out)
+      val (ids, out) = cachedBy {
+        val out = PageRank.run(edges, nodes, iterations)
+        out.collect()
+        out
+      }
+      (ids.size, out)
     }
     val (n2, out2) = held(2)
     val (n8, out8) = held(8)
@@ -32,6 +43,41 @@ class IterateSpec extends SparkSpec {
     // only the rank vector the result reads stays
     assert(n2 === 1)
     assert(out2.count() === 5L && out8.count() === 5L)
+  }
+
+  test("loops whose result lives on the driver leave no cached RDD behind") {
+    val docs = Seq((1L, "low lower lowest newer newest"), (2L, "wider widest"))
+      .toDF("doc_id", "text")
+    val r = new scala.util.Random(5)
+    val emb = (0 until 30).map(i => (i.toLong, Array.fill(4)(r.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val runs = Seq[(String, () => Any)](
+      "bpeMerges" -> (() => Vocab.bpeMerges(docs, rounds = 4).collect()),
+      "kCenterCoreset" -> (() => Sampling.kCenterCoreset(emb, k = 4).collect()),
+      "ivfCentroidsKmeans parallel" ->
+        (() => Similarity.ivfCentroidsKmeans(emb, nCells = 3, iters = 2)),
+      "ivfCentroidsKmeans farthest" -> (() => Similarity.ivfCentroidsKmeans(
+        emb, nCells = 3, iters = 0, seeding = "farthest")))
+    runs.foreach { case (name, run) =>
+      val (held, _) = cachedBy(run())
+      assert(held.isEmpty, s"$name left cached RDDs $held")
+    }
+  }
+
+  test("near-dup graph queries hold only the barriers their results read") {
+    def reads(df: DataFrame): Set[Int] =
+      df.queryExecution.analyzed.collectLeaves().collect {
+        case l: LogicalRDD => l.rdd.id
+      }.toSet
+    Seq[(String, () => DataFrame)](
+      "ext_pagerank" -> (() => ExtQueries.pagerank(spark, sfDir)),
+      "ext_dedup_components" -> (() => ExtQueries.dedupComponents(spark, sfDir))
+    ).foreach { case (name, build) =>
+      val (held, out) = cachedBy(build())
+      assert(held.nonEmpty && held === reads(out),
+        s"$name holds $held, its result reads ${reads(out)}")
+      out.collect()
+    }
   }
 
   test("an inner loop leaves the enclosing loop's round call site in place") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ext.{Dedup, Sampling, Similarity}
+import graft.ext.{Dedup, Sampling, Similarity, Vocab}
 import graft.ops._
 import graft.streaming.StreamingIngest
 
@@ -105,5 +105,37 @@ class LoopInvarianceSpec extends SparkSpec {
         Array.fill(4)(r.nextFloat() - 0.5f).updated(1, (i % 5).toFloat)))
       .toDF("vec_id", "embedding")
     invariant("topComponent")(Seq(Similarity.topComponent(emb, dim = 4)))
+  }
+
+  test("bpeMerges and stationaryDistribution are layout-invariant") {
+    val words = Seq("low", "lower", "lowest", "new", "newer", "wide", "wider",
+      "aaaa", "banana", "bandana")
+    val docs = (1 to 60).map(i => (i.toLong,
+        (0 until 5).map(j => words((i * 7 + j * 3) % words.size)).mkString(" ")))
+      .toDF("doc_id", "text")
+    invariant("bpeMerges")(Seq(Vocab.bpeMerges(docs, rounds = 8)))
+    val types = Seq("view", "cart", "view", "buy", "search", "view")
+    val events = (0 until 240).map { i =>
+      (i % 17L, new java.sql.Timestamp(1700000000000L + i * 60000L),
+        types((i * 5 + i / 17) % types.size), i.toLong)
+    }.toDF("user_id", "ts", "event_type", "event_id")
+    invariant("stationaryDistribution")(
+      Seq(Journeys.stationaryDistribution(events, iters = 4)))
+  }
+
+  test("kCenterCoreset and exact k-means seeding are layout-invariant") {
+    val r = new scala.util.Random(23)
+    val emb = (0 until 60).map(i => (i.toLong,
+        Array.fill(6)(r.nextFloat() - 0.5f).updated(i % 6, 1.0f)))
+      .toDF("vec_id", "embedding")
+    invariant("kCenterCoreset")(Seq(Sampling.kCenterCoreset(emb, k = 5)))
+    // farthest-first at iters = 0 is exact; Lloyd means sum doubles in
+    // partition order, so they are not part of this contract
+    invariant("ivfCentroidsKmeans farthest") {
+      val cents = Similarity.ivfCentroidsKmeans(emb, nCells = 5, iters = 0,
+        seeding = "farthest")
+      Seq(cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.mkString(",")) }
+        .toDF("cell", "centroid"))
+    }
   }
 }

@@ -90,6 +90,18 @@ class RetrievalSpec extends SparkSpec {
     assert(Vocab.buildVocab(d, size = 1) === Map("alpha" -> 1))
   }
 
+  test("bpe on a zero-row corpus: zero merges, and zero merges encode " +
+      "every word as its characters") {
+    val none = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(Vocab.bpeMerges(none, rounds = 6).isEmpty)
+    assert(Vocab.bpeEncode(none, Nil).isEmpty)
+    val got = Vocab.bpeEncode(docs(1L -> "low ab", 2L -> "x 42"), Nil)
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
+    // "42" fails the word pattern and stays one piece
+    assert(got === Seq((1L, 2L, 5L, "l,o,w,a,b"), (2L, 2L, 2L, "x,42")))
+  }
+
   test("bpeMerges equals a sequential reference trainer, incl. same-symbol runs") {
     // classic BPE fixture + an "aaaa" run word to pin greedy semantics
     val d = docs(

@@ -539,6 +539,13 @@ class SamplingSpec extends SparkSpec {
     assert(run().sorted.toSeq === rows.sorted.toSeq)
   }
 
+  test("kCenterCoreset on a zero-row corpus is the empty coreset") {
+    val none = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    val got = Sampling.kCenterCoreset(none, k = 6)
+    assert(got.columns.toSeq === Seq("rank", "vec_id", "d2_q6"))
+    assert(got.isEmpty)
+  }
+
   test("kCenterCoreset: farthest-point traversal golden on a line; exact-tie " +
       "breaks to min id; corpus smaller than k fails loudly") {
     import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}

@@ -86,7 +86,9 @@ class SimilaritySpec extends SparkSpec {
       registered = scope.registered.size
       c
     }
-    assert(registered === 1) // the scan frame persists under the caller's scope
+    // the scan frame is the loop's own barrier, freed on return: nothing
+    // is left for the caller's scope to release
+    assert(registered === 0)
     val refined = pairs(Similarity.ivfTopK(queries, all, 5, nCells = 4, nProbe = 1,
       centroids = Some(km)))
     val seededRecall = (exact & seeded).size.toDouble / exact.size
@@ -96,6 +98,21 @@ class SimilaritySpec extends SparkSpec {
     assert(kmRecall >= 0.9, s"k-means recall was $kmRecall")
     assert(kmRecall > seededRecall,
       s"k-means ($kmRecall) should beat degenerate first-k seeding ($seededRecall)")
+  }
+
+  test("k-means on a zero-row corpus seeds no cell, and IVF over the empty " +
+      "index finds nothing") {
+    import spark.implicits._
+    val none = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    Seq("parallel", "farthest").foreach { seeding =>
+      val cents = Similarity.ivfCentroidsKmeans(none, nCells = 4, iters = 2,
+        seeding = seeding)
+      assert(cents.isEmpty, seeding)
+      val hits = Similarity.ivfTopK(none, none, 5, nProbe = 2,
+        centroids = Some(cents))
+      assert(hits.columns.toSeq === Seq("q_id", "n_id", "rank", "cos_q4"))
+      assert(hits.isEmpty, seeding)
+    }
   }
 
   test("parallel k-means seeding: job count independent of nCells, deterministic") {
