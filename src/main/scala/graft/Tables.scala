@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Central access to the driver-generated test tables (TESTDATA.md).
   *
@@ -56,7 +58,7 @@ object Tables {
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+      val raw = parquet(spark, s"$sfDir/$name.parquet")
       (raw.schema("ts").dataType match {
         case LongType =>
           // TIMESTAMP(NANOS) read as raw int64 nanos: truncate to micros
@@ -70,8 +72,38 @@ object Tables {
         case _ => raw
       })
     } else {
-      spark.read.parquet(s"$sfDir/$name.parquet")
+      parquet(spark, s"$sfDir/$name.parquet")
     }
+
+  /** What a path's inferred schema depends on: every leaf file's
+    * (path, length, modification time), plus the nanos-as-long switch,
+    * which decides whether a TIMESTAMP(NANOS) column infers as a long. */
+  private final case class Stamp(files: Seq[(String, Long, Long)], nanosAsLong: String)
+
+  private val schemas = scala.collection.concurrent.TrieMap.empty[String, (Stamp, StructType)]
+
+  /** `spark.read.parquet(path)` without the schema-inference job on a
+    * path whose files are unchanged since it was last inferred: the
+    * schema is a function of the file footers, so a matching stamp
+    * reads with the schema already known, and a changed stamp infers
+    * again and replaces the entry. */
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Iterator.unfold(fs.listFiles(p, true))(it =>
+      if (it.hasNext) Some((it.next(), it)) else None)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .toSeq.sorted
+    val stamp = Stamp(files,
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    schemas.get(path) match {
+      case Some((`stamp`, schema)) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemas.put(path, (stamp, df.schema))
+        df
+    }
+  }
 
   /** Small dimensions that should always be broadcast when joined. */
   val broadcastable: Set[String] = Set("region", "nation", "supplier", "part")

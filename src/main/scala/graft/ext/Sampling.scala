@@ -169,6 +169,7 @@ object Sampling {
       alpha: Double = 0.5): Map[String, Int] = {
     val counts = df.groupBy(col(srcCol)).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    if (counts.isEmpty) return Map.empty // no sources, nothing to rate
     val sqi = counts.map { case (s, n) =>
       val w = if (alpha == 0.5) math.sqrt(n.toDouble) else math.pow(n.toDouble, alpha)
       s -> BigInt(math.floor(w * 1000.0).toLong)

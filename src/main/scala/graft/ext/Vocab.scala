@@ -159,7 +159,8 @@ object Vocab {
           .as("pieces_csv"))
   }
 
-  /** Encode each document against `vocab`: ordered token ids (OOV → 0).
+  /** Encode each document against `vocab`: ordered token ids (OOV → 0;
+    * an empty vocab is valid and leaves every piece OOV).
     * Returns doc_id, `n_pieces`, `n_oov`, and `ids_csv` — the first
     * `headIds` ids as a csv string (the bounded preview shape the
     * driver's comparator can hash; the full id array stays available
@@ -169,7 +170,6 @@ object Vocab {
   def encode(docs: DataFrame, vocab: Map[String, Int], headIds: Int = 32,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(headIds >= 1, s"headIds must be >= 1, got $headIds")
-    require(vocab.nonEmpty, "vocab must not be empty")
     val m = typedLit(vocab)
     docs
       .withColumn("_ids",

@@ -1,7 +1,8 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Versioned snapshot table — the lakehouse-lite sink (the commit-log
   * core of Delta/Iceberg, reduced to what plain parquet + atomic rename
@@ -111,10 +112,13 @@ object SnapshotTable {
     val nonce = java.util.UUID.randomUUID.toString.replace("-", "").take(8)
     val dirName = s"v=$next-a$nonce"
     val dataDir = new Path(path, dirName)
-    df.write.mode("overwrite").parquet(dataDir.toString)
-    // footer-driven count of what was actually written (no extra
-    // materialization of df, which may be expensive lineage)
-    val rows = spark.read.parquet(dataDir.toString).count()
+    // the row count rides the write job itself, as an observed metric:
+    // no second materialization of df (which may be expensive lineage)
+    // and no job reading the directory back
+    val written = Observation(s"snapshot-$dirName")
+    df.observe(written, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(dataDir.toString)
+    val rows = written.get("rows").asInstanceOf[Long]
     try commit(spark, path, next, mode, rows, batchId, dirName)
     catch { case e: java.io.IOException =>
       fs(spark).delete(dataDir, true) // reclaim the loser's staging

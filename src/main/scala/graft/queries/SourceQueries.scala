@@ -88,7 +88,8 @@ object SourceQueries extends QueryGroup {
     val tmp = graft.io.Scratch.dir("graft_s17").toFile
     graft.io.Layout.writeWithBloom(li, tmp.getAbsolutePath,
       Seq("l_partkey"), ndv = 200000L)
-    val key = li.agg(min($"l_partkey")).head.getLong(0)
+    // null on an empty table: `= NULL` then matches no row, as in SQL
+    val key = li.agg(min($"l_partkey")).head.get(0)
     spark.read.parquet(tmp.getAbsolutePath)
       .where($"l_partkey" === key)
       .select($"l_orderkey", $"l_partkey", $"l_linenumber",

@@ -120,4 +120,14 @@ class IoFormatsSpec extends SparkSpec {
     val want = df.where($"l_partkey" === key).count()
     assert(got === want && want > 0)
   }
+
+  test("bloom round trip over a zero-row lineitem returns no rows") {
+    val dir = Files.createTempDirectory("bloom-empty").toString
+    Tables.load(spark, sfDir, "lineitem").limit(0)
+      .write.parquet(s"$dir/lineitem.parquet")
+    val got = graft.queries.SourceQueries.bloomRoundTrip(spark, dir)
+    assert(got.columns.toSeq ===
+      Seq("l_orderkey", "l_partkey", "l_linenumber", "quantity"))
+    assert(got.isEmpty)
+  }
 }

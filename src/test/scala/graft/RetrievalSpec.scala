@@ -85,6 +85,17 @@ class RetrievalSpec extends SparkSpec {
       (2L, 3L, 1L, "2,1,0")))              // rare -> 0
   }
 
+  test("vocab on a zero-row corpus is empty, and an empty vocab encodes " +
+      "every piece as OOV") {
+    val none = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val v = Vocab.buildVocab(none, size = 24)
+    assert(v.isEmpty)
+    assert(Vocab.encode(none, v).isEmpty)
+    val enc = Vocab.encode(docs(1L -> "a b a"), v)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toList
+    assert(enc === List((1L, 3L, 3L, "0,0,0")))
+  }
+
   test("vocab: count ties break to the lexicographically smaller piece") {
     val d = docs(1L -> "beta alpha")
     assert(Vocab.buildVocab(d, size = 1) === Map("alpha" -> 1))

@@ -62,6 +62,12 @@ class SamplingSpec extends SparkSpec {
     assert(rates.values.forall(_ >= 9990), s"rates $rates")
   }
 
+  test("mixtureSample on a zero-row corpus: no rates, no rows") {
+    val none = Seq.empty[(Long, String)].toDF("doc_id", "source")
+    assert(Sampling.mixtureRates(none, "source") === Map.empty)
+    assert(Sampling.mixtureSample(none, "doc_id", "source").isEmpty)
+  }
+
   test("shardAssign: dense 0..n-1 positions per shard, full coverage, deterministic") {
     val df = (1L to 3000L).toDF("doc_id")
     val out = Sampling.shardAssign(df, "doc_id", 8).collect()

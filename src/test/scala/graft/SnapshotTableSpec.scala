@@ -176,8 +176,32 @@ class SnapshotTableSpec extends SparkSpec {
       input.addData(3L)
       q.processAllAvailable()
       assert(ids(p) === Set(1L, 2L, 3L))
-      assert(SnapshotTable.history(spark, p).count() === 2L)
+      assert(rowsByVersion(p) === Seq(1L -> 2L, 2L -> 1L))
     } finally q.stop()
+  }
+
+  private def rowsByVersion(p: String): Seq[(Long, Long)] =
+    SnapshotTable.history(spark, p).orderBy("version")
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toSeq
+
+  test("commit records count the rows written, zero-row frames included") {
+    val p = tmpDir()
+    SnapshotTable.write(spark.range(0L, 1000L, 1L, 4).toDF("id"), p, "overwrite")
+    SnapshotTable.write(Seq.empty[Long].toDF("id"), p, "append")
+    SnapshotTable.write(spark.range(10L).toDF("id").where($"id" < 0L), p, "append")
+    SnapshotTable.write(Seq(7L).toDF("id").where(org.apache.spark.sql.functions.lit(false)),
+      p, "append")
+    assert(rowsByVersion(p) === Seq(1L -> 1000L, 2L -> 0L, 3L -> 0L, 4L -> 0L))
+    assert(SnapshotTable.read(spark, p).count() === 1000L)
+  }
+
+  test("a plain write is one job: the row count rides the write") {
+    val p = tmpDir()
+    val (version, log) = JobLog.of(spark)(
+      SnapshotTable.write(Seq(1L, 2L, 3L).toDF("id"), p, "overwrite"))
+    assert(version === 1L)
+    assert(log.jobs.size === 1, s"jobs: ${log.stageNames}")
+    assert(rowsByVersion(p) === Seq(1L -> 3L))
   }
 
   private def state(p: String) =
