@@ -53,11 +53,11 @@ object Tables {
     if (name == "events") {
       // events.ts has been generated as both TIMESTAMP(NANOS) (which
       // Spark's vectorized reader rejects without the legacy long
-      // fallback) and plain timestamp[us]; branch on what the footer
-      // actually decodes to instead of hard-coding one generation.
+      // fallback, set for every session in LocalSession.shared) and
+      // plain timestamp[us]; branch on what the footer actually decodes
+      // to instead of hard-coding one generation.
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = parquet(spark, s"$sfDir/$name.parquet")
       (raw.schema("ts").dataType match {
         case LongType =>

@@ -997,7 +997,8 @@ object Similarity {
     * normalization step to manufacture NaNs.
     *
     * ONE bounded collect (codebookSize full vectors); returns
-    * `cbs(j)(c)` = code c's q6 subvector in subspace j. */
+    * `cbs(j)(c)` = code c's q6 subvector in subspace j. An empty corpus
+    * seeds no entries: every codebook is empty. */
   def pqCodebooks(corpus: DataFrame, m: Int = 4, codebookSize: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64): Array[Array[Array[Long]]] = {
@@ -1011,7 +1012,6 @@ object Similarity {
         case d: Double => math.floor(d * 1e6).toLong
         case n: Number => math.floor(n.doubleValue() * 1e6).toLong
       }.toArray)
-    require(seeds.nonEmpty, "empty corpus: no codebook seeds")
     seeds.foreach(v => require(v.length == dim,
       s"vector length ${v.length} != dim $dim"))
     Array.tabulate(m)(j => seeds.map(_.slice(j * sub, (j + 1) * sub)))
@@ -1032,22 +1032,27 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64): DataFrame = {
     val cbs = pqCodebooks(corpus, m, codebookSize, idCol, vecCol, dim)
-    val sub = dim / m
-    val withQ = corpus.withColumn("_q",
-      transform(col(vecCol), x => floor(x.cast("double") * lit(1000000.0)).cast("long")))
-    val (codeCols, distCols) = cbs.zipWithIndex.map { case (cb, j) =>
-      val dists = array(cb.map { c =>
-        c.indices.map { i =>
-          val d = element_at(col("_q"), j * sub + i + 1) - lit(c(i))
-          d * d
-        }.reduce(_ + _)
-      }.toIndexedSeq: _*)
-      val best = array_min(dists)
-      ((array_position(dists, best) - 1).cast("int"), best)
-    }.unzip
-    withQ.select(col(idCol),
-      array(codeCols.toIndexedSeq: _*).as("codes"),
-      distCols.reduce(_ + _).as("dist"))
+    if (cbs.head.isEmpty) // an empty corpus seeds no entry to code against
+      corpus.where(lit(false)).select(col(idCol),
+        typedLit(Seq.empty[Int]).as("codes"), lit(null).cast("long").as("dist"))
+    else {
+      val sub = dim / m
+      val withQ = corpus.withColumn("_q",
+        transform(col(vecCol), x => floor(x.cast("double") * lit(1000000.0)).cast("long")))
+      val (codeCols, distCols) = cbs.zipWithIndex.map { case (cb, j) =>
+        val dists = array(cb.map { c =>
+          c.indices.map { i =>
+            val d = element_at(col("_q"), j * sub + i + 1) - lit(c(i))
+            d * d
+          }.reduce(_ + _)
+        }.toIndexedSeq: _*)
+        val best = array_min(dists)
+        ((array_position(dists, best) - 1).cast("int"), best)
+      }.unzip
+      withQ.select(col(idCol),
+        array(codeCols.toIndexedSeq: _*).as("codes"),
+        distCols.reduce(_ + _).as("dist"))
+    }
   }
 
   /** ADC (asymmetric distance computation) top-k over PQ codes: each

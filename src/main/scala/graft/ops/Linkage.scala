@@ -55,8 +55,10 @@ object Linkage {
     samples
       .where(upper(col("minicore_sequenced")) === "YES")
       .where(col(idCol).isNotNull && lower(col(idCol)) =!= "nan")
-      .select(col(sampleCol),
-        explode(filter(array(t1, t2, t3, t2b), s => s.isNotNull)).as("probe"))
+      // explode, then drop the null tiers: a higher-order filter inside
+      // the generator would keep the Generate out of whole-stage codegen
+      .select(col(sampleCol), explode(array(t1, t2, t3, t2b)).as("probe"))
+      .where(col("probe").isNotNull)
       .select(col(sampleCol), col("probe.tier").as("tier"),
         col("probe.key").as("key"), col("probe.bare").as("bare"))
   }

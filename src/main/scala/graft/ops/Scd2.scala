@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: only the CURRENT slice (one row per live key) joins the
   * delta — the closed history never enters the join and at 100 TB lives
   * in its own partitions (`is_current=false`), untouched by a merge.
-  * The per-row outcome fans out through one `array → compact → explode`
-  * pass over the single join, not three re-filters of it, so the whole
+  * The per-row outcome fans out through one `array → explode → drop
+  * nulls` pass over the single join, not three re-filters of it, so the whole
   * merge is one shuffle on the keys.
   *
   * History schema: keys ++ tracked ++ (valid_from TIMESTAMP,
@@ -59,7 +59,11 @@ object Scd2 {
       when(inCur && inCh && changed, closeOld),
       when(inCh && (!inCur || changed), openNew))
 
-    j.select(keys.map(col) :+ explode(array_compact(outcomes)).as("_r"): _*)
+    // explode the plain array and drop the null outcomes after it: a
+    // higher-order filter inside the generator (array_compact) would push
+    // the Generate out of whole-stage codegen into per-row interpretation
+    j.select(keys.map(col) :+ explode(outcomes).as("_r"): _*)
+      .where(col("_r").isNotNull)
       .select(keys.map(col) ++
         (tracked ++ meta).map(c => col(s"_r.$c").as(c)): _*)
       .unionByName(cold.select(outCols: _*))

@@ -93,4 +93,27 @@ class Scd2Spec extends SparkSpec {
     assert(chained.where($"valid_to".isNotNull && !($"valid_to" <=> $"nxt"))
       .count() === 0)
   }
+
+  test("plan: the outcome fan-out's Generate runs inside whole-stage codegen") {
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val df = SparkEntry.queries("s15_scd2_merge")(spark, sfDir)
+    df.collect() // AQE fixes its final plan, codegen stages included, on execution
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    // the operators one codegen stage fuses: its subtree down to its inputs
+    def fused(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case _ => p.children.flatMap(fused)
+    })
+    val all = nodes(df.queryExecution.executedPlan)
+    val generates = all.collect { case g: GenerateExec => g }
+    val inCodegen = all.collect { case w: WholeStageCodegenExec => fused(w.child) }.flatten
+    assert(generates.nonEmpty, df.queryExecution.executedPlan)
+    generates.foreach(g => assert(inCodegen.exists(_ eq g),
+      s"interpreted Generate:\n${df.queryExecution.executedPlan}"))
+  }
 }

@@ -426,6 +426,18 @@ class SimilaritySpec extends SparkSpec {
     assert(out(2L) === Seq(0, 0))
   }
 
+  test("productQuantize on a zero-row corpus seeds empty codebooks and codes nothing") {
+    import spark.implicits._
+    val none = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    val cbs = Similarity.pqCodebooks(none)
+    assert(cbs.length === 4 && cbs.forall(_.isEmpty))
+    val codes = Similarity.productQuantize(none)
+    assert(codes.columns.toSeq === Seq("vec_id", "codes", "dist"))
+    assert(codes.schema("codes").dataType.simpleString === "array<int>")
+    assert(codes.schema("dist").dataType.simpleString === "bigint")
+    assert(codes.isEmpty)
+  }
+
   test("pqTopK: ADC ranking recalls brute-force neighbors on clustered data") {
     import spark.implicits._
     val rnd = new scala.util.Random(29)

@@ -11,12 +11,9 @@ object TestSpark {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // config-only install of the custom SQL functions; driven by
-      // GraftExtensionsSpec (a static conf — must be set on the FIRST
-      // session of the JVM, later builders can't add it)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // the production session's settings, static confs included: they
+      // bind on the FIRST session of the JVM, so this one must carry them
+      .config(LocalSession.shared)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
