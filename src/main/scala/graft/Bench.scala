@@ -15,9 +15,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalSession.build(cpus,
-      Map("spark.sql.adaptive.enabled" -> "true"))
+    val cpus = LocalSession.cpus
+    val spark = LocalSession.build(cpus)
 
     // 1-minute load average from /proc/loadavg — recorded before and
     // after the sweep so a contention-inflated artifact is

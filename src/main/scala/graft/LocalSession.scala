@@ -61,6 +61,21 @@ object LocalSession {
     "spark.sql.codegen.useIdInClassName" -> "false",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
+  /** Task threads of a graft main's session: `SPARK_GRAFT_CPUS`, or 32
+    * (the bench host's width) when unset. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** `/dev/shm/<name>` when the RAM-backed tmpfs is present and has at
+    * least 16 GiB usable (ADVICE r12: tmpfs is a silent memory ceiling,
+    * so a nearly full one falls back instead of failing mid-write),
+    * otherwise the JVM tmpdir. */
+  def fastDir(name: String): String = {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.isDirectory && shm.getUsableSpace >= 16L * 1024 * 1024 * 1024)
+      s"/dev/shm/$name"
+    else System.getProperty("java.io.tmpdir", "/tmp")
+  }
+
   def build(cpus: String, extra: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -70,20 +85,12 @@ object LocalSession {
       // the sandbox's /tmp sits on a shared virtual disk whose
       // throttling stalls write-heavy stages for tens of seconds
       // (measured: identical queries swinging 3 s ↔ 68 s with idle CPU
-      // — guide §7.4's "blocked on I/O" signature). Use the RAM-backed
-      // tmpfs when present AND roomy (ADVICE r12: tmpfs is a silent
-      // memory ceiling, so require ≥ 16 GiB usable before defaulting to
-      // it — a bench-SF shuffle footprint is well under that, and a
-      // host whose tmpfs is nearly full falls back to /tmp instead of
-      // failing mid-stage), exactly as a cluster deploy points local
-      // dirs at fast node-local disks; override via SPARK_LOCAL_DIRS.
-      .config("spark.local.dir", {
-        val shm = new java.io.File("/dev/shm")
-        if (sys.env.contains("SPARK_LOCAL_DIRS")) sys.env("SPARK_LOCAL_DIRS")
-        else if (shm.isDirectory && shm.getUsableSpace >= 16L * 1024 * 1024 * 1024)
-          "/dev/shm/graft-spark"
-        else System.getProperty("java.io.tmpdir", "/tmp")
-      })
+      // — guide §7.4's "blocked on I/O" signature). Use the roomy
+      // RAM-backed tmpfs (a bench-SF shuffle footprint is well under
+      // 16 GiB), exactly as a cluster deploy points local dirs at fast
+      // node-local disks; override via SPARK_LOCAL_DIRS.
+      .config("spark.local.dir",
+        sys.env.getOrElse("SPARK_LOCAL_DIRS", fastDir("graft-spark")))
       .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.network.timeout", "600s")
       // NOTE (r12 optimization, measured and rejected): raising

@@ -14,9 +14,7 @@ object PlanDump {
       sys.exit(2)
     }
     val Array(sfDir, outDir, tag, rest @ _*) = args
-    val spark = LocalSession.build(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      Map("spark.sql.adaptive.enabled" -> "true"))
+    val spark = LocalSession.build(LocalSession.cpus)
     new java.io.File(outDir).mkdirs()
     rest.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

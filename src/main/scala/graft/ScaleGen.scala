@@ -250,9 +250,7 @@ object ScaleGen {
       if (mode == "heaps" || mode == "zipf")
         (2000L * math.ceil(math.sqrt(m.toDouble)).toLong)
       else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalSession.build(cpus,
-      Map("spark.sql.adaptive.enabled" -> "true"))
+    val spark = LocalSession.build(LocalSession.cpus)
     generate(spark, outDir, m, heapsVocab, zipfSkew = mode == "zipf")
     println(s"""{"generated":"$outDir","multiplier":$m,"heaps_vocab":$heapsVocab,"zipf":${mode == "zipf"}}""")
     spark.stop()

@@ -17,38 +17,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  /** Deterministic spread keys for [[loadWide]]'s small-scan widening —
-    * unique per table, so a hash repartition spreads evenly and
-    * reproduces identically under task retries (guide §2.5: never
-    * round-robin on rand-derived keys). */
-  private val spreadKeys: Map[String, Seq[String]] = Map(
-    "documents" -> Seq("doc_id"))
-
-  /** EXPLICIT opt-in scan widening for the handful of operators whose
-    * downstream per-row work dwarfs the scan (document tokenization
-    * cascades: phrase search, skip-grams, winnowing, Pareto/budget
-    * scoring). At bench SFs each table is ONE parquet file with ONE
-    * row group, so the whole cascade fuses into a single task; the
-    * repartition spreads it to the session's shuffle width (guide §2.5
-    * "input skew: one huge unsplittable file … repartition immediately
-    * after the read"). r12 applied this widening inside [[load]] to
-    * EVERY fact-table consumer and regressed the 32-core bench ~29%
-    * (a full-table Exchange taxes every light scan-filter-project
-    * query); r13 reverts that and keeps the widening only at the call
-    * sites where it measurably pays. At production scale tables arrive
-    * as many files/row groups, the parallelism condition is false, and
-    * no exchange is added. */
-  def loadWide(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val df = load(spark, sfDir, name)
-    val keys = spreadKeys.getOrElse(name,
-      sys.error(s"no spread keys declared for table $name"))
-    val target = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    if (df.rdd.getNumPartitions * 4 < target)
-      df.repartition(target, keys.map(col): _*)
-    else df
-  }
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {
       // events.ts has been generated as both TIMESTAMP(NANOS) (which

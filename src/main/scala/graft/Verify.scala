@@ -9,8 +9,7 @@ object Verify {
     // optional extra args: restrict to the named queries (local iteration;
     // the driver always calls with exactly (sfDir, outDir) = full dump)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalSession.build(cpus)
+    val spark = LocalSession.build(LocalSession.cpus)
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries

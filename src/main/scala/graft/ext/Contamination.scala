@@ -36,7 +36,7 @@ object Contamination {
       k: Int = 5, w: Int = 4, maxDf: Long = Long.MaxValue,
       excludeSelfIds: Boolean = true,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val cf = corpus.select(col(idCol).as("corpus_id"),
+    val cf = spreadToSlots(corpus, idCol).select(col(idCol).as("corpus_id"),
       explode(TextStats.winnowFingerprints(col(textCol), k, w)).as("fp"))
     val capped =
       if (maxDf == Long.MaxValue) cf

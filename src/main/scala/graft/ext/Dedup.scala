@@ -906,7 +906,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     def sets(df: DataFrame, name: String) = df.select(
       col(idCol).as(name), array_distinct(TextStats.tokens(col(textCol))).as("_s"))
-    val rightSets = sets(right, "id_b").persistScoped
+    val rightSets = sets(spreadToSlots(right, idCol), "id_b").persistScoped
     val rightToks = rightSets
       .select($"id_b", explode($"_s").as("w"))
       .persistScoped // frequency table + candidate probe both read this

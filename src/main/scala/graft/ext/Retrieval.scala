@@ -194,7 +194,7 @@ object Retrieval {
       .where($"term" =!= "")
     val plen = pt.groupBy($"phrase_id").agg(count(lit(1)).as("_plen"))
     val pterms = pt.join(plen, "phrase_id")
-    val positions = corpus
+    val positions = spreadToSlots(corpus, idCol)
       .select(col(idCol).as("doc_id"),
         posexplode(TextStats.tokens(col(textCol))).as(Seq("pos", "term")))
       .where($"term" =!= "")

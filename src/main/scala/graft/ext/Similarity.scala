@@ -649,12 +649,8 @@ object Similarity {
     val e = embeddings.select($"vec_id", $"label", $"embedding",
         norm($"embedding").as("n"))
       .where($"n" > 0)
-    // the pair work runs in the stream side's tasks; a corpus that
-    // arrives as fewer scan partitions than task slots (one row group)
-    // would score every pair in one task, so spread it to the slots
-    val slots = e.sparkSession.sparkContext.defaultParallelism
-    val stream = if (e.rdd.getNumPartitions < slots) e.repartition(slots, $"vec_id") else e
-    val a = stream.toDF("id_a", "label", "vec_a", "n_a")
+    // the pair work runs in the stream side's tasks, so that side spreads
+    val a = spreadToSlots(e, "vec_id").toDF("id_a", "label", "vec_a", "n_a")
     val b = e.toDF("id_b", "label", "vec_b", "n_b")
     a.join(b, Seq("label"))
       .where($"id_a" < $"id_b")
@@ -1072,20 +1068,19 @@ object Similarity {
     val q = queries.select(col(idCol).as("query_id"),
       transform(col(vecCol), x =>
         floor(x.cast("double") * lit(1000000.0)).cast("long")).as("_q"))
-    val adc = (0 until m).map { j =>
-      val entry = element_at(col("codes"), j + 1)
-      // chained lookup: code value selects its precomputed distance
-      cbs(j).indices.foldLeft(lit(Long.MaxValue)) { (acc, c) =>
-        val d = cbs(j)(c).indices.map { i =>
-          val t = element_at(col("_q"), j * sub + i + 1) - lit(cbs(j)(c)(i))
-          t * t
-        }.reduce(_ + _)
-        when(entry === c, d).otherwise(acc)
-      }
-    }.reduce(_ + _)
+    // the table is built on the broadcast side, once per query; a
+    // per-pair when-chain over every codeword instead outgrew the 64 KB
+    // generated-method limit and ran interpreted
+    val table = q.select(col("query_id"), array((0 until m).map { j =>
+      val qj = slice(col("_q"), j * sub + 1, sub)
+      transform(typedLit(cbs(j).map(_.toSeq).toSeq), c =>
+        aggregate(zip_with(qj, c, (a, b) => (a - b) * (a - b)), lit(0L), _ + _))
+    }: _*).as("_tab"))
+    val adc = (0 until m).map(j =>
+      col("_tab").getItem(j).getItem(col("codes").getItem(j))).reduce(_ + _)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adist"), col("vec_id"))
-    broadcast(q).crossJoin(codes.select(col(idCol).as("vec_id"), col("codes")))
+    broadcast(table).crossJoin(codes.select(col(idCol).as("vec_id"), col("codes")))
       .select(col("query_id"), col("vec_id"), adc.as("adist"))
       .withColumn("rk", row_number().over(w))
       .where(col("rk") <= k)

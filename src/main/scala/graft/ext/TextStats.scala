@@ -394,7 +394,7 @@ object TextStats {
     // when the caller routes documents, not just verdicts — the
     // streaming corpusFilterSink does); still one narrow pass.
     val t = col("_toks")
-    docs
+    spreadToSlots(docs, "doc_id")
       .withColumn("_toks", tokens(col(textCol)))
       .withColumn("_chars",
         greatest(length(coalesce(col(textCol), lit(""))), lit(1)).cast("long"))
@@ -672,7 +672,7 @@ object TextStats {
       minCount: Long = 2, textCol: String = "text"): DataFrame = {
     require(window >= 1 && k >= 1 && minCount >= 1,
       s"need window/k/minCount >= 1, got $window/$k/$minCount")
-    docs
+    spreadToSlots(docs, textCol)
       .withColumn("_toks", tokens(col(textCol)))
       .select(explode(flatten(transform(col("_toks"), (w, i) =>
         transform(slice(col("_toks"), i + 2, lit(window)),
@@ -754,7 +754,7 @@ object TextStats {
 
   def analyze(docs: DataFrame, textCol: String = "text"): DataFrame = {
     val t = col("_toks")
-    docs
+    spreadToSlots(docs, "doc_id")
       .withColumn("_toks", tokens(col(textCol)))
       .withColumn("_awl", avgWordLen(t))
       .withColumn("_pr", punctRatio(col(textCol)))

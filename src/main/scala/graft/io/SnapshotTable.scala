@@ -53,7 +53,7 @@ object SnapshotTable {
   private def commitDir(path: String) = new Path(path, "_commits")
 
   private final case class Commit(version: Long, action: String, rows: Long,
-      batchId: Long = -1L, dirName: String = null) {
+      batchId: Long = -1L, dirName: String = null, query: String = null) {
     /** Pre-r11 records carry no dir — they used the shared `v=<n>`. */
     def dir: String = if (dirName == null) s"v=$version" else dirName
   }
@@ -75,10 +75,10 @@ object SnapshotTable {
         def field(k: String) = fieldOpt(k)
           .getOrElse(throw new IllegalStateException(
             s"corrupt commit record $name: $body"))
-        val dirName = """"dir":"([^"]+)"""".r
+        def text(k: String) = s""""$k":"([^"]+)"""".r
           .findFirstMatchIn(body).map(_.group(1)).orNull
         Commit(field("version").toLong, field("action"), field("rows").toLong,
-          fieldOpt("batch").map(_.toLong).getOrElse(-1L), dirName)
+          fieldOpt("batch").map(_.toLong).getOrElse(-1L), text("dir"), text("query"))
       }
       .sortBy(_.version)
   }
@@ -91,12 +91,12 @@ object SnapshotTable {
     * the caller retries (the data dir it wrote is orphaned debris the
     * winning chain never reads and a later attempt reclaims). */
   def write(df: DataFrame, path: String, mode: String = "append"): Long =
-    write(df, path, mode, batchId = -1L)
+    write(df, path, mode, -1L, null)
 
   private def write(df: DataFrame, path: String, mode: String,
-      batchId: Long): Long = {
+      batchId: Long, query: String): Long = {
     val next = latestVersion(df.sparkSession, path).getOrElse(0L) + 1L
-    writeAttempt(df, path, next, mode, batchId)
+    writeAttempt(df, path, next, mode, batchId, query)
   }
 
   /** One write ATTEMPT at an explicit version — the unit the
@@ -105,7 +105,7 @@ object SnapshotTable {
     * attempt-unique dir; on a lost commit race the staged dir is
     * DELETED before rethrowing, so the loser leaves no debris. */
   private[graft] def writeAttempt(df: DataFrame, path: String, next: Long,
-      mode: String, batchId: Long = -1L): Long = {
+      mode: String, batchId: Long = -1L, query: String = null): Long = {
     require(mode == "append" || mode == "overwrite",
       s"mode must be append|overwrite, got $mode")
     val spark = df.sparkSession
@@ -119,7 +119,7 @@ object SnapshotTable {
     df.observe(written, count(lit(1)).as("rows"))
       .write.mode("overwrite").parquet(dataDir.toString)
     val rows = written.get("rows").asInstanceOf[Long]
-    try commit(spark, path, next, mode, rows, batchId, dirName)
+    try commit(spark, path, next, mode, rows, batchId, dirName, query)
     catch { case e: java.io.IOException =>
       fs(spark).delete(dataDir, true) // reclaim the loser's staging
       throw e
@@ -154,14 +154,20 @@ object SnapshotTable {
       .map { n => f.delete(new Path(path, n), true); n }
   }
 
-  /** Idempotent streaming append for `foreachBatch`: a batch id already
-    * in the commit log is SKIPPED, so Structured Streaming's replay of
-    * the last uncommitted micro-batch after a restart cannot double-
-    * write — the commit log doubles as the sink's transaction log
-    * (exactly-once landing on top of at-least-once delivery). */
+  /** Idempotent streaming append for `foreachBatch`: a (query, batch
+    * id) pair already in the commit log is SKIPPED, so Structured
+    * Streaming's replay of the last uncommitted micro-batch after a
+    * restart cannot double-write — the commit log doubles as the sink's
+    * transaction log (exactly-once landing on top of at-least-once
+    * delivery). The query is the streaming query id, which lives in the
+    * checkpoint: a fresh checkpoint numbers its batches from 0 again
+    * under a new id, and its batches land. A record written without a
+    * query id matches its batch id under any query. */
   def appendBatch(df: DataFrame, path: String, batchId: Long): Option[Long] = {
-    if (commits(df.sparkSession, path).exists(_.batchId == batchId)) None
-    else Some(write(df, path, "append", batchId))
+    val query = df.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+    if (commits(df.sparkSession, path).exists(c =>
+        c.batchId == batchId && (c.query == null || c.query == query))) None
+    else Some(write(df, path, "append", batchId, query))
   }
 
   /** foreachBatch-ready writer: `stream` lands as one snapshot version
@@ -181,16 +187,15 @@ object SnapshotTable {
     * makes the rename refuse — we throw and the caller retries. */
   private[graft] def commit(spark: SparkSession, path: String,
       version: Long, mode: String, rows: Long, batchId: Long = -1L,
-      dataDirName: String = null): Unit = {
+      dataDirName: String = null, query: String = null): Unit = {
     val f = fs(spark)
     val dir = commitDir(path)
     f.mkdirs(dir)
     val tmp = new Path(dir, s"_tmp_$version")
     val out = f.create(tmp, true)
-    val dirField =
-      if (dataDirName == null) "" else s""","dir":"$dataDirName""""
+    def text(k: String, v: String) = if (v == null) "" else s""","$k":"$v""""
     try out.write(
-      s"""{"version":$version,"action":"$mode","rows":$rows,"batch":$batchId$dirField}\n"""
+      s"""{"version":$version,"action":"$mode","rows":$rows,"batch":$batchId${text("dir", dataDirName)}${text("query", query)}}\n"""
         .getBytes("UTF-8"))
     finally out.close()
     val fin = new Path(dir, s"$version.json")
@@ -267,7 +272,7 @@ object SnapshotTable {
           .groupBy(keyCols.map(col): _*)
           .agg(sum(col("n")).as("n"), sum(col("total")).as("total"))
       }
-    write(newState, statePath, "overwrite", batchId = latest)
+    write(newState, statePath, "overwrite", latest, null)
     latest
   }
 

@@ -300,7 +300,7 @@ object ExtQueries extends QueryGroup {
     * doc's distinct tokens. Oracle is the naive probe×corpus form —
     * the prefix filter is complete, so results are identical. */
   def containmentQ(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.loadWide(spark, dir, "documents")
+    val docs = load(spark, dir, "documents")
     Dedup.containmentJoin(docs.where($"doc_id" % 100 === 1), docs, 9000)
       .orderBy($"id_a", $"id_b")
   }
@@ -1777,7 +1777,7 @@ object ExtQueries extends QueryGroup {
     * aggregate + strict-prefix min); the oracle runs the O(n²)
     * NOT-EXISTS dominance directly, independently checking it. */
   def paretoDocs(spark: SparkSession, dir: String): DataFrame = {
-    val q = TextStats.analyze(Tables.loadWide(spark, dir, "documents"))
+    val q = TextStats.analyze(load(spark, dir, "documents"))
       .select($"doc_id", $"quality_q4", $"n_tokens")
     Sampling.paretoFrontier(q, "quality_q4", "n_tokens", "doc_id")
       .select($"doc_id", $"quality_q4", $"n_tokens")
@@ -3663,7 +3663,7 @@ object ExtQueries extends QueryGroup {
     // documented per-gram re-tokenize hazard (measured 12 s at sf0.1
     // vs 1.5 s for the cascade itself). Materializing filterCorpus
     // once makes the metrics attributes for both fan-out branches.
-    val f = TextStats.filterCorpus(Tables.loadWide(spark, dir, "documents"))
+    val f = TextStats.filterCorpus(load(spark, dir, "documents"))
       .persistScoped
     val perRule = f.select($"n_tokens", explode($"reasons").as("rule"))
       .groupBy($"rule")
@@ -4173,7 +4173,7 @@ object ExtQueries extends QueryGroup {
   /** Per-language token-budget selection: an independent 4k-token
     * quota per lang, best distinct-ratio docs first. */
   def budgetSelectLangQ(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.loadWide(spark, dir, "documents")
+    val docs = load(spark, dir, "documents")
     val toks = TextStats.tokens($"text")
     val scored = docs.select($"doc_id", $"lang", $"text",
         size(array_distinct(toks)).cast("long").as("_d"),
@@ -4363,7 +4363,7 @@ object ExtQueries extends QueryGroup {
     * fingerprints with the probe subset (doc_id % 101 = 0 stands in for
     * an eval set). Bucketed by fingerprint — no all-pairs. */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.loadWide(spark, dir, "documents")
+    val docs = load(spark, dir, "documents")
     Contamination.overlaps(docs, docs.where($"doc_id" % 101 === 0), minShared = 3)
       .orderBy($"corpus_id", $"probe_id")
   }
@@ -5005,7 +5005,7 @@ object ExtQueries extends QueryGroup {
     * word2vec/windowed-PMI extraction; the oracle re-derives the pair
     * explode with inclusive list slicing. */
   def skipgramsQ(spark: SparkSession, dir: String): DataFrame =
-    TextStats.skipgrams(Tables.loadWide(spark, dir, "documents"),
+    TextStats.skipgrams(load(spark, dir, "documents"),
       window = 3, k = 20, minCount = 2)
 
   private val skipgramsSql =

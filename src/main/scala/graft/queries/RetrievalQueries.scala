@@ -147,7 +147,7 @@ object RetrievalQueries extends QueryGroup {
     * scan comparing token slices — so the hash match pins phrase
     * semantics (adjacency, overlaps, repeated terms), not a replay. */
   def phraseSearch(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.loadWide(spark, dir, "documents")
+    val docs = load(spark, dir, "documents")
     val probes = docs.where($"doc_id" % 100 === 1)
       .select($"doc_id".as("phrase_id"),
         array_join(slice(TextStats.tokens($"text"), 1, 3), " ").as("phrase"))

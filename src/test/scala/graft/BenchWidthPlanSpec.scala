@@ -12,9 +12,8 @@ import graft.queries._
   * re-plans scan-shaped light queries at the bench width (32) and
   * asserts the Exchange count does NOT depend on the width, so a global
   * scan-path change can never again ship visible only to the bench.
-  * It also pins the ONE width-dependent behavior that is intentional:
-  * [[Tables.loadWide]]'s explicit opt-in widening for document-cascade
-  * operators fires at bench width and self-disables at test width.
+  * It also pins the one spread rule ([[graft.ext.spreadToSlots]]): a
+  * narrow input reaches the task slots whatever the shuffle width.
   */
 class BenchWidthPlanSpec extends SparkSpec {
 
@@ -48,17 +47,33 @@ class BenchWidthPlanSpec extends SparkSpec {
     }
   }
 
-  test("loadWide widens only when the scan is far narrower than the " +
-      "shuffle width") {
+  test("spreadToSlots takes a narrow input to the task slots without a job") {
     // sf0.001 documents is a single-row-group file: 1 scan partition
-    atWidth(32) {
-      assert(Tables.loadWide(spark, sfDir, "documents")
-        .rdd.getNumPartitions === 32)
+    val slots = spark.sparkContext.defaultParallelism
+    val docs = Tables.load(spark, sfDir, "documents")
+    assert(docs.rdd.getNumPartitions < slots)
+    Seq(4, 32).foreach { n =>
+      val (spread, log) = atWidth(n)(JobLog.of(spark)(
+        graft.ext.spreadToSlots(Tables.load(spark, sfDir, "documents"), "doc_id")))
+      assert(log.jobs.isEmpty, s"the probe submitted jobs: ${log.stageNames}")
+      assert(spread.rdd.getNumPartitions === slots, s"at shuffle width $n")
     }
-    atWidth(4) {
-      assert(Tables.loadWide(spark, sfDir, "documents")
-        .rdd.getNumPartitions === 1)
-    }
+    // a cached narrow scan spreads too: its count comes from the plan it caches
+    val cached = Tables.load(spark, sfDir, "documents").persist()
+    try {
+      val (spread, log) = JobLog.of(spark)(graft.ext.spreadToSlots(cached, "doc_id"))
+      assert(log.jobs.isEmpty, s"the probe submitted jobs: ${log.stageNames}")
+      assert(spread.rdd.getNumPartitions === slots)
+    } finally cached.unpersist()
+    // as wide as the slots already: unchanged
+    val wide = spark.range(0L, 100L, 1L, slots).toDF("doc_id")
+    assert(graft.ext.spreadToSlots(wide, "doc_id") eq wide)
+    // past an exchange the count is the shuffle width, and reading it
+    // would run the exchange's stages: unchanged, and no job
+    val shuffled = docs.groupBy($"lang").count()
+    val (kept, log) = JobLog.of(spark)(graft.ext.spreadToSlots(shuffled, "lang"))
+    assert(kept eq shuffled)
+    assert(log.jobs.isEmpty, s"the probe submitted jobs: ${log.stageNames}")
   }
 
   test("near-dup kernel spreads a one-partition scan to the task slots " +

@@ -130,4 +130,14 @@ class IoFormatsSpec extends SparkSpec {
       Seq("l_orderkey", "l_partkey", "l_linenumber", "quantity"))
     assert(got.isEmpty)
   }
+
+  test("a round-trip query built twice leaves one scratch dir per prefix") {
+    // graft_s1 is a name prefix of graft_s17's and graft_s18's dirs
+    Seq("s1_xlsx_roundtrip" -> "graft_s1", "s18_snapshot_roundtrip" -> "graft_s18")
+      .foreach { case (q, prefix) =>
+        (1 to 2).foreach(_ => SparkEntry.queries(q)(spark, sfDir).collect())
+        val left = Files.list(graft.io.Scratch.root.resolve(prefix))
+        try assert(left.count() === 1L, q) finally left.close()
+      }
+  }
 }

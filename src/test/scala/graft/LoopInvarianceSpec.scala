@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ext.{Dedup, Sampling, Similarity, Vocab}
+import graft.ext.{Contamination, Dedup, Retrieval, Sampling, Similarity, TextStats, Vocab}
 import graft.ops._
 import graft.streaming.StreamingIngest
 
-/** Every iterative operator gives the same answer whatever the physical
+/** Every iterative operator, and every operator that spreads a narrow
+  * input to the task slots, gives the same answer whatever the physical
   * layout: identical collected rows at `spark.sql.shuffle.partitions`
-  * ∈ {1, 7, 64} × AQE on/off. A loop whose result leaned on tie order,
+  * ∈ {1, 7, 64} × AQE on/off. A result that leaned on tie order,
   * partition-local order or float summation order would split here. */
 class LoopInvarianceSpec extends SparkSpec {
   import spark.implicits._
@@ -137,5 +138,20 @@ class LoopInvarianceSpec extends SparkSpec {
       Seq(cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.mkString(",")) }
         .toDF("cell", "centroid"))
     }
+  }
+
+  test("the spread document operators are layout-invariant") {
+    // sf0.001 documents is one scan partition, so every operator spreads
+    def docs = Tables.load(spark, sfDir, "documents")
+    invariant("TextStats.analyze")(Seq(TextStats.analyze(docs)))
+    invariant("TextStats.filterCorpus")(Seq(TextStats.filterCorpus(docs)))
+    invariant("TextStats.skipgrams")(Seq(TextStats.skipgrams(docs, window = 3, k = 20)))
+    invariant("Dedup.containmentJoin")(Seq(
+      Dedup.containmentJoin(docs.where($"doc_id" % 100 === 1), docs, 9000)))
+    invariant("Contamination.overlaps")(Seq(
+      Contamination.overlaps(docs, docs.where($"doc_id" % 101 === 0), minShared = 3)))
+    invariant("Retrieval.phraseSearch")(Seq(Retrieval.phraseSearch(docs,
+      docs.where($"doc_id" % 100 === 1).select($"doc_id".as("phrase_id"),
+        array_join(slice(TextStats.tokens($"text"), 1, 3), " ").as("phrase")))))
   }
 }

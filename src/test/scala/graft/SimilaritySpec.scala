@@ -452,8 +452,15 @@ class SimilaritySpec extends SparkSpec {
     val cbs = Similarity.pqCodebooks(corpus)
     val codes = Similarity.productQuantize(corpus)
     val queries = corpus.where($"vec_id" < 4)
-    val got = Similarity.pqTopK(queries, codes, cbs, k = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    def topK() = Similarity.pqTopK(queries, codes, cbs, k = 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val rows = topK()
+    // the ADC stage compiles: with no interpreted fallback allowed it
+    // returns the same rows
+    val key = "spark.sql.codegen.fallback"
+    spark.conf.set(key, "false")
+    try assert(topK() === rows) finally spark.conf.unset(key)
+    val got = rows.map(r => (r._1, r._2))
       .groupBy(_._1).map { case (q, a) => q -> a.map(_._2).toSet }
     // ADC distance is cluster-resolving: every query's top-10 stays in
     // its own cluster (self included)

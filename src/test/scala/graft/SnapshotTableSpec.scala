@@ -180,6 +180,23 @@ class SnapshotTableSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a fresh checkpoint appending to an existing table lands its batches") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val p = tmpDir()
+    def run(batches: Seq[Long]*): Unit = {
+      val input = MemoryStream[Long]
+      val q = SnapshotTable.appendStream(input.toDF().toDF("id"), p, tmpDir()).start()
+      try batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      finally q.stop()
+    }
+    run(Seq(1L, 2L), Seq(3L))
+    // the second checkpoint numbers its batches from 0 again
+    run(Seq(4L), Seq(5L, 6L))
+    assert(ids(p) === (1L to 6L).toSet)
+    assert(rowsByVersion(p) === Seq(1L -> 2L, 2L -> 1L, 3L -> 1L, 4L -> 2L))
+  }
+
   private def rowsByVersion(p: String): Seq[(Long, Long)] =
     SnapshotTable.history(spark, p).orderBy("version")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toSeq
