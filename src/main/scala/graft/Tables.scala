@@ -72,9 +72,6 @@ object Tables {
         df
     }
   }
-
-  /** Small dimensions that should always be broadcast when joined. */
-  val broadcastable: Set[String] = Set("region", "nation", "supplier", "part")
 }
 
 /** One declared engine operator: the Spark implementation plus (optionally)

@@ -623,7 +623,7 @@ object Frequency {
     * long — quantize or shard first at extreme key cardinality.
     *
     * Returns one row: (n_keys, n_rows, max_count, top_share_bp,
-    * gini_bp). */
+    * gini_bp); on no keys n_keys is 0 and the rest NULL. */
   def skewReport(df: DataFrame, keyCol: String): DataFrame = {
     val kc = df.where(col(keyCol).isNotNull)
       .groupBy(col(keyCol)).agg(count(lit(1)).as("_c"))
@@ -634,7 +634,7 @@ object Frequency {
     cum.join(cc, cum("_v") === cc("_c").cast("double"))
       .select($"_v".cast("long").as("_cv"), $"_f", $"_cum", $"_n")
       .agg(
-        max($"_n").as("n_keys"),
+        coalesce(max($"_n"), lit(0L)).as("n_keys"),
         sum($"_cv" * $"_f").as("n_rows"),
         max($"_cv").as("max_count"),
         // NB: `div`, not `/` — Column./ on longs silently yields double

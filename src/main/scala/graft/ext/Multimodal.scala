@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns (SURVEY §7.9): image/audio/video as opaque `binary`
-  * payloads plus typed metadata, with decode / feature-extract /
-  * frame-sample stages.
+  * payloads plus typed metadata, with one decode stage.
   *
   * The decode step is STUBBED — this container has no codec libraries —
   * with a clearly-marked deterministic fake ([[FakeCodec]]). Everything
@@ -22,9 +21,6 @@ object Multimodal {
   /** Decoded metadata (what a real codec would surface). */
   case class MediaMeta(asset_id: Long, kind: String, n_bytes: Int,
       width: Int, height: Int, n_frames: Int, sample_rate_hz: Int)
-
-  /** Feature vector extracted per asset (fixed 8-dim here). */
-  case class MediaFeatures(asset_id: Long, features: Array[Float])
 
   /** STUB CODEC — deterministic fake standing in for image/audio/video
     * decoding. Derives pseudo-metadata purely from the byte content so
@@ -43,13 +39,6 @@ object Multimodal {
         case "audio" => MediaMeta(a.asset_id, a.kind, n, 0, 0, 0, Seq(16000, 22050, 44100)(sum % 3))
         case _       => MediaMeta(a.asset_id, a.kind, n, 320 + sum % 1600, 240 + (sum / 3) % 840, 1 + sum % 300, 0)
       }
-    }
-    /** Fake 8-dim feature: byte histogram folded into 8 buckets, L1-normalized. */
-    def features(a: MediaAsset): MediaFeatures = {
-      val buckets = new Array[Float](8)
-      a.payload.foreach(b => buckets((b & 0xff) % 8) += 1f)
-      val total = math.max(a.payload.length, 1).toFloat
-      MediaFeatures(a.asset_id, buckets.map(_ / total))
     }
   }
 
@@ -74,394 +63,5 @@ object Multimodal {
       val codec = FakeCodec.open()
       it.map(codec.decode)
     }
-  }
-
-  /** Feature-extract stage, same per-partition batch pattern. */
-  def extractFeatures(assets: Dataset[MediaAsset]): Dataset[MediaFeatures] = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions { it =>
-      val codec = FakeCodec.open()
-      it.map(codec.features)
-    }
-  }
-
-  /** Frame-sample stage: 1 row per sampled frame (video only), every
-    * `stride`-th frame — a generator (explode) over decoded metadata. */
-  def sampleFrames(meta: Dataset[MediaMeta], stride: Int): DataFrame = {
-    import meta.sparkSession.implicits._
-    meta.toDF()
-      .where(col("kind") === "video" && col("n_frames") > 0)
-      .select(col("asset_id"),
-        explode(sequence(lit(0), col("n_frames") - 1, lit(stride))).as("frame_idx"))
-  }
-
-  // ----- REAL JVM codec (round 7): images and audio decode with ZERO
-  // external dependencies — `javax.imageio` ships PNG/BMP/GIF/JPEG and
-  // `javax.sound.sampled` ships WAV/PCM in every JDK. Only VIDEO keeps
-  // the honest stub (no JVM-built-in video codec exists). -----
-
-  /** Decoded row with a quarantine column: a corrupt payload NEVER
-    * fails the job — it lands with `error` set (the JSONL-quarantine
-    * discipline applied to media). */
-  case class MediaDecoded(asset_id: Long, kind: String, n_bytes: Int,
-      width: Int, height: Int, n_frames: Long, sample_rate_hz: Int,
-      error: String)
-
-  /** Per-asset 64-bit average-hash (aHash): 8×8 nearest-neighbor
-    * grayscale thumbnail, bit i set iff pixel i's gray EXCEEDS the
-    * integer mean — the standard perceptual fingerprint for image
-    * near-dup at corpus scale. Deterministic: integer grayscale
-    * (299r+587g+114b)/1000, floor sampling coordinates, strict
-    * compare. */
-  case class ImageHash(asset_id: Long, ahash: Long)
-
-  final class JvmCodec {
-    import java.io.ByteArrayInputStream
-
-    def decode(a: MediaAsset): MediaDecoded = {
-      val n = a.payload.length
-      a.kind match {
-        case "image" =>
-          try {
-            val img = javax.imageio.ImageIO.read(new ByteArrayInputStream(a.payload))
-            if (img == null)
-              MediaDecoded(a.asset_id, a.kind, n, 0, 0, 0, 0, "undecodable image")
-            else
-              MediaDecoded(a.asset_id, a.kind, n, img.getWidth, img.getHeight, 1, 0, null)
-          } catch { case e: Exception =>
-            MediaDecoded(a.asset_id, a.kind, n, 0, 0, 0, 0, s"image: ${e.getMessage}")
-          }
-        case "audio" =>
-          try {
-            val in = javax.sound.sampled.AudioSystem
-              .getAudioInputStream(new ByteArrayInputStream(a.payload))
-            try {
-              val f = in.getFormat
-              MediaDecoded(a.asset_id, a.kind, n, 0, 0, in.getFrameLength,
-                math.round(f.getSampleRate), null)
-            } finally in.close()
-          } catch { case e: Exception =>
-            MediaDecoded(a.asset_id, a.kind, n, 0, 0, 0, 0, s"audio: ${e.getMessage}")
-          }
-        case other =>
-          MediaDecoded(a.asset_id, other, n, 0, 0, 0, 0,
-            s"no JVM codec for kind '$other'")
-      }
-    }
-
-    /** 8×8 grayscale thumbnail as 64 ints in [0, 255] — nearest-neighbor
-      * sampling (floor coords), integer luma. Also the 64-dim thumbnail
-      * feature vector for the embedding operators. */
-    def thumbnail8(img: java.awt.image.BufferedImage): Array[Int] = {
-      val out = new Array[Int](64)
-      var y = 0
-      while (y < 8) {
-        var x = 0
-        while (x < 8) {
-          val sx = x * img.getWidth / 8
-          val sy = y * img.getHeight / 8
-          val rgb = img.getRGB(sx, sy)
-          val gray = (299 * ((rgb >> 16) & 0xff) + 587 * ((rgb >> 8) & 0xff) +
-            114 * (rgb & 0xff)) / 1000
-          out(y * 8 + x) = gray
-          x += 1
-        }
-        y += 1
-      }
-      out
-    }
-
-    def aHash(a: MediaAsset): Option[ImageHash] =
-      try {
-        val img = javax.imageio.ImageIO.read(
-          new ByteArrayInputStream(a.payload))
-        if (img == null || img.getWidth < 8 || img.getHeight < 8) None
-        else {
-          val t = thumbnail8(img)
-          val mean = t.sum / 64
-          var h = 0L
-          var i = 0
-          while (i < 64) { if (t(i) > mean) h |= (1L << i); i += 1 }
-          Some(ImageHash(a.asset_id, h))
-        }
-      } catch { case _: Exception => None }
-
-    /** WAV frame-sample: every `stride`-th PCM frame's first channel as
-      * a float in [−1, 1] (16-bit signed little-endian assumed — the
-      * canonical WAV PCM layout). */
-    def sampleAudio(a: MediaAsset, stride: Int): Array[Float] =
-      try {
-        val in = javax.sound.sampled.AudioSystem
-          .getAudioInputStream(new ByteArrayInputStream(a.payload))
-        try {
-          val f = in.getFormat
-          val frameSize = f.getFrameSize
-          val bytes = in.readAllBytes()
-          val n = bytes.length / frameSize
-          val out = scala.collection.mutable.ArrayBuffer.empty[Float]
-          var i = 0
-          while (i < n) {
-            val off = i * frameSize
-            val s = ((bytes(off + 1) << 8) | (bytes(off) & 0xff)).toShort
-            out += s / 32768f
-            i += stride
-          }
-          out.toArray
-        } finally in.close()
-      } catch { case _: Exception => Array.empty[Float] }
-  }
-
-  /** Real decode stage — same per-partition lifecycle as the stub path
-    * ([[decode]]), but through the JDK codecs; corrupt payloads
-    * quarantine instead of failing. Narrow, zero shuffle. */
-  def decodeJvm(assets: Dataset[MediaAsset]): Dataset[MediaDecoded] = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions { it =>
-      val codec = new JvmCodec
-      it.map(codec.decode)
-    }
-  }
-
-  /** Perceptual-hash image near-dup — the production image-dedup shape
-    * on pure JDK decode: aHash per image (narrow), then the
-    * simhash-style BANDED candidate join (four 16-bit bands of the
-    * 64-bit hash; two images within Hamming distance d share ≥ one
-    * band whenever d ≤ 3 — pigeonhole over 4 bands), exact popcount
-    * verify on candidates only. Never an all-pairs product. */
-  def imageNearDup(assets: Dataset[MediaAsset], maxHamming: Int = 3)
-      : DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4-band LSH guarantees completeness only for maxHamming <= 3, got $maxHamming")
-    import assets.sparkSession.implicits.newProductEncoder
-    val hashes = assets.mapPartitions { it =>
-      val codec = new JvmCodec
-      it.flatMap(codec.aHash)
-    }.toDF("asset_id", "ahash").persistScoped
-    val bands = hashes.select(col("asset_id"), col("ahash"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          (shiftright(col("ahash"), b * 16).bitwiseAND(lit(0xffffL)))
-            .as("key"))): _*)).as("bk"))
-      .select(col("asset_id"), col("ahash"), col("bk.band").as("band"),
-        col("bk.key").as("key"))
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.asset_id") < col("b.asset_id"))
-      .select(col("a.asset_id").as("id_a"), col("b.asset_id").as("id_b"),
-        col("a.ahash").as("ha"), col("b.ahash").as("hb"))
-      .distinct()
-    cand
-      .withColumn("hamming",
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
-      .where(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
-
-  // ----- VIDEO metadata (round 11): full video DECODE stays out of
-  // scope (no JVM-built-in codec), but the CONTAINER layouts are
-  // public-spec and zero-dep — an ISO BMFF (MP4) box walk and a
-  // Matroska/WebM EBML walk surface duration, track count, and
-  // resolution WITHOUT touching a single coded frame, which is exactly
-  // what corpus curation needs from video at 100 TB (filter by
-  // duration/resolution, quarantine truncated uploads, defer decode to
-  // the GPU stage). Specs: ISO/IEC 14496-12 (box structure: u32 size +
-  // fourcc, size 1 = u64 largesize, size 0 = to EOF; mvhd carries
-  // timescale+duration, tkhd carries 16.16-fixed width/height) and the
-  // Matroska EBML RFC 8794 (vint-coded element id/size; Segment >
-  // Info > TimestampScale/Duration, Segment > Tracks > TrackEntry >
-  // Video > PixelWidth/PixelHeight). -----
-
-  /** Container-level video metadata; `error` set (and numerics zeroed)
-    * on unrecognized or TRUNCATED containers — quarantine, never a
-    * task failure. duration_ms is rounded down; n_tracks counts ALL
-    * tracks (audio+video+subs); width/height come from the first track
-    * that declares a nonzero resolution. */
-  case class VideoMeta(asset_id: Long, container: String,
-      duration_ms: Long, n_tracks: Int, width: Int, height: Int,
-      error: String)
-
-  /** Zero-dependency MP4/MKV metadata walker. Pure function of the
-    * payload bytes — safe to call per-row inside mapPartitions. */
-  object VideoContainer {
-    private final class Truncated(msg: String)
-        extends RuntimeException(msg)
-
-    private def u16(b: Array[Byte], o: Int): Int = {
-      if (o + 2 > b.length) throw new Truncated(s"u16 at $o past ${b.length}")
-      ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    }
-    private def u32(b: Array[Byte], o: Int): Long = {
-      if (o + 4 > b.length) throw new Truncated(s"u32 at $o past ${b.length}")
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-    }
-    private def u64(b: Array[Byte], o: Int): Long = (u32(b, o) << 32) | u32(b, o + 4)
-    private def fourcc(b: Array[Byte], o: Int): String = {
-      if (o + 4 > b.length) throw new Truncated(s"fourcc at $o past ${b.length}")
-      new String(b, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    }
-
-    /** Walk the boxes in [from, to), calling f(type, payloadFrom,
-      * payloadTo). Throws Truncated when a declared size runs past the
-      * window — the quarantine trigger for cut-off uploads. */
-    private def mp4Walk(b: Array[Byte], from: Int, to: Int)(
-        f: (String, Int, Int) => Unit): Unit = {
-      var o = from
-      while (o < to) {
-        if (o + 8 > to) throw new Truncated(s"box header at $o past $to")
-        val size0 = u32(b, o)
-        val typ = fourcc(b, o + 4)
-        var payload = o + 8
-        val size =
-          if (size0 == 1L) { val s = u64(b, o + 8); payload = o + 16; s }
-          else if (size0 == 0L) (to - o).toLong
-          else size0
-        if (size < (payload - o) || o + size > to)
-          throw new Truncated(s"box $typ size $size at $o past $to")
-        f(typ, payload, o + size.toInt)
-        o += size.toInt
-      }
-    }
-
-    private def parseMp4(b: Array[Byte]): VideoMeta = {
-      var durationMs = 0L
-      var nTracks = 0
-      var w = 0
-      var h = 0
-      mp4Walk(b, 0, b.length) { (typ, from, to) =>
-        if (typ == "moov") mp4Walk(b, from, to) { (t2, f2, t2e) =>
-          if (t2 == "mvhd") {
-            val v = b(f2) & 0xff
-            val (scale, dur) =
-              if (v == 1) (u32(b, f2 + 20), u64(b, f2 + 24))
-              else (u32(b, f2 + 12), u32(b, f2 + 16))
-            if (scale > 0) durationMs = dur * 1000L / scale
-          } else if (t2 == "trak") {
-            nTracks += 1
-            mp4Walk(b, f2, t2e) { (t3, f3, _) =>
-              if (t3 == "tkhd") {
-                val v = b(f3) & 0xff
-                val wOff = if (v == 1) f3 + 88 else f3 + 76
-                // 16.16 fixed point; first nonzero-resolution track wins
-                val tw = (u32(b, wOff) >> 16).toInt
-                val th = (u32(b, wOff + 4) >> 16).toInt
-                if (w == 0 && tw > 0 && th > 0) { w = tw; h = th }
-              }
-            }
-          }
-        }
-      }
-      VideoMeta(0L, "mp4", durationMs, nTracks, w, h, null)
-    }
-
-    /** EBML vint: leading-zero count of the first byte gives the
-      * length; `keepMarker` keeps the marker bit (element IDs are
-      * conventionally written WITH it, e.g. Segment = 0x18538067). */
-    private def vint(b: Array[Byte], o: Int, keepMarker: Boolean): (Long, Int) = {
-      if (o >= b.length) throw new Truncated(s"vint at $o past ${b.length}")
-      val fb = b(o) & 0xff
-      if (fb == 0) throw new Truncated(s"invalid vint 0x00 at $o")
-      val len = 8 - (31 - Integer.numberOfLeadingZeros(fb))
-      if (o + len > b.length) throw new Truncated(s"vint len $len at $o past end")
-      var v = if (keepMarker) fb.toLong else (fb & (0xff >>> len)).toLong
-      var i = 1
-      while (i < len) { v = (v << 8) | (b(o + i) & 0xff); i += 1 }
-      (v, len)
-    }
-
-    private def ebmlUint(b: Array[Byte], from: Int, to: Int): Long = {
-      var v = 0L
-      var i = from
-      while (i < to) { v = (v << 8) | (b(i) & 0xff); i += 1 }
-      v
-    }
-
-    private def ebmlFloat(b: Array[Byte], from: Int, to: Int): Double =
-      (to - from) match {
-        case 4 => java.lang.Float.intBitsToFloat(u32(b, from).toInt).toDouble
-        case 8 => java.lang.Double.longBitsToDouble(u64(b, from))
-        case 0 => 0.0
-        case n => throw new Truncated(s"EBML float of $n bytes at $from")
-      }
-
-    /** Walk EBML elements in [from, to); unknown-size elements (all
-      * size bits set — the streaming-Segment case) extend to the
-      * window end. */
-    private def ebmlWalk(b: Array[Byte], from: Int, to: Int)(
-        f: (Long, Int, Int) => Unit): Unit = {
-      var o = from
-      while (o < to) {
-        val (id, idLen) = vint(b, o, keepMarker = true)
-        val (size, szLen) = vint(b, o + idLen, keepMarker = false)
-        val payload = o + idLen + szLen
-        val unknown = size == (1L << (7 * szLen)) - 1
-        // bound-check in Long BEFORE narrowing: a hostile declared size
-        // > Int.MaxValue would wrap under toInt (e.g. 2^32 -> 0) and
-        // sail past the guard, walking misaligned bytes into plausible-
-        // but-wrong metadata instead of a Truncated quarantine (mp4Walk
-        // already checks in Long)
-        val endL = if (unknown) to.toLong else payload.toLong + size
-        if (endL > to) throw new Truncated(s"EBML element 0x${id.toHexString} past $to")
-        val end = endL.toInt
-        f(id, payload, end)
-        o = end
-      }
-    }
-
-    private def parseMkv(b: Array[Byte]): VideoMeta = {
-      var durationMs = 0L
-      var nTracks = 0
-      var w = 0
-      var h = 0
-      var tsScaleNs = 1000000L // Matroska default
-      var durationScaled = 0.0
-      ebmlWalk(b, 0, b.length) { (id, from, to) =>
-        if (id == 0x18538067L) ebmlWalk(b, from, to) { (id2, f2, t2) => // Segment
-          if (id2 == 0x1549A966L) ebmlWalk(b, f2, t2) { (id3, f3, t3) => // Info
-            if (id3 == 0x2AD7B1L) tsScaleNs = ebmlUint(b, f3, t3)
-            else if (id3 == 0x4489L) durationScaled = ebmlFloat(b, f3, t3)
-          }
-          else if (id2 == 0x1654AE6BL) ebmlWalk(b, f2, t2) { (id3, f3, t3) => // Tracks
-            if (id3 == 0xAEL) { // TrackEntry
-              nTracks += 1
-              ebmlWalk(b, f3, t3) { (id4, f4, t4) =>
-                if (id4 == 0xE0L) ebmlWalk(b, f4, t4) { (id5, f5, t5) => // Video
-                  if (id5 == 0xB0L && w == 0) w = ebmlUint(b, f5, t5).toInt
-                  else if (id5 == 0xBAL && h == 0) h = ebmlUint(b, f5, t5).toInt
-                }
-              }
-            }
-          }
-        }
-      }
-      if (durationScaled > 0)
-        durationMs = (durationScaled * tsScaleNs / 1e6).toLong
-      VideoMeta(0L, "mkv", durationMs, nTracks, w, h, null)
-    }
-
-    /** Sniff + parse; never throws. */
-    def parse(payload: Array[Byte]): VideoMeta =
-      try {
-        if (payload.length >= 12 && fourcc(payload, 4) == "ftyp")
-          parseMp4(payload)
-        else if (payload.length >= 4 && u32(payload, 0) == 0x1A45DFA3L)
-          parseMkv(payload)
-        else VideoMeta(0L, "unknown", 0, 0, 0, 0,
-          "video: unrecognized container (mp4/mkv metadata walk supported)")
-      } catch {
-        case e: Truncated =>
-          VideoMeta(0L, "truncated", 0, 0, 0, 0, s"video: ${e.getMessage}")
-        case e: Exception =>
-          VideoMeta(0L, "error", 0, 0, 0, 0, s"video: ${e.getMessage}")
-      }
-  }
-
-  /** Container metadata for every `video` asset — narrow, no shuffle,
-    * corrupt/truncated payloads quarantined via `error`. */
-  def videoMeta(assets: Dataset[MediaAsset]): Dataset[VideoMeta] = {
-    import assets.sparkSession.implicits._
-    assets.filter(_.kind == "video").mapPartitions(_.map { a =>
-      VideoContainer.parse(a.payload).copy(asset_id = a.asset_id)
-    })
   }
 }

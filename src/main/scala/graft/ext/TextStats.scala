@@ -96,8 +96,8 @@ object TextStats {
   /** Token count. */
   def tokenCount(toks: Column): Column = size(toks)
 
-  /** Quality-score components (length / punctuation / stopword ratios) and
-    * a blended score in [0,1] — the standard heuristic-filter shape. */
+  /** Quality-score components: length / punctuation / stopword ratios,
+    * the standard heuristic-filter shape. */
   def avgWordLen(toks: Column): Column =
     aggregate(toks, lit(0.0), (acc, w) => acc + length(w)) /
       greatest(size(toks).cast("double"), lit(1.0))
@@ -109,15 +109,6 @@ object TextStats {
   def stopwordRatio(toks: Column): Column =
     stopwordCount(toks, "en").cast("double") /
       greatest(size(toks).cast("double"), lit(1.0))
-
-  /** Blended quality score: rewards 3–8 char mean words, some stopwords,
-    * low punctuation. Clamped to [0,1]. */
-  def qualityScore(text: Column, toks: Column): Column = {
-    val lenScore = lit(1.0) - least(abs(avgWordLen(toks) - 5.5) / 5.5, lit(1.0))
-    val stopScore = least(stopwordRatio(toks) * 5.0, lit(1.0))
-    val punctScore = lit(1.0) - least(punctRatio(text) * 4.0, lit(1.0))
-    (lenScore * 0.4 + stopScore * 0.3 + punctScore * 0.3)
-  }
 
   /** Document fingerprint: md5 over the sorted distinct token set — an
     * order-insensitive content signature (rolling-hash family; md5 keeps

@@ -104,28 +104,10 @@ case class FuzzRatio(left: Expression, right: Expression) extends BinaryExpressi
   override def prettyName: String = "fuzz_ratio"
 }
 
-/** Column-level entry points for the custom expressions, plus SQL
-  * registration so `spark.sql("SELECT fuzz_ratio(a, b) ...")` works
-  * (the `SparkSessionExtensions.injectFunction` seam without needing a
-  * dedicated session builder). */
+/** Column-level entry points for the custom expressions. SQL reaches the
+  * same expressions through [[graft.plans.GraftExtensions]], which every
+  * graft session installs. */
 object CustomExpressions {
-
-  /** Register all custom expressions as SQL functions on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("dms_to_decimal",
-      exprs => DmsToDecimal(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("fuzz_ratio",
-      exprs => FuzzRatio(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("fuzz_wratio",
-      exprs => FuzzWRatio(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product",
-      exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaro_winkler_bp",
-      exprs => JaroWinklerBp(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("damerau_levenshtein",
-      exprs => DamerauLevenshtein(exprs(0), exprs(1)), "scala_udf")
-  }
   import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpr}
 
   def dms_to_decimal(c: Column): Column =

@@ -43,7 +43,7 @@ object Layout {
     * with ZERO exchanges — the shuffle is paid once when the table is
     * written, then amortized over every subsequent join/aggregate on
     * that key. THE layout decision for a 100-TB fact table that joins
-    * its biggest dimension daily: neither side is broadcastable and an
+    * its biggest dimension daily: neither side fits a broadcast and an
     * every-query shuffle of the fact is the dominant cost. Registered
     * through the catalog (bucket metadata lives there; a bare parquet
     * path has nowhere to record it). */

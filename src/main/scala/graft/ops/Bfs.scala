@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * exponential plan growth across rounds) and rounds are bounded by
   * `maxHops`, so the loop needs no convergence guard: the hop budget IS
   * the bound. On a 1000-executor cluster the frontier join is
-  * AQE-broadcastable whenever the frontier is small (hop 1 and the tail
+  * broadcast by AQE whenever the frontier is small (hop 1 and the tail
   * hops), and the anti-join keys are already the join keys — one
   * shuffle family per round on the node id.
   */

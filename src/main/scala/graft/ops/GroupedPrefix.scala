@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *
   * The shape: bucket rows by a MONOTONE function of the order value
   * (equal values always share a bucket, so tie groups never straddle a
-  * boundary), roll up one per-(group, bucket) partial — a broadcastable
+  * boundary), roll up one per-(group, bucket) partial — a broadcast-sized
   * |groups|·|buckets| frame — and convert it to exclusive prefix
   * offsets; the caller then windows over (group, bucket), whose
   * partitions are |group|∕buckets rows, and adds the offset back:
@@ -33,7 +33,7 @@ private[graft] object GroupedPrefix {
     * With `descending = true`, ascending `_b` follows DESCENDING value
     * order, for running aggregates over `orderBy(value.desc)` windows.
     *
-    * Cost: one broadcastable group-span rollup, one broadcastable
+    * Cost: one broadcast-sized group-span rollup, one broadcast-sized
     * (group, bucket) rollup — no row-scale shuffle of its own; the
     * caller's (group, _b) window carries the only full-data exchange.
     * The constant is real (~1 s of extra rollups/joins at bench SFs —

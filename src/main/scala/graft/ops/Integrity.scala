@@ -46,7 +46,7 @@ object Integrity {
     val fk = child.select(col(childKey).as("_fk"))
     val pk = parent.select(col(parentKey).as("_pk"))
     val counts = fk.agg(count(lit(1)).as("n_child"),
-      sum(when(col("_fk").isNull, 1L).otherwise(0L)).as("n_null_fk"))
+      count(when(col("_fk").isNull, 1L)).as("n_null_fk"))
     val orphans = fk.where(col("_fk").isNotNull)
       .join(pk, col("_fk") === col("_pk"), "left_anti")
       .agg(count(lit(1)).as("n_orphans"))

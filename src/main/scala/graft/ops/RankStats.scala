@@ -118,7 +118,7 @@ object RankStats {
     //   2·midrank = 2·cnt_less + cnt + 1 = 2·off + rk + le
     // Window partitions shrink from n/|g| rows to n/(|g|·B).
     val base = df.select(groupCol.as("g"), xCol.as("_x"), yCol.as("_y"))
-    // per-group count + value spans, one broadcastable row per group
+    // per-group count + value spans, one broadcast row per group
     val gstats = broadcast(base.groupBy(col("g")).agg(
       count(lit(1)).as("_gn"),
       min(col("_x").cast("double")).as("_xlo"),
@@ -234,7 +234,7 @@ object RankStats {
     * in the data still contribute their expected count; observed
     * values outside the domain are ignored. One map-side-combined
     * aggregate over the data; decimal(38,0) keeps the squared term
-    * exact at any N. */
+    * exact at any N. No observations give N = 0 and a NULL chi2_q6. */
   def chiSquareGof(df: DataFrame, valueCol: Column,
       domain: Seq[Long]): DataFrame = {
     require(domain.nonEmpty, "need a non-empty domain")
@@ -244,7 +244,7 @@ object RankStats {
       .groupBy(col("_d")).agg(count(lit(1)).as("_o"))
     val spine = domain.toDS().toDF("_d")
     val tot = obs.join(broadcast(spine), Seq("_d"), "left_semi")
-      .agg(sum(col("_o")).as("_n"))
+      .agg(coalesce(sum(col("_o")), lit(0L)).as("_n"))
     val k = domain.size.toLong
     broadcast(spine).join(obs, Seq("_d"), "left")
       .crossJoin(broadcast(tot))
@@ -252,7 +252,7 @@ object RankStats {
         expr(s"""(1000000 *
                   ($k * cast(coalesce(_o, 0) as decimal(38,0)) - _n) *
                   ($k * cast(coalesce(_o, 0) as decimal(38,0)) - _n))
-                 div ($k * cast(_n as decimal(38,0)))""").as("_cell"))
+                 div ($k * cast(nullif(_n, 0) as decimal(38,0)))""").as("_cell"))
       .groupBy(col("_n")).agg(sum(col("_cell")).as("_chi2"))
       .select(col("_n").as("n"), lit(k).as("k"),
         col("_chi2").cast("long").as("chi2_q6"))

@@ -14,14 +14,12 @@ import graft.functions.{DamerauLevenshtein, DmsToDecimal, DotProduct, FuzzRatio,
   *   spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions ...
   * }}}
   *
-  * This is the deployment-grade seam next to
-  * [[graft.functions.CustomExpressions.register]] (which needs a live
-  * session object): `injectFunction` registrations survive into every
-  * session cloned from the configured builder, thrift-server sessions
-  * included, so SQL-only users get `dms_to_decimal` / `fuzz_ratio` /
-  * `dot_product` without any Scala entry point. The expressions are the
-  * same codegen'd Catalyst classes the Column API uses — one
-  * implementation, two surfaces.
+  * `LocalSession.shared` sets it for every graft session. `injectFunction`
+  * registrations survive into every session cloned from the configured
+  * builder, thrift-server sessions included, so SQL-only users get
+  * `dms_to_decimal` / `fuzz_ratio` / `dot_product` without any Scala
+  * entry point. The expressions are the same codegen'd Catalyst classes
+  * the Column API uses — one implementation, two surfaces.
   *
   * Reference semantics: dms_to_decimal ≙ utils/parse.py dms2dd;
   * fuzz_ratio ≙ thefuzz ratio used by the pairing heuristics;

@@ -856,7 +856,6 @@ object EventQueries extends QueryGroup {
       .groupBy(col("stage")).agg(count(lit(1)).as("n_exact"))
     val wCum = Window.orderBy(col("stage").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wLag = Window.orderBy(col("stage"))
     byStage
       .withColumn("n_reached", sum(col("n_exact")).over(wCum))
       .crossJoin(broadcast(byStage.agg(sum(col("n_exact")).as("n_total"))))

@@ -3670,8 +3670,8 @@ object ExtQueries extends QueryGroup {
       .agg(count(lit(1)).as("n_docs"), sum($"n_tokens").as("n_tokens"))
     val summary = f
       .agg(count(lit(1)).as("_td"), sum($"n_tokens").as("_tt"),
-        sum(when($"keep", 1L).otherwise(0L)).as("_kd"),
-        sum(when($"keep", $"n_tokens").otherwise(0L)).as("_kt"))
+        count(when($"keep", 1L)).as("_kd"),
+        coalesce(sum(when($"keep", $"n_tokens")), lit(0L)).as("_kt"))
       .select(explode(array(
         struct(lit("_total").as("rule"), $"_td".as("n_docs"), $"_tt".as("n_tokens")),
         struct(lit("_kept").as("rule"), $"_kd".as("n_docs"), $"_kt".as("n_tokens"))))

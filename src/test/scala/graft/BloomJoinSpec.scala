@@ -47,7 +47,7 @@ class BloomJoinSpec extends SparkSpec {
       .select($"o_orderkey".as("l_orderkey"))
     val f = BloomJoin.build(ord, "l_orderkey", expectedItems = 400)
     // force the shuffle-join shape the operator exists for (at real
-    // scale the build side is NOT broadcastable as rows)
+    // scale the build side is too big to broadcast as rows)
     val joined = BloomJoin.prefilter(li, "l_orderkey", f)
       .join(ord.hint("merge"), Seq("l_orderkey"))
     // materialize so AQE finalizes stages — codegen collapse happens per

@@ -8,7 +8,6 @@ class CoordinateUpdateSpec extends SparkSpec {
   import spark.implicits._
 
   test("SQL registration: custom expressions callable from spark.sql") {
-    graft.functions.CustomExpressions.register(spark)
     val r = spark.sql(
       """SELECT fuzz_ratio('this is a test', 'this is a test!') AS fr,
         |       dms_to_decimal('33°51''N') AS dd,

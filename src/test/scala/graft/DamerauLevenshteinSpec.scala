@@ -161,7 +161,6 @@ class DamerauLevenshteinSpec extends SparkSpec {
       CustomExpressions.damerau_levenshtein(col("a"), col("b")).as("d"))
       .collect().map(r => if (r.isNullAt(0)) null else r.getInt(0))
     assert(got.toSeq == Seq(1, 2, null))
-    CustomExpressions.register(spark)
     df.createOrReplaceTempView("dl_pairs")
     val sql = spark.sql(
       "SELECT damerau_levenshtein(a, b) AS d FROM dl_pairs WHERE a IS NOT NULL")

@@ -46,7 +46,6 @@ class FuzzWRatioSpec extends SparkSpec {
     assert(out(1) === Some(100))
     assert(out(2) === None) // null input → null, not 0
     assert(out(0) === Some(WRatioRef.wratio("samp_a1", "samp_a1_R1.fq.gz")))
-    CustomExpressions.register(spark)
     val sql = spark.sql("SELECT fuzz_wratio('abc', 'abd') AS w").collect()(0).getInt(0)
     assert(sql === WRatioRef.wratio("abc", "abd"))
   }

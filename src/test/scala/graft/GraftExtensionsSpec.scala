@@ -6,12 +6,8 @@ package graft
   * TestSpark's builder), and the custom expressions must resolve from
   * pure SQL with no Scala registration call.
   *
-  * The assertions run in a `newSession()`: temp-function registrations
-  * (`CustomExpressions.register`, possibly called by another suite on
-  * the shared session) do NOT carry over to a new session, while
-  * extension-injected functions are re-applied to every session cloned
-  * from the context — so resolution here proves the extension path
-  * specifically. */
+  * The assertions run in a `newSession()`: extension-injected functions
+  * are re-applied to every session cloned from the context. */
 class GraftExtensionsSpec extends SparkSpec {
 
   test("spark.sql.extensions installs dms_to_decimal / fuzz_ratio / dot_product for SQL") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ext.Multimodal
 
 class MultimodalSpec extends SparkSpec {
@@ -24,196 +23,8 @@ class MultimodalSpec extends SparkSpec {
     meta.unpersist()
   }
 
-  test("feature extraction: fixed 8-dim, L1-normalized") {
-    val feats = Multimodal.extractFeatures(assets).collect()
-    assert(feats.nonEmpty)
-    feats.foreach { f =>
-      assert(f.features.length === 8)
-      assert(math.abs(f.features.map(_.toDouble).sum - 1.0) < 1e-3)
-    }
-  }
-
-  test("frame sampling: every stride-th frame, videos only") {
-    val meta = Multimodal.decode(assets)
-    val frames = Multimodal.sampleFrames(meta, stride = 10)
-    val byAsset = frames.groupBy("asset_id").agg(count(lit(1)).as("n"),
-      max("frame_idx").as("maxi"))
-    val joined = byAsset.join(meta.toDF(), Seq("asset_id"))
-    joined.collect().foreach { r =>
-      val nFrames = r.getAs[Int]("n_frames")
-      val expected = (nFrames + 9) / 10  // ceil(n_frames / stride)
-      assert(r.getAs[Long]("n") === expected)
-      assert(r.getAs[Int]("maxi") < nFrames)
-      assert(r.getAs[String]("kind") === "video")
-    }
-  }
-
   test("plan is narrow: decode stage has no shuffle") {
     val plan = Multimodal.decode(assets).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle in decode plan:\n$plan")
-  }
-
-  // ----- real JVM codec: payloads GENERATED by the same JDK APIs -----
-
-  private def pngBytes(w: Int, h: Int)(f: (Int, Int) => Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, f(x, y))
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
-
-  private def wavBytes(nFrames: Int, rate: Float = 16000f): Array[Byte] = {
-    import javax.sound.sampled._
-    val fmt = new AudioFormat(rate, 16, 1, true, false)
-    val pcm = new Array[Byte](nFrames * 2)
-    for (i <- 0 until nFrames) {
-      val v = (math.sin(i * 0.1) * 20000).toShort
-      pcm(2 * i) = (v & 0xff).toByte
-      pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
-    }
-    val ais = new AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, nFrames.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(ais, AudioFileFormat.Type.WAVE, bos)
-    bos.toByteArray
-  }
-
-  private def gradient(x: Int, y: Int): Int = {
-    val g = (x * 3 + y * 5) % 256
-    (g << 16) | (g << 8) | g
-  }
-
-  test("decodeJvm: real PNG/WAV decode, corrupt payloads quarantine, video stays honest") {
-    import spark.implicits._
-    val rows = Seq(
-      Multimodal.MediaAsset(1L, "image", pngBytes(40, 30)(gradient)),
-      Multimodal.MediaAsset(2L, "audio", wavBytes(1600)),
-      Multimodal.MediaAsset(3L, "image", Array[Byte](1, 2, 3)), // corrupt
-      Multimodal.MediaAsset(4L, "video", pngBytes(8, 8)(gradient)))
-    val out = Multimodal.decodeJvm(rows.toDS())
-      .collect().map(m => m.asset_id -> m).toMap
-    assert(out(1L).width === 40 && out(1L).height === 30 &&
-      out(1L).error === null)
-    assert(out(2L).sample_rate_hz === 16000 && out(2L).n_frames === 1600L &&
-      out(2L).error === null)
-    assert(out(3L).error != null) // quarantined, job survives
-    assert(out(4L).error != null && out(4L).error.contains("video"))
-  }
-
-  test("imageNearDup: identical and perturbed images pair by aHash, structurally different do not") {
-    import spark.implicits._
-    val base = pngBytes(64, 64)(gradient)
-    val copy = pngBytes(64, 64)(gradient) // bit-identical pixels
-    // perturbed: one 8x8 cell brightened slightly — hamming stays small
-    val near = pngBytes(64, 64) { (x, y) =>
-      if (x < 8 && y < 8) 0xffffff else gradient(x, y)
-    }
-    // structurally different: inverted checkerboard
-    val far = pngBytes(64, 64) { (x, y) =>
-      if ((x / 8 + y / 8) % 2 == 0) 0xffffff else 0x000000
-    }
-    val assets = Seq(
-      Multimodal.MediaAsset(1L, "image", base),
-      Multimodal.MediaAsset(2L, "image", copy),
-      Multimodal.MediaAsset(3L, "image", near),
-      Multimodal.MediaAsset(4L, "image", far),
-      Multimodal.MediaAsset(5L, "image", Array[Byte](9, 9))) // corrupt: skipped
-    val pairs = Multimodal.imageNearDup(assets.toDS(), maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(pairs.contains((1L, 2L)) && pairs((1L, 2L)) === 0L)
-    assert(pairs.contains((1L, 3L)) || pairs.contains((2L, 3L)))
-    assert(!pairs.keys.exists { case (a, b) => a == 4L || b == 4L })
-    assert(!pairs.keys.exists { case (a, b) => a == 5L || b == 5L })
-    spark.catalog.clearCache()
-  }
-
-  test("sampleAudio: stride picks every k-th PCM frame, values in [-1, 1]") {
-    val codec = new Multimodal.JvmCodec
-    val a = Multimodal.MediaAsset(1L, "audio", wavBytes(100))
-    val all = codec.sampleAudio(a, 1)
-    val s10 = codec.sampleAudio(a, 10)
-    assert(all.length === 100 && s10.length === 10)
-    assert(s10.toSeq === (0 until 100 by 10).map(all(_)).toSeq)
-    assert(all.forall(v => v >= -1f && v <= 1f))
-    assert(codec.sampleAudio(
-      Multimodal.MediaAsset(2L, "audio", Array[Byte](1)), 1).isEmpty)
-  }
-
-  // ---- video container metadata: hand-built minimal boxes (the JDK
-  // ships no MP4/MKV writer, so the fixtures ARE the spec bytes) ----
-
-  private def be32(v: Long): Array[Byte] = Array(
-    (v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
-  private def box(typ: String, payload: Array[Byte]): Array[Byte] =
-    be32(8L + payload.length) ++ typ.getBytes("US-ASCII") ++ payload
-
-  /** mvhd v0: timescale 1000, duration 90000 -> 90 000 ms. */
-  private def mvhd: Array[Byte] = box("mvhd",
-    new Array[Byte](12) ++ be32(1000L) ++ be32(90000L) ++ new Array[Byte](80))
-  /** tkhd v0 with 16.16-fixed width/height at payload offsets 76/80. */
-  private def tkhd(w: Int, h: Int): Array[Byte] = box("tkhd",
-    new Array[Byte](76) ++ be32(w.toLong << 16) ++ be32(h.toLong << 16))
-  private def mp4Bytes: Array[Byte] =
-    box("ftyp", "isom".getBytes("US-ASCII") ++ be32(0L)) ++
-      box("moov", mvhd ++
-        box("trak", tkhd(1280, 720)) ++ // video track
-        box("trak", tkhd(0, 0)))        // audio track (no resolution)
-
-  private def ebml(id: Long, payload: Array[Byte]): Array[Byte] = {
-    val idBytes = BigInt(id).toByteArray.dropWhile(_ == 0)
-    require(payload.length < 127)
-    idBytes ++ Array((0x80 | payload.length).toByte) ++ payload
-  }
-  private def mkvBytes: Array[Byte] =
-    ebml(0x1A45DFA3L, Array[Byte]()) ++ // EBML header (empty ok for the walk)
-      ebml(0x18538067L, // Segment
-        ebml(0x1549A966L, // Info
-          ebml(0x2AD7B1L, be32(1000000L)) ++ // TimestampScale 1e6 ns
-            ebml(0x4489L, be32( // Duration = float 12345.0
-              java.lang.Float.floatToIntBits(12345f).toLong & 0xffffffffL))) ++
-          ebml(0x1654AE6BL, // Tracks
-            ebml(0xAEL, // video TrackEntry
-              ebml(0xE0L, ebml(0xB0L, Array(0x02.toByte, 0x80.toByte)) ++ // 640
-                ebml(0xBAL, Array(0x01.toByte, 0x68.toByte)))) ++         // 360
-              ebml(0xAEL, Array[Byte]()))) // audio TrackEntry
-
-  test("videoMeta: MP4 box walk and MKV EBML walk surface duration, " +
-      "tracks, resolution; truncated/garbage payloads quarantine") {
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    val rows = Seq(
-      Multimodal.MediaAsset(1L, "video", mp4Bytes),
-      Multimodal.MediaAsset(2L, "video", mkvBytes),
-      Multimodal.MediaAsset(3L, "video", mp4Bytes.dropRight(12)), // cut mid-box
-      Multimodal.MediaAsset(4L, "video", "not a container".getBytes),
-      Multimodal.MediaAsset(5L, "image", mp4Bytes)) // non-video: excluded
-    val got = Multimodal.videoMeta(rows.toDS())
-      .collect().map(m => m.asset_id -> m).toMap
-    assert(got.keySet === Set(1L, 2L, 3L, 4L))
-    val m1 = got(1L)
-    assert(m1.container === "mp4" && m1.error == null)
-    assert(m1.duration_ms === 90000L && m1.n_tracks === 2)
-    assert(m1.width === 1280 && m1.height === 720)
-    val m2 = got(2L)
-    assert(m2.container === "mkv" && m2.error == null)
-    assert(m2.duration_ms === 12345L && m2.n_tracks === 2)
-    assert(m2.width === 640 && m2.height === 360)
-    assert(got(3L).container === "truncated" && got(3L).error != null)
-    assert(got(4L).container === "unknown" && got(4L).error != null)
-  }
-
-  test("videoMeta: hostile EBML size > Int.MaxValue quarantines instead " +
-      "of wrapping past the bounds check") {
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    // MKV magic, then an element whose declared size is 2^32: under a
-    // 32-bit narrowing (size.toInt == 0) the old walk sailed past the
-    // `end > to` guard and read misaligned bytes as plausible metadata
-    val hostile = Array(0x1A, 0x45, 0xDF, 0xA3).map(_.toByte) ++
-      Array(0x01, 0x00, 0x00, 0x01, 0x00, 0x00, 0x00, 0x00).map(_.toByte) ++
-      new Array[Byte](16)
-    val got = Multimodal.videoMeta(
-      Seq(Multimodal.MediaAsset(9L, "video", hostile)).toDS()).collect().head
-    assert(got.container === "truncated" && got.error != null)
   }
 }

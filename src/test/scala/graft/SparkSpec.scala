@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, one session). */
@@ -21,7 +22,14 @@ object TestSpark {
   val sf0001 = "/root/testdata/sf0.001"
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   def sfDir: String = TestSpark.sf0001
+
+  // every suite shares the session: a frame a suite left cached (its own
+  // fixtures, or an operator's internal persist) would turn a later
+  // suite's scan of the same table into an InMemoryTableScan
+  override def afterAll(): Unit =
+    try SparkSession.getDefaultSession.foreach(_.catalog.clearCache())
+    finally super.afterAll()
 }
