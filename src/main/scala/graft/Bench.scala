@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR on local[32], prints ONE JSON line.
+  * SPARK_GRAFT_SF_DIR on local[32], times the write of its whole result
+  * to the `noop` sink, and prints ONE JSON line.
   *
   * A short warm-up (tiny scan + agg + join) pays the JIT/codegen cost
   * before timing so per-query numbers reflect steady-state throughput,
@@ -65,14 +66,14 @@ object Bench {
     def timeOnce(name: String, fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame): (Double, Boolean) = {
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case e: Throwable =>
-                 System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-                 false }
+      // the noop sink materializes every output column and row, as a real
+      // sink would; `.count()` let Catalyst prune both
+      val ok = try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        false }
       val dt = (System.nanoTime() - t0) / 1e9
-      // drop frames persisted inside operators so no query benefits from
-      // (or pays for) another query's cache
-      spark.catalog.clearCache()
       (dt, ok)
     }
     val results = selected.map { case (name, fn) =>

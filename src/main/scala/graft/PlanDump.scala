@@ -22,7 +22,6 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${n}_$tag.txt"), plan)
-      spark.catalog.clearCache()
       println(s"[plandump] wrote $outDir/${n}_$tag.txt")
     }
     spark.stop()

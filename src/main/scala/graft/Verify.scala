@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -12,16 +13,31 @@ object Verify {
     val spark = LocalSession.build(LocalSession.cpus)
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // A query can pass while one of its jobs fails (a stage nothing reads
+    // any more); count failed jobs per query for a stderr line. Jobs that
+    // an operator submits from another thread carry the query's property.
+    val sc = spark.sparkContext
+    val queryKey = "graft.verify.query"
+    val jobQuery = new java.util.concurrent.ConcurrentHashMap[Int, String]
+    val failedJobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(queryKey)))
+          .foreach(jobQuery.put(e.jobId, _))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(jobQuery.remove(e.jobId)).filter(_ => e.jobResult != JobSucceeded)
+          .foreach(failedJobs.merge(_, 1, _ + _))
+    })
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      sc.setLocalProperty(queryKey, name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
-      spark.catalog.clearCache()  // operators persist internally; don't accumulate
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -52,6 +68,8 @@ object Verify {
       System.err.println(
         s"[verify] ${failed.size} quer${if (failed.size == 1) "y" else "ies"} FAILED: " +
           failed.keys.mkString(", "))
-    spark.stop()
+    spark.stop() // delivers every queued listener event first
+    failedJobs.forEach((name, n) =>
+      System.err.println(s"[verify] $name: $n job(s) failed"))
   }
 }

@@ -25,11 +25,8 @@ import graft.ops.Iterate
   * MEMORY_AND_DISK — those barriers are load-bearing (each blocks a
   * measured 4–40× re-evaluation of the scan+kernel lineage, see the
   * in-method comments) and the returned DataFrame still reads from them
-  * lazily, so the operator cannot unpersist before returning. Callers
-  * own the cache scope: wrap the call AND its materialization in
-  * [[CacheScope.withCacheScope]] (frees exactly the operator's frames,
-  * nothing else), or run `spark.catalog.clearCache()` (what Bench and
-  * Verify do per query), or the blocks live for the session.
+  * lazily, so the operator cannot unpersist before returning. Their
+  * lifetime is the rule on [[CacheScope]].
   */
 object Dedup {
 

@@ -13,9 +13,8 @@ package object ext {
     def $(args: Any*): Column = col(sc.s(args: _*))
   }
 
-  /** The one persist spelling ext operators use: MEMORY_AND_DISK plus
-    * registration with the caller's [[CacheScope]] when one is active
-    * (session-lifetime otherwise — see the contract in [[CacheScope]]). */
+  /** The one persist spelling graft operators use: MEMORY_AND_DISK,
+    * with the lifetime the rule on [[CacheScope]] gives it. */
   private[graft] implicit class ScopedPersist(private val df: DataFrame) extends AnyVal {
     def persistScoped: DataFrame = CacheScope.persist(df)
   }

@@ -22,17 +22,21 @@ object Scratch {
   private[graft] lazy val root: Path = Paths.get(
     sys.env.getOrElse("SPARK_GRAFT_SCRATCH", graft.LocalSession.fastDir("graft-scratch")))
 
-  /** A fresh scratch directory for the query that owns `prefix`, under
-    * `<root>/<prefix>/`. Creating it deletes the query's earlier
-    * directories, so a query built again and again leaves one directory
-    * behind, not one per build. This assumes one user per prefix at a
-    * time: the frame a round-trip query returns reads its directory
-    * lazily, so building the same query again (another thread, or a
-    * caller still holding the first frame) deletes the files the first
-    * frame reads. */
+  /** Dirs made and not yet deleted; the JVM deletes them when it exits. */
+  private val undeleted = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+  sys.addShutdownHook(undeleted.forEach(delete(_)))
+
+  /** A fresh scratch directory `<root>/<prefix>…`. Its lifetime is the
+    * rule on [[graft.ext.CacheScope]]. */
   def dir(prefix: String): Path = {
-    val parent = Files.createDirectories(root.resolve(prefix))
-    org.apache.commons.io.FileUtils.cleanDirectory(parent.toFile)
-    Files.createTempDirectory(parent, prefix)
+    val d = Files.createTempDirectory(Files.createDirectories(root), prefix)
+    undeleted.add(d)
+    graft.ext.CacheScope.ownDir(d)
+    d
+  }
+
+  private[graft] def delete(d: Path): Unit = {
+    org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)
+    undeleted.remove(d)
   }
 }

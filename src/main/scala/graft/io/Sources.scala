@@ -119,8 +119,8 @@ object Sources {
     * column, quarantined raw lines). The parsed frame is persisted
     * first — Spark refuses to filter raw file scans on the internal
     * corrupt column alone (SPARK-21610), and the barrier also stops
-    * the two branches re-parsing the corpus twice; it follows the
-    * [[graft.ext.CacheScope]] contract like every ext operator. */
+    * the two branches re-parsing the corpus twice; its lifetime is the
+    * rule on [[graft.ext.CacheScope]]. */
   def splitCorrupt(df: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions.col
     import graft.ext.ScopedPersist

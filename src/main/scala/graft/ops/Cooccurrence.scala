@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.ext.ScopedPersist
 
 /** Bipartite → unipartite co-occurrence projection: from (hub, item)
   * edges, the item–item graph weighted by shared-hub count — the
@@ -44,10 +45,9 @@ object Cooccurrence {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = e.groupBy($"hub").agg(count(lit(1)).as("_d"))
     // kept is read by BOTH self-join sides; materialize it, then free
-    // the raw edge cache (kept's cache carries the result from here —
-    // the caller clears it per the operator caching contract)
+    // the raw edge cache (kept's cache carries the result from here)
     val kept = e.join(deg.where($"_d" <= maxDegree).select($"hub"), "hub")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persistScoped
     kept.count()
     e.unpersist()
     kept.select($"hub", $"item".as("item_a"))

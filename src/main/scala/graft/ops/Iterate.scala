@@ -88,7 +88,8 @@ private[graft] object Iterate {
     *  - release: superseded barriers are freed each round, and at exit
     *    every barrier the returned value does not read (its DataFrames,
     *    also inside tuples and collections). A nested loop hands the
-    *    ones its result reads to the enclosing loop;
+    *    ones its result reads to the enclosing loop, an outermost one to
+    *    the query build ([[graft.ext.CacheScope]]);
     *  - one log line with the rounds run. */
   def loop[A](op: String, maxRounds: Int, detail: String = "")(
       body: Loop => A): A = {
@@ -107,7 +108,9 @@ private[graft] object Iterate {
     } finally {
       active.set(outer)
       callSite.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      if (outer != null) outer.made ++= l.made.filter(m => live(m._1))
+      val kept = l.made.filter(m => live(m._1))
+      if (outer != null) outer.made ++= kept
+      else kept.values.foreach(graft.ext.CacheScope.ownBarrier)
       l.free(live)
     }
   }
@@ -131,15 +134,18 @@ private[graft] object Iterate {
     * (non-null count, Σ value) pair over the checkpointed rows: one
     * driver job instead of a checkpoint plus a separately planned probe
     * aggregate. The enclosing [[loop]] keeps the values and the
-    * barrier, which it frees once no round reads it. */
+    * barrier, which it frees once no round reads it; outside a loop the
+    * barrier goes to the query build. */
   def loopBarrierProbe(df: DataFrame, probeCols: Seq[String])
       : (DataFrame, Array[(Long, Long)]) = {
     barrierCount.incrementAndGet()
     val (b, st) = GraftSqlShim.measuredBarrierProbe(df, probeCols)
-    Option(active.get).foreach { l =>
-      if (probeCols.nonEmpty) l.lastProbe = st.toSeq
-      val rdd = GraftSqlShim.barrierRdd(b)
-      l.made(rdd.id) = rdd
+    val rdd = GraftSqlShim.barrierRdd(b)
+    active.get match {
+      case null => graft.ext.CacheScope.ownBarrier(rdd)
+      case l =>
+        if (probeCols.nonEmpty) l.lastProbe = st.toSeq
+        l.made(rdd.id) = rdd
     }
     (b, st)
   }

@@ -182,8 +182,21 @@ object AggQueries extends QueryGroup {
     * NULL group markers replaced for deterministic comparison. */
   def rollupAgg(spark: SparkSession, dir: String): DataFrame = {
     val li = load(spark, dir, "lineitem")
-    li.rollup($"l_returnflag", $"l_linestatus")
-      .agg(count(lit(1)).as("n"), round(sum($"l_quantity"), 2).as("qty"))
+    flagStatusTotals(li, li.rollup($"l_returnflag", $"l_linestatus"))
+  }
+
+  /** a12/a17: row count and quantity per grouping set of (flag, status),
+    * a set's absent columns as 'ALL'. SQL answers the empty grouping set
+    * with one row even over no input rows (count 0, sum NULL); Spark's
+    * grouped aggregate answers none, so on an empty input the global
+    * aggregate supplies that row. */
+  private def flagStatusTotals(li: DataFrame,
+      sets: org.apache.spark.sql.RelationalGroupedDataset): DataFrame = {
+    val measures = Seq(count(lit(1)).as("n"), round(sum($"l_quantity"), 2).as("qty"))
+    val grandTotal = li.agg(measures.head, measures.tail: _*).where($"n" === 0)
+      .select(lit(null).cast("string").as("l_returnflag"),
+        lit(null).cast("string").as("l_linestatus"), $"n", $"qty")
+    sets.agg(measures.head, measures.tail: _*).unionByName(grandTotal)
       .select(
         coalesce($"l_returnflag", lit("ALL")).as("flag"),
         coalesce($"l_linestatus", lit("ALL")).as("status"),
@@ -204,13 +217,7 @@ object AggQueries extends QueryGroup {
     * a13 (explicit grouping sets). */
   def cubeAgg(spark: SparkSession, dir: String): DataFrame = {
     val li = load(spark, dir, "lineitem")
-    li.cube($"l_returnflag", $"l_linestatus")
-      .agg(count(lit(1)).as("n"), round(sum($"l_quantity"), 2).as("qty"))
-      .select(
-        coalesce($"l_returnflag", lit("ALL")).as("flag"),
-        coalesce($"l_linestatus", lit("ALL")).as("status"),
-        $"n", $"qty")
-      .orderBy($"flag", $"status")
+    flagStatusTotals(li, li.cube($"l_returnflag", $"l_linestatus"))
   }
 
   private val cubeAggSql =

@@ -31,6 +31,21 @@ object GraftSqlShim {
         s"a loop barrier must be a LogicalRDD leaf, got ${p.nodeName}")
     }
 
+  /** Waits for every exchange stage that AQE started for `plan`. AQE
+    * finishes a plan as soon as its final stage is known, so a side it
+    * found empty (ext_ktruss on sf0.001: a round whose result is empty)
+    * ends the plan while the other side's stages are queued or running.
+    * Those jobs read the plan's inputs, which a loop frees once the
+    * barrier returns; left to run, they fail on a freed checkpoint. */
+  private def awaitStages(plan: execution.SparkPlan): Unit =
+    plan.foreach {
+      case a: execution.adaptive.AdaptiveSparkPlanExec =>
+        a.context.stageCache.values.foreach(s =>
+          scala.concurrent.Await.ready(
+            s.materialize(), scala.concurrent.duration.Duration.Inf))
+      case _ =>
+    }
+
   /** The loop barrier for iterative relational operators (the
     * graft.ops.Iterate barriers are the only caller): a local
     * checkpoint with MEASURED statistics, materialized by ONE job that
@@ -107,6 +122,7 @@ object GraftSqlShim {
         while (j < k) { a._1(j) += b._1(j); a._2(j) += b._2(j); j += 1 }
         a
       }
+    awaitStages(ds.queryExecution.executedPlan)
     val spark = ck.sparkSession
     val measured = spark.sparkContext.getRDDStorageInfo
       .find(_.id == lr.rdd.id)

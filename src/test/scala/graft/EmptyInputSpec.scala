@@ -4,8 +4,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.Row
 
 /** Declared queries on zero-row tables: a global aggregate over no rows
-  * answers as SQL does — `count` is 0, `sum`/`max` are NULL, and an
-  * integer division by a zero count is NULL. The tables are zero-row
+  * answers as SQL does — `count` is 0, `sum`/`max` are NULL, an
+  * integer division by a zero count is NULL, and ROLLUP/CUBE keep their
+  * grand-total row. The tables are zero-row
   * copies of sf0.001 with the same schemas. */
 class EmptyInputSpec extends SparkSpec {
 
@@ -42,6 +43,11 @@ class EmptyInputSpec extends SparkSpec {
   test("ext_filter_funnel on empty input: 0 docs, kept tokens 0, total tokens NULL") {
     assert(run("ext_filter_funnel") ===
       Seq(Row("_kept", 0L, 0L), Row("_total", 0L, null)))
+  }
+
+  test("a12_rollup and a17_cube on empty input: SQL's one grand-total row") {
+    assert(run("a12_rollup") === Seq(Row("ALL", "ALL", 0L, null)))
+    assert(run("a17_cube") === Seq(Row("ALL", "ALL", 0L, null)))
   }
 
   test("ext_skew_report on empty input: n_keys = 0, the rest NULL") {

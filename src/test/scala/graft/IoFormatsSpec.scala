@@ -131,13 +131,26 @@ class IoFormatsSpec extends SparkSpec {
     assert(got.isEmpty)
   }
 
-  test("a round-trip query built twice leaves one scratch dir per prefix") {
-    // graft_s1 is a name prefix of graft_s17's and graft_s18's dirs
-    Seq("s1_xlsx_roundtrip" -> "graft_s1", "s18_snapshot_roundtrip" -> "graft_s18")
-      .foreach { case (q, prefix) =>
-        (1 to 2).foreach(_ => SparkEntry.queries(q)(spark, sfDir).collect())
-        val left = Files.list(graft.io.Scratch.root.resolve(prefix))
-        try assert(left.count() === 1L, q) finally left.close()
-      }
+  test("round-trip queries built in turn keep only the open build's scratch dirs") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createDirectories(graft.io.Scratch.root)
+    // the root may be the JVM tmpdir, which other code writes to as well
+    def entries(): Set[java.nio.file.Path] = {
+      val s = Files.list(root)
+      try s.iterator().asScala.filter(_.getFileName.toString.startsWith("graft_s")).toSet
+      finally s.close()
+    }
+    var previous = Set.empty[java.nio.file.Path]
+    Seq("s1_xlsx_roundtrip" -> "graft_s1", "s18_snapshot_roundtrip" -> "graft_s18",
+        "s1_xlsx_roundtrip" -> "graft_s1").foreach { case (q, prefix) =>
+      val before = entries()
+      SparkEntry.queries(q)(spark, sfDir).collect()
+      val made = entries() -- before
+      // one flat dir per Scratch.dir call, named after its prefix
+      assert(made.size === 1 && made.forall(_.getFileName.toString.startsWith(prefix)),
+        s"$q made $made")
+      assert(previous.forall(Files.notExists(_)), s"$q's build left $previous")
+      previous = made
+    }
   }
 }
