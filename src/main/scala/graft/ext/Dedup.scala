@@ -514,8 +514,6 @@ object Dedup {
     }.reduce(_ + _)
   }
 
-  def simhash16(toks: Column): Column = simhash16FromHashes(tokenHashes(toks))
-
   /** Per-token hashes under an independent salt (prepended to the token
     * before md5), for multi-block SimHash signatures. Salt 0 is NOT
     * [[tokenHashes]] — block sigs are always salted so the four blocks

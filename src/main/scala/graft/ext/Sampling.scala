@@ -29,14 +29,9 @@ object Sampling {
     pmod(conv(substring(md5(key.cast("string").cast("binary")), 1, 8), 16, 10)
       .cast("long"), lit(10000L))
 
-  /** Deterministic sample: keep rows whose bucket falls below
-    * `rateBp` basis points (rateBp = 1000 ⇒ 10 %). */
-  def hashSample(df: DataFrame, keyCol: String, rateBp: Int): DataFrame =
-    df.where(hashBucket(col(keyCol)) < rateBp)
-
   /** Per-ROW-rate deterministic sample: keep a row iff its md5 bucket
     * falls under `rateBp`, an arbitrary basis-point EXPRESSION — the
-    * generalization of [[hashSample]] (constant rate) and
+    * generalization of a constant-rate sample and
     * [[stratifiedSample]] (per-stratum rate) to a per-row keep
     * probability, e.g. rate ∝ a model quality score so the sample
     * up-weights what the classifier likes while staying bit-for-bit
@@ -243,25 +238,6 @@ object Sampling {
     * no global sort, no full shuffle. Null or non-positive weights and
     * null keys fall out (a zero-weight row must never be sampled; a
     * null key has no reproducible draw). */
-  /** Scalar twin of [[weightedWithoutReplacement]]'s column formula —
-    * the SAME md5-bucket draw and A-ES score, computed JVM-side so the
-    * streaming sampler ([[graft.streaming.StreamingIngest
-    * .weightedSampleStream]]) holds state scored identically to the
-    * batch op (parity pinned in StreamingSpec). None for null keys or
-    * non-positive weights — the rows the batch op filters out. */
-  private[graft] def aesScoreQ8(key: String, weight: Double): Option[Long] =
-    if (key == null || !(weight > 0)) None
-    else {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // first 8 hex chars = first 4 bytes, big-endian unsigned — what
-      // conv(substring(md5(k), 1, 8), 16, 10) reads
-      val h32 = ((md(0) & 0xffL) << 24) | ((md(1) & 0xffL) << 16) |
-        ((md(2) & 0xffL) << 8) | (md(3) & 0xffL)
-      val u = (h32 % 10000L + 1).toDouble / 10001.0
-      Some(math.floor(-math.log(u) / weight * 1e8).toLong)
-    }
-
   def weightedWithoutReplacement(df: DataFrame, keyCol: String,
       weightCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")

@@ -938,10 +938,6 @@ object Similarity {
         when(col("_amax") > 0.0, col("_amax") / 127.0).otherwise(lit(0.0)))
       .drop("_amax")
 
-  /** Reconstruct approximate doubles from int8 codes. */
-  def dequantize(codes: Column, scale: Column): Column =
-    transform(codes, c => c.cast("double") * scale)
-
   /** Deterministic ±1 sign matrix for [[randomProject]]: entry (j, i)
     * is +1 iff the first 32 md5 bits of `"j_i"` are even — the same
     * md5-derived pseudo-randomness basis the sampling/LSH layers use,
@@ -1049,41 +1045,6 @@ object Similarity {
         array(codeCols.toIndexedSeq: _*).as("codes"),
         distCols.reduce(_ + _).as("dist"))
     }
-  }
-
-  /** ADC (asymmetric distance computation) top-k over PQ codes: each
-    * query precomputes its m × codebookSize lookup table of exact q6²
-    * subspace distances, and a candidate's approximate distance is the
-    * sum of m table entries selected by its code — the classic
-    * PQ-search shape where the corpus side touches only its codes,
-    * never the vectors. Queries broadcast (the [[bruteForceTopK]]
-    * pattern); ranking ties break on vec_id. */
-  def pqTopK(queries: DataFrame, codes: DataFrame,
-      cbs: Array[Array[Array[Long]]], k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k >= 1, s"k must be >= 1, got $k")
-    val m = cbs.length
-    val sub = cbs.head.head.length
-    val q = queries.select(col(idCol).as("query_id"),
-      transform(col(vecCol), x =>
-        floor(x.cast("double") * lit(1000000.0)).cast("long")).as("_q"))
-    // the table is built on the broadcast side, once per query; a
-    // per-pair when-chain over every codeword instead outgrew the 64 KB
-    // generated-method limit and ran interpreted
-    val table = q.select(col("query_id"), array((0 until m).map { j =>
-      val qj = slice(col("_q"), j * sub + 1, sub)
-      transform(typedLit(cbs(j).map(_.toSeq).toSeq), c =>
-        aggregate(zip_with(qj, c, (a, b) => (a - b) * (a - b)), lit(0L), _ + _))
-    }: _*).as("_tab"))
-    val adc = (0 until m).map(j =>
-      col("_tab").getItem(j).getItem(col("codes").getItem(j))).reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("vec_id"))
-    broadcast(table).crossJoin(codes.select(col(idCol).as("vec_id"), col("codes")))
-      .select(col("query_id"), col("vec_id"), adc.as("adist"))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= k)
   }
 
   def randomProject(emb: DataFrame, outDim: Int = 16, inDim: Int = 64,

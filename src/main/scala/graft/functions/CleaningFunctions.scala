@@ -168,10 +168,6 @@ object CleaningFunctions {
       .when(locality.isNotNull && trim(locality) =!= "", locality)
       .otherwise(lit("missing"))
 
-  /** F15 — sample_title fallback (TEST3:295-296). */
-  def sampleTitleFallback(title: Column, minicoreId: Column): Column =
-    coalesce(title, minicoreId)
-
   /** F16 — placeholder substitution (create_sheets.py:90-97). */
   def refGenomePlaceholder(c: Column): Column =
     when(c.isNull || c === "NaN", "refGenomePlaceholder").otherwise(c)
@@ -192,13 +188,6 @@ object CleaningFunctions {
     round(filesize * lit(ReadsPerByte))
   def depth(numReads: Column, genomeSize: Column): Column =
     round(numReads * 150 / genomeSize, 3)
-
-  /** F20 — Tb conversion (parse.py:314). */
-  def toTerabytes(c: Column): Column = c / 1e12
-
-  /** F23 — filename→batch extraction (batch_extract.py:4-9). */
-  def batchExtract(c: Column): Column =
-    regexp_extract(c, "([\\w-]+)_multiqc_data", 1)
 
   /** F26 — comma multi-id split (update_reads.py:78). */
   def commaIds(c: Column): Column = split(c, ",")

@@ -3,19 +3,11 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Physical layout helpers for the 100 TB deployment (SURVEY §4.1):
-  * `samples`/`reads` partitioned by `ccgp_project_id` so per-project
-  * pipelines (`create_sheets -p <pid>` shape) prune at the source, and
-  * a deterministic salting helper for skewed join keys.
+/** Physical layout helpers for the 100 TB deployment (SURVEY §4.1): a
+  * deterministic salting helper for skewed join keys, bloom-filtered
+  * writes for point lookups, and a footer-only stats audit.
   */
 object Layout {
-
-  /** Write a table partitioned by the project key: a `-p <pid>` scan
-    * then reads exactly one directory (partition pruning; dynamic
-    * partition pruning covers the join-driven case). */
-  def writePartitioned(df: DataFrame, path: String,
-      partitionCol: String = "ccgp_project_id"): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
 
   /** Salted equi join for skewed keys: the big side gets a deterministic
     * per-row salt in [0, n); the small side is replicated n times; the
@@ -37,21 +29,6 @@ object Layout {
       explode(sequence(lit(0), lit(nSalts - 1))))
     salted.join(replicated, Seq(key, "_salt"), joinType).drop("_salt")
   }
-
-  /** Bucketed layout for co-located joins: hash-bucket + sort BY THE
-    * JOIN KEY at write time, so two tables bucketed the same way join
-    * with ZERO exchanges — the shuffle is paid once when the table is
-    * written, then amortized over every subsequent join/aggregate on
-    * that key. THE layout decision for a 100-TB fact table that joins
-    * its biggest dimension daily: neither side fits a broadcast and an
-    * every-query shuffle of the fact is the dominant cost. Registered
-    * through the catalog (bucket metadata lives there; a bare parquet
-    * path has nowhere to record it). */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-      nBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(nBuckets, key).sortBy(key)
-      .format("parquet").saveAsTable(table)
 
   /** Parquet BLOOM FILTERS on point-lookup columns: each row group
     * carries a bloom of the column's values, so an equality predicate
@@ -77,96 +54,6 @@ object Layout {
         .option(s"parquet.enable.dictionary#$c", "false")
     }
     w.parquet(path)
-  }
-
-  /** Small-file compaction: rewrite a parquet directory into
-    * ⌈totalBytes / targetBytes⌉ files. The operational pressure-valve
-    * every long-lived 100-TB table needs — streaming sinks, partitioned
-    * upserts, and per-batch merges all accrete KB-scale files until
-    * task scheduling and footer reads dominate scan time.
-    *
-    * `coalesce`, NOT `repartition`: compaction reduces file count, and
-    * coalesce does it with ZERO shuffle — each output task just reads
-    * several input files end-to-end. (repartition would round-robin
-    * every row through an exchange to achieve the same file count; use
-    * it only if pathological input skew must be rebalanced, which a
-    * compaction of same-schema small files doesn't exhibit.) Returns
-    * (filesBefore, bytesBefore, filesAfter). */
-  def compactFiles(spark: SparkSession, inPath: String, outPath: String,
-      targetBytes: Long): (Int, Long, Int) = {
-    require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
-    def dataFiles(p: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(hp).toIndexedSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
-          && !s.getPath.getName.startsWith("."))
-    }
-    val before = dataFiles(inPath)
-    val bytes = before.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inPath).coalesce(nOut)
-      .write.mode("overwrite").parquet(outPath)
-    (before.size, bytes, dataFiles(outPath).size)
-  }
-
-  /** Z-order clustering for write layout: range-partition + sort by the
-    * Morton z-value of two columns so each output file covers a compact
-    * box in BOTH dimensions — parquet min/max footer stats then prune
-    * scans filtered on either column (single-column sort only prunes
-    * its own column). One range exchange, one in-partition sort; the
-    * curve itself is a narrow codegen expression
-    * ([[graft.functions.ZValue]]). Columns are masked to `bits` low
-    * bits (callers with wider domains bucket/scale first). */
-  def zorderBy(df: DataFrame, c1: String, c2: String, bits: Int = 16,
-      numFiles: Int = 64): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpr}
-    val mask = (1L << bits) - 1
-    val z = toColumn(graft.functions.ZValue(
-      toExpr(col(c1).cast("long").bitwiseAND(mask)),
-      toExpr(col(c2).cast("long").bitwiseAND(mask)), bits))
-    df.withColumn("_z", z)
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-  }
-
-  /** Hilbert clustering — [[zorderBy]] with the tighter curve
-    * ([[graft.functions.HilbertD]]): consecutive curve positions are
-    * always grid neighbors (no Morton diagonal jumps), so each output
-    * file's min/max rectangle is tighter and stats pruning cuts more.
-    * Same plan shape: one range exchange, one in-partition sort, the
-    * curve a narrow codegen expression. */
-  def hilbertBy(df: DataFrame, c1: String, c2: String, bits: Int = 16,
-      numFiles: Int = 64): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpr}
-    val mask = (1L << bits) - 1
-    val h = toColumn(graft.functions.HilbertD(
-      toExpr(col(c1).cast("long").bitwiseAND(mask)),
-      toExpr(col(c2).cast("long").bitwiseAND(mask)), bits))
-    df.withColumn("_h", h)
-      .repartitionByRange(numFiles, col("_h"))
-      .sortWithinPartitions("_h")
-      .drop("_h")
-  }
-
-  /** 3-D Hilbert clustering ([[graft.functions.HilbertD3]]) — training-
-    * data layouts cluster on THREE keys at once (source, lang, quality
-    * bucket); the 2-D curve forces one of them out of the clustering,
-    * the 3-D curve keeps all three with the same bijectivity/adjacency
-    * guarantees. Same plan shape as [[hilbertBy]]. */
-  def hilbertBy3(df: DataFrame, c1: String, c2: String, c3: String,
-      bits: Int = 10, numFiles: Int = 64): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpr}
-    val mask = (1L << bits) - 1
-    val h = toColumn(graft.functions.HilbertD3(
-      toExpr(col(c1).cast("long").bitwiseAND(mask)),
-      toExpr(col(c2).cast("long").bitwiseAND(mask)),
-      toExpr(col(c3).cast("long").bitwiseAND(mask)), bits))
-    df.withColumn("_h", h)
-      .repartitionByRange(numFiles, col("_h"))
-      .sortWithinPartitions("_h")
-      .drop("_h")
   }
 
   /** Per-partition-directory row counts and min/max of a LONG column

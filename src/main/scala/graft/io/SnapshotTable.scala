@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.{count, lit}
   * core of Delta/Iceberg, reduced to what plain parquet + atomic rename
   * can guarantee): every write is an isolated VERSION, readers see only
   * COMMITTED versions, and any past snapshot stays readable (time
-  * travel). This is the missing piece between [[Sinks.atomicParquetSwap]]
+  * travel). This is the missing piece between an atomic directory swap
   * (atomic but history-free) and a real table format, and what a
   * 100-TB ingest actually needs from its landing tables: concurrent
   * writers cannot corrupt, readers never see partial data, yesterday's
@@ -53,7 +53,7 @@ object SnapshotTable {
   private def commitDir(path: String) = new Path(path, "_commits")
 
   private final case class Commit(version: Long, action: String, rows: Long,
-      batchId: Long = -1L, dirName: String = null, query: String = null) {
+      batchId: Long = -1L, dirName: String = null) {
     /** Pre-r11 records carry no dir — they used the shared `v=<n>`. */
     def dir: String = if (dirName == null) s"v=$version" else dirName
   }
@@ -78,7 +78,7 @@ object SnapshotTable {
         def text(k: String) = s""""$k":"([^"]+)"""".r
           .findFirstMatchIn(body).map(_.group(1)).orNull
         Commit(field("version").toLong, field("action"), field("rows").toLong,
-          fieldOpt("batch").map(_.toLong).getOrElse(-1L), text("dir"), text("query"))
+          fieldOpt("batch").map(_.toLong).getOrElse(-1L), text("dir"))
       }
       .sortBy(_.version)
   }
@@ -91,12 +91,12 @@ object SnapshotTable {
     * the caller retries (the data dir it wrote is orphaned debris the
     * winning chain never reads and a later attempt reclaims). */
   def write(df: DataFrame, path: String, mode: String = "append"): Long =
-    write(df, path, mode, -1L, null)
+    write(df, path, mode, -1L)
 
   private def write(df: DataFrame, path: String, mode: String,
-      batchId: Long, query: String): Long = {
+      batchId: Long): Long = {
     val next = latestVersion(df.sparkSession, path).getOrElse(0L) + 1L
-    writeAttempt(df, path, next, mode, batchId, query)
+    writeAttempt(df, path, next, mode, batchId)
   }
 
   /** One write ATTEMPT at an explicit version — the unit the
@@ -105,7 +105,7 @@ object SnapshotTable {
     * attempt-unique dir; on a lost commit race the staged dir is
     * DELETED before rethrowing, so the loser leaves no debris. */
   private[graft] def writeAttempt(df: DataFrame, path: String, next: Long,
-      mode: String, batchId: Long = -1L, query: String = null): Long = {
+      mode: String, batchId: Long = -1L): Long = {
     require(mode == "append" || mode == "overwrite",
       s"mode must be append|overwrite, got $mode")
     val spark = df.sparkSession
@@ -119,7 +119,7 @@ object SnapshotTable {
     df.observe(written, count(lit(1)).as("rows"))
       .write.mode("overwrite").parquet(dataDir.toString)
     val rows = written.get("rows").asInstanceOf[Long]
-    try commit(spark, path, next, mode, rows, batchId, dirName, query)
+    try commit(spark, path, next, mode, rows, batchId, dirName)
     catch { case e: java.io.IOException =>
       fs(spark).delete(dataDir, true) // reclaim the loser's staging
       throw e
@@ -154,40 +154,13 @@ object SnapshotTable {
       .map { n => f.delete(new Path(path, n), true); n }
   }
 
-  /** Idempotent streaming append for `foreachBatch`: a (query, batch
-    * id) pair already in the commit log is SKIPPED, so Structured
-    * Streaming's replay of the last uncommitted micro-batch after a
-    * restart cannot double-write — the commit log doubles as the sink's
-    * transaction log (exactly-once landing on top of at-least-once
-    * delivery). The query is the streaming query id, which lives in the
-    * checkpoint: a fresh checkpoint numbers its batches from 0 again
-    * under a new id, and its batches land. A record written without a
-    * query id matches its batch id under any query. */
-  def appendBatch(df: DataFrame, path: String, batchId: Long): Option[Long] = {
-    val query = df.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
-    if (commits(df.sparkSession, path).exists(c =>
-        c.batchId == batchId && (c.query == null || c.query == query))) None
-    else Some(write(df, path, "append", batchId, query))
-  }
-
-  /** foreachBatch-ready writer: `stream` lands as one snapshot version
-    * per micro-batch with replay-safe batch ids. */
-  def appendStream(stream: DataFrame, path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        appendBatch(df, path, bid); ()
-      }
-
   /** The atomic commit step (separated so the race can be tested):
     * stage the record, then rename-without-overwrite onto the final
     * name. A concurrent writer that already committed this version
     * makes the rename refuse — we throw and the caller retries. */
   private[graft] def commit(spark: SparkSession, path: String,
       version: Long, mode: String, rows: Long, batchId: Long = -1L,
-      dataDirName: String = null, query: String = null): Unit = {
+      dataDirName: String = null): Unit = {
     val f = fs(spark)
     val dir = commitDir(path)
     f.mkdirs(dir)
@@ -195,7 +168,7 @@ object SnapshotTable {
     val out = f.create(tmp, true)
     def text(k: String, v: String) = if (v == null) "" else s""","$k":"$v""""
     try out.write(
-      s"""{"version":$version,"action":"$mode","rows":$rows,"batch":$batchId${text("dir", dataDirName)}${text("query", query)}}\n"""
+      s"""{"version":$version,"action":"$mode","rows":$rows,"batch":$batchId${text("dir", dataDirName)}}\n"""
         .getBytes("UTF-8"))
     finally out.close()
     val fin = new Path(dir, s"$version.json")
@@ -272,7 +245,7 @@ object SnapshotTable {
           .groupBy(keyCols.map(col): _*)
           .agg(sum(col("n")).as("n"), sum(col("total")).as("total"))
       }
-    write(newState, statePath, "overwrite", latest, null)
+    write(newState, statePath, "overwrite", latest)
     latest
   }
 

@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * their cached value — same as pandas. Sheets resolve through
   * `xl/workbook.xml` + its rels (sheet ORDER and NAMES, not part-file
   * naming), so `sheet = 2` is the second tab even when its part is
-  * `sheet17.xml`, and [[readXlsxByName]] addresses tabs by name. */
+  * `sheet17.xml`. */
 object Xlsx {
 
   /** Column letters of an `A1`-style reference → 0-based column index
@@ -345,16 +345,6 @@ object Xlsx {
     parseResolved(bytes, part)
   }
 
-  /** Parse the named sheet's rows (exact tab-name match). */
-  private[graft] def parseWorkbook(bytes: Array[Byte], sheetName: String)
-      : Seq[Seq[String]] = {
-    val table = sheetTable(bytes)
-    val part = table.collectFirst { case (n, p) if n == sheetName => p }
-    require(part.isDefined,
-      s"no sheet named '$sheetName'; sheets: ${table.map(_._1).mkString(", ")}")
-    parseResolved(bytes, part.get)
-  }
-
   /** Minimal .xlsx WRITER (inline strings only) — the sheet-export sink
     * (S13's dashboard-export shape, `utils/sheets.py`'s role):
     * spreadsheet TARGETS are metadata-sized by definition, so a
@@ -365,7 +355,7 @@ object Xlsx {
 
   /** Multi-sheet variant: one tab per `(name, rows)` pair, tab order =
     * argument order, correct workbook + rels wiring (round-trips through
-    * [[sheetNames]]/[[readXlsxByName]]). */
+    * [[sheetNames]]). */
   def writeXlsxSheets(file: java.io.File,
       sheets: Seq[(String, Seq[Seq[String]])]): Unit = {
     require(sheets.nonEmpty, "writeXlsxSheets needs at least one sheet")
@@ -451,57 +441,4 @@ object Xlsx {
     spark.createDataFrame(rows, schema)
   }
 
-  /** [[readXlsx]] addressed by TAB NAME instead of position — the
-    * `pd.read_excel(..., sheet_name="...")` surface. */
-  def readXlsxByName(spark: SparkSession, path: String, sheetName: String)
-      : DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select("path", "content")
-    val first = bin.orderBy("path").select("content").head
-      .getAs[Array[Byte]](0)
-    val header = parseWorkbook(first, sheetName).headOption
-      .getOrElse(Seq.empty).map(_.trim)
-    require(header.nonEmpty,
-      s"no header row in sheet '$sheetName' of first .xlsx under $path")
-    val n = header.length
-    val schema = StructType(
-      header.map(StructField(_, StringType, nullable = true)))
-    val rows = bin.select("content").rdd.flatMap { r =>
-      parseWorkbook(r.getAs[Array[Byte]](0), sheetName).drop(1).map { cells =>
-        Row.fromSeq(cells.padTo(n, "").take(n)
-          .map(c => if (c == null || c.isEmpty) null else c))
-      }
-    }
-    spark.createDataFrame(rows, schema)
-  }
-
-  /** S1 — the reference's minicore-sheet semantics on NATIVE .xlsx
-    * (`utils/parse.py:163-175`): header row 0, drop the two info/
-    * example rows and the first (sample-number) column, keep rows with
-    * a `SampleID*`, drop all-null rows — identical post-processing to
-    * [[Sources.readMinicoreCsv]], no CSV conversion step required. */
-  def readMinicoreXlsx(spark: SparkSession, path: String,
-      idCol: String = "SampleID*", sheet: Int = 1): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select("path", "content")
-    val first = bin.orderBy("path").select("content").head
-      .getAs[Array[Byte]](0)
-    val header = parseWorkbook(first, sheet).headOption
-      .getOrElse(Seq.empty).drop(1).map(_.trim)
-    require(header.nonEmpty, s"no header row in first .xlsx under $path")
-    val n = header.length
-    val schema = StructType(
-      header.map(StructField(_, StringType, nullable = true)))
-    val rows = bin.select("content").rdd.flatMap { r =>
-      parseWorkbook(r.getAs[Array[Byte]](0), sheet).drop(3).map { cells =>
-        Row.fromSeq(cells.drop(1).padTo(n, "").take(n)
-          .map(c => if (c == null || c.isEmpty) null else c))
-      }
-    }
-    val df = Sources.sanitizeColumns(spark.createDataFrame(rows, schema))
-    import org.apache.spark.sql.functions._
-    df.where(col(s"`$idCol`").isNotNull)
-      .where(coalesce(df.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
-        .isNotNull)
-  }
 }

@@ -13,9 +13,7 @@ import org.apache.spark.sql.functions._
   * miss), deterministic. The dimension is tiny and static, so the lookup
   * compiles to a chained `when` expression: fully narrow, codegen'd, zero
   * shuffle, and — unlike a join-then-regroup — it cannot change row
-  * multiplicity or choke on non-groupable (map) columns. A dynamic
-  * dimension goes through [[withReverseGeocodeFrom]], which collects the
-  * (by-definition small) box table and builds the same expression.
+  * multiplicity or choke on non-groupable (map) columns.
   */
 object Geo {
 
@@ -33,10 +31,6 @@ object Geo {
     ("Idaho", 42.00, 49.00, -117.24, -111.04),
     ("Utah", 37.00, 42.00, -114.05, -109.04),
     ("Texas", 25.84, 36.50, -106.65, -93.51))
-
-  def bboxFrame(spark: SparkSession): DataFrame =
-    spark.createDataFrame(stateBoxes)
-      .toDF("state", "lat_min", "lat_max", "long_min", "long_max")
 
   /** The geocode grammar as a single narrow expression over parsed
     * coordinates. Ambiguous box overlaps resolve to the first state in
@@ -64,25 +58,6 @@ object Geo {
       out: String = "geo_resolved"): DataFrame =
     df.withColumn(out,
       geocodeExpr(col(latCol).try_cast("double"), col(longCol).try_cast("double")))
-
-  /** Same lookup driven by a bbox DataFrame (columns state, lat_min,
-    * lat_max, long_min, long_max). A geocode dimension is small by
-    * definition, so it is collected once on the driver and inlined into
-    * the expression — the "broadcast as literal" pattern, which keeps the
-    * scan narrow instead of fanning rows out through a theta join. */
-  def withReverseGeocodeFrom(df: DataFrame, boxes: DataFrame,
-      latCol: String, longCol: String, out: String = "geo_resolved"): DataFrame = {
-    val collected = boxes
-      .select(col("state"), col("lat_min").cast("double"),
-        col("lat_max").cast("double"), col("long_min").cast("double"),
-        col("long_max").cast("double"))
-      .collect().toIndexedSeq
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2),
-        r.getDouble(3), r.getDouble(4)))
-    df.withColumn(out,
-      geocodeExpr(col(latCol).try_cast("double"), col(longCol).try_cast("double"),
-        collected))
-  }
 
   /** F22 — protected-coords masking cascade
     * (create_sheets_TEST3.py:424-500,573-607). Requires string columns

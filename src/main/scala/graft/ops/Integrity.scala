@@ -29,11 +29,6 @@ object Integrity {
           .otherwise("corrupt").as("status"),
         col("md5_actual"), col("md5_expected"))
 
-  /** The Snakemake-checkpoint semantics: true iff every manifest entry
-    * verified ok. */
-  def allOk(verified: DataFrame): Boolean =
-    verified.where(col("status") =!= "ok").isEmpty
-
   /** Referential-integrity audit of one child→parent relation: the
     * orphan census a warehouse runs before trusting joins — child rows
     * whose foreign key resolves to no parent (null FKs tallied

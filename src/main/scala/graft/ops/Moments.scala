@@ -111,7 +111,7 @@ object Moments {
     * distributed HALF of normal-equation model fitting (the classic
     * scalable linear-model shape): one map-side-combined pass over the
     * data produces a group-cardinality × O(d²) moment relation, and
-    * the d×d solve happens wherever the moments land ([[ridgeFit]]).
+    * the d×d solve happens wherever the moments land.
     * Quantize/downscale inputs so n·max(v)² fits a long — the same
     * contract as [[corrOls]]. */
   def gramMoments(df: DataFrame, groupCol: String, features: Seq[String],
@@ -133,59 +133,4 @@ object Moments {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Solve the (intercept-augmented) ridge normal equations per group
-    * from [[gramMoments]] output: β = (XᵀX + λI)⁻¹ Xᵀy with an
-    * unpenalized intercept. The moment relation is group-cardinality
-    * sized — a bounded driver materialization — and the (d+1)×(d+1)
-    * solve is Gaussian elimination with partial pivoting. Returns
-    * group → (intercept, coef_0 … coef_{d-1}); groups whose system is
-    * singular (zero variance everywhere) are absent. */
-  def ridgeFit(moments: DataFrame, groupCol: String, d: Int,
-      lambda: Double = 0.0): Map[String, Array[Double]] = {
-    require(d >= 1 && d <= 16, s"d must be in [1, 16], got $d")
-    require(lambda >= 0.0, s"lambda must be >= 0, got $lambda")
-    moments.collect().flatMap { row =>
-      val g = row.getAs[Any](groupCol).toString
-      val n = row.getAs[Long]("n").toDouble
-      val sx = (0 until d).map(i => row.getAs[Long](s"sx$i").toDouble)
-      val sxy = (0 until d).map(i => row.getAs[Long](s"sxy$i").toDouble)
-      val sy = row.getAs[Long]("sy").toDouble
-      def gram(i: Int, j: Int) =
-        row.getAs[Long](if (i <= j) s"g${i}_$j" else s"g${j}_$i").toDouble
-      // augmented system: column 0 is the intercept
-      val m = d + 1
-      val a = Array.ofDim[Double](m, m + 1)
-      a(0)(0) = n; a(0)(m) = sy
-      for (j <- 1 to d) a(0)(j) = sx(j - 1)
-      for (i <- 1 to d) {
-        a(i)(0) = sx(i - 1)
-        for (j <- 1 to d)
-          a(i)(j) = gram(i - 1, j - 1) + (if (i == j) lambda else 0.0)
-        a(i)(m) = sxy(i - 1)
-      }
-      // Gaussian elimination, partial pivoting
-      var singular = false
-      for (c <- 0 until m if !singular) {
-        val p = (c until m).maxBy(r => math.abs(a(r)(c)))
-        if (math.abs(a(p)(c)) < 1e-12) singular = true
-        else {
-          val t = a(c); a(c) = a(p); a(p) = t
-          for (r <- c + 1 until m) {
-            val f = a(r)(c) / a(c)(c)
-            for (k <- c to m) a(r)(k) -= f * a(c)(k)
-          }
-        }
-      }
-      if (singular) None
-      else {
-        val beta = new Array[Double](m)
-        for (r <- m - 1 to 0 by -1) {
-          var s = a(r)(m)
-          for (k <- r + 1 until m) s -= a(r)(k) * beta(k)
-          beta(r) = s / a(r)(r)
-        }
-        Some(g -> beta)
-      }
-    }.toMap
-  }
 }

@@ -209,14 +209,14 @@ object RankStats {
     val nb = cb.agg(count(lit(1)).as("_nb"))
     ra.crossJoin(broadcast(cb))
       .join(cells, Seq("_a", "_b"), "left")
-      .crossJoin(broadcast(na)).crossJoin(broadcast(nb))
-      .select(col("_na"), col("_nb"), col("_n"),
-        expr("""(1000000 *
+      .crossJoin(broadcast(na))
+      .select(expr("""(1000000 *
                  (cast(coalesce(_o, 0) as decimal(38,0)) * _n - cast(_r as decimal(38,0)) * _c) *
                  (cast(coalesce(_o, 0) as decimal(38,0)) * _n - cast(_r as decimal(38,0)) * _c))
                 div (cast(_n as decimal(38,0)) * _r * _c)""").as("_cell_q6"))
-      .groupBy(col("_na"), col("_nb"), col("_n"))
+      // global aggregates: an empty input still gives SQL's one row
       .agg(sum(col("_cell_q6")).as("_chi2"))
+      .crossJoin(na).crossJoin(nb)
       .select(col("_n").as("n"),
         ((col("_na") - 1) * (col("_nb") - 1)).as("df"),
         col("_chi2").cast("long").as("chi2_q6"))
@@ -243,10 +243,11 @@ object RankStats {
     val obs = df.select(valueCol.as("_d"))
       .groupBy(col("_d")).agg(count(lit(1)).as("_o"))
     val spine = domain.toDS().toDF("_d")
-    val tot = obs.join(broadcast(spine), Seq("_d"), "left_semi")
-      .agg(coalesce(sum(col("_o")), lit(0L)).as("_n"))
+    // at most |domain| rows, so the left join can build on this side
+    val inDomain = obs.join(broadcast(spine), Seq("_d"), "left_semi")
+    val tot = inDomain.agg(coalesce(sum(col("_o")), lit(0L)).as("_n"))
     val k = domain.size.toLong
-    broadcast(spine).join(obs, Seq("_d"), "left")
+    spine.join(broadcast(inDomain), Seq("_d"), "left")
       .crossJoin(broadcast(tot))
       .select(col("_n"),
         expr(s"""(1000000 *

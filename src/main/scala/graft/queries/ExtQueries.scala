@@ -3245,9 +3245,7 @@ object ExtQueries extends QueryGroup {
   /** Z-order curve verification: per-z-block stats over the Morton
     * interleave of (orderkey, partkey) low 16 bits. The oracle rebuilds
     * the interleave with pure shift/mask arithmetic, pinning the curve
-    * bit-for-bit — the correctness core of [[graft.io.Layout.zorderBy]]
-    * (the layout/write side is exercised in LayoutSpec; file stats
-    * aren't SQL-visible). */
+    * bit-for-bit (the ZValue kernel's correctness core). */
   def zorderCurve(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpr}
     val li = load(spark, dir, "lineitem")
@@ -5030,7 +5028,10 @@ object ExtQueries extends QueryGroup {
       .select($"p50".as("est_p50"), $"p90".as("est_p90"), $"p99".as("est_p99"))
     val truth = Frequency.exactQuantiles(
         ev.withColumn("_g", lit("all")), "_g", "value", Seq(0.5, 0.9, 0.99))
-      .select($"p50".as("true_p50"), $"p90".as("true_p90"), $"p99".as("true_p99"))
+      // one group, or none on an empty input: the global aggregate keeps
+      // SQL's one row
+      .agg(max($"p50").as("true_p50"), max($"p90").as("true_p90"),
+        max($"p99").as("true_p99"))
     est.crossJoin(truth)
       .select($"est_p50", $"true_p50", $"est_p90", $"true_p90",
         $"est_p99", $"true_p99")

@@ -326,9 +326,9 @@ object RetrievalQueries extends QueryGroup {
 
   /** Per-returnflag Gram moments for a 3-feature price model
     * (quantity, discount bp, tax bp → whole-unit price): the exact
-    * integer distributed half of normal-equation regression. The
-    * driver-side solve is [[graft.ops.Moments.ridgeFit]] (spec-gated;
-    * floats can't hash cross-engine, moments can). */
+    * integer distributed half of normal-equation regression (the
+    * driver-side solve is left out: floats can't hash cross-engine,
+    * moments can). */
   def olsMoments(spark: SparkSession, dir: String): DataFrame = {
     val li = load(spark, dir, "lineitem").select(
       $"l_returnflag",

@@ -53,8 +53,7 @@ object WindowQueries extends QueryGroup {
       |ORDER BY user_id, event_id""".stripMargin
 
   /** ST1 — tumbling-window arrival counts (the §2.10 streaming flagship,
-    * batch form; the streaming variant is StreamingIngest.arrivalCounts
-    * and shares this exact aggregation). */
+    * batch form). */
   def tumblingWindow(spark: SparkSession, dir: String): DataFrame = {
     val ev = load(spark, dir, "events")
     ev.groupBy(window($"ts", "1 hour").as("w"), $"event_type")

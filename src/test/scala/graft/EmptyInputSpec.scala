@@ -12,7 +12,7 @@ class EmptyInputSpec extends SparkSpec {
 
   private lazy val emptyDir: String = {
     val dir = Files.createTempDirectory("graft-empty").toString
-    Seq("customer", "orders", "lineitem", "part", "documents").foreach { t =>
+    Seq("customer", "orders", "lineitem", "part", "documents", "events").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").limit(0)
         .write.parquet(s"$dir/$t.parquet")
     }
@@ -52,5 +52,13 @@ class EmptyInputSpec extends SparkSpec {
 
   test("ext_skew_report on empty input: n_keys = 0, the rest NULL") {
     assert(run("ext_skew_report") === Seq(Row(0L, null, null, null, null)))
+  }
+
+  test("ext_chi_square on empty input: n NULL, df = (0 - 1)(0 - 1) = 1, chi2_q6 NULL") {
+    assert(run("ext_chi_square") === Seq(Row(null, 1L, null)))
+  }
+
+  test("ext_sketch_quantile on empty input: one row, every quantile NULL") {
+    assert(run("ext_sketch_quantile") === Seq(Row(null, null, null, null, null, null)))
   }
 }

@@ -39,15 +39,6 @@ class GeoSpec extends SparkSpec {
       r.getAs[String]("geo_resolved") == "USA:California") === 2)
   }
 
-  test("geocode from a dynamic bbox frame matches the static dimension") {
-    val df = Seq(("a", "37.0", "-120.0"), ("e", "51.0", "0.0"))
-      .toDF("k", "lat", "long")
-    val out = Geo.withReverseGeocodeFrom(df, Geo.bboxFrame(spark), "lat", "long")
-      .collect().map(r => r.getAs[String]("k") -> r.getAs[String]("geo_resolved")).toMap
-    assert(out("a") === "USA:California")
-    assert(out("e") === "USA:California,")
-  }
-
   test("masking keeps pre-existing descriptions on open rows") {
     // regression: when(...) with no otherwise nulled every open row's
     // description; the reference leaves non-protected rows untouched

@@ -5,7 +5,6 @@ import org.apache.spark.sql.execution.LogicalRDD
 import graft.ext.{Dedup, Sampling, Similarity, Vocab}
 import graft.queries.ExtQueries
 import graft.ops._
-import graft.streaming.StreamingIngest
 
 /** [[Iterate.loop]]: release of superseded rounds,
   * the enclosing call site restored on exit, the typed round-limit
@@ -172,9 +171,5 @@ class IterateSpec extends SparkSpec {
     assert(pairs(Dedup.resolveComponents((1L to 3L).toDF("doc_id"),
         Seq.empty[(Long, Long)].toDF("id_a", "id_b"), localFinishEdges = 0L)
       .select("doc_id", "component_id")) === Set(1L -> 1L, 2L -> 2L, 3L -> 3L))
-    assert(pairs(StreamingIngest.sequentialGreedy(
-        Seq((1L, 0L)).toDF("_nid", "dup_of"),
-        Seq.empty[(Long, Long)].toDF("_oid", "_nid"),
-        (1L to 3L).toDF("_nid"))) === Set(1L -> 0L))
   }
 }

@@ -6,31 +6,13 @@ import graft.io.Layout
 
 class LayoutSpec extends SparkSpec {
 
-  test("partitioned layout: per-project scans prune to one partition") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-layout").toString + "/samples"
-    val df = Seq(
-      ("s1", "P1", 1.0), ("s2", "P1", 2.0), ("s3", "P2", 3.0), ("s4", "P3", 4.0))
-      .toDF("sample_name", "ccgp_project_id", "v")
-    Layout.writePartitioned(df, dir)
-
-    val scan = spark.read.parquet(dir).where(col("ccgp_project_id") === "P1")
-    assert(scan.count() === 2)
-    val plan = scan.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    // the predicate became a partition filter (pruned scan), not a data filter
-    assert(plan.contains("PartitionFilters") &&
-      plan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
-        .contains("ccgp_project_id"), plan)
-  }
-
   test("dynamic partition pruning: a dim filter prunes the partitioned fact at runtime") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-dpp").toString + "/fact"
     // partitioned fact: 8 partitions, values only in the key column's dir
     val fact = (1 to 800).map(i => (i.toLong, s"P${i % 8}", i * 1.5))
       .toDF("id", "ccgp_project_id", "v")
-    Layout.writePartitioned(fact, dir)
+    fact.write.partitionBy("ccgp_project_id").parquet(dir)
     // the dim must be a real source: a local Seq is constant-folded to a
     // LocalRelation, which swallows the Filter node DPP keys off
     val dimDir = Files.createTempDirectory("graft-dpp-dim").toString + "/dim"
@@ -98,43 +80,6 @@ class LayoutSpec extends SparkSpec {
     assert(lines === Set("Found 2 reads.", "Found 1 samples."))
   }
 
-  test("bucketed tables join and aggregate with zero exchanges") {
-    import spark.implicits._
-    val orders = Tables.load(spark, sfDir, "orders")
-      .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-    val li = Tables.load(spark, sfDir, "lineitem")
-      .select($"l_orderkey", $"l_quantity")
-    Layout.writeBucketed(orders, "b_orders", "o_orderkey", 4)
-    Layout.writeBucketed(li.withColumnRenamed("l_orderkey", "o_orderkey"),
-      "b_lineitem", "o_orderkey", 4)
-    try {
-      val bo = spark.table("b_orders")
-      val bl = spark.table("b_lineitem")
-      // force the non-broadcast path (the layout exists for big-big joins)
-      val joined = bo.hint("merge").join(bl, "o_orderkey")
-        .groupBy($"o_orderkey").agg(sum($"l_quantity").as("qty"))
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      import org.apache.spark.sql.execution.exchange.Exchange
-      val exchanges = joined.queryExecution.executedPlan.collect {
-        case e: Exchange => e }
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(exchanges.isEmpty,
-        s"bucketed join+agg must be exchange-free\n$plan")
-      // and the answer matches the unbucketed join
-      val want = orders.join(
-          li.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey")
-        .groupBy($"o_orderkey").agg(sum($"l_quantity").as("qty"))
-      // rounded: the two plans sum each group in different orders
-      def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e6))).toSet
-      assert(asSet(joined) === asSet(want))
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    }
-  }
-
   private def withConfs[T](kvs: Seq[(String, String)])(body: => T): T = {
     val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -143,32 +88,6 @@ class LayoutSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-  }
-
-  test("compactFiles: ceil(bytes/target) output files, shuffle-free plan, content intact") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-compact").toString
-    val in = s"$base/in"; val out = s"$base/out"
-    val df = (1L to 10000L).map(i => (i, "v" * 50)).toDF("id", "payload")
-    df.repartition(64).write.parquet(in)
-    val bytes = new java.io.File(in).listFiles()
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map(_.length).sum
-    val (nBefore, bytesSeen, nAfter) =
-      Layout.compactFiles(spark, in, out, targetBytes = (bytes + 2) / 3)
-    assert(nBefore === 64)
-    assert(bytesSeen === bytes)
-    assert(nAfter === 3, s"expected 3 compacted files, got $nAfter")
-    // the compaction frame itself plans with no Exchange (coalesce, not
-    // repartition — each output task reads input files end-to-end)
-    val plan = spark.read.parquet(in).coalesce(3)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
-    // content survives byte-for-byte
-    val got = spark.read.parquet(out).collect()
-      .map(r => (r.getLong(0), r.getString(1))).sorted
-    assert(got.length === 10000 && got.sameElements(
-      df.collect().map(r => (r.getLong(0), r.getString(1))).sorted))
   }
 
   test("AQE splits the hot partition of a skewed sort-merge join at runtime") {
@@ -255,8 +174,7 @@ class LayoutSpec extends SparkSpec {
       HilbertKernel.xy2d(4, 3L, 7L))
   }
 
-  test("hilbert3 kernel: bijective on the full cube, consecutive distances are " +
-      "ALWAYS grid neighbors; masking contract; hilbertBy3 plan shape") {
+  test("hilbert3 kernel: bijective on the cube, steps are grid neighbors, coords mask") {
     import graft.functions.Hilbert3Kernel
     // bits=3: a bijection 8x8x8 -> [0, 512)
     val d2xyz = (for (x <- 0L until 8L; y <- 0L until 8L; z <- 0L until 8L)
@@ -273,73 +191,5 @@ class LayoutSpec extends SparkSpec {
     // coordinates above the grid mask down
     assert(Hilbert3Kernel.xyz2d(3, 8L + 3L, 16L + 5L, 24L + 7L) ===
       Hilbert3Kernel.xyz2d(3, 3L, 5L, 7L))
-    // hilbertBy3 plans as one range exchange, like the 2-D form
-    import spark.implicits._
-    val li = Tables.load(spark, sfDir, "lineitem")
-      .select($"l_orderkey", $"l_partkey", $"l_suppkey")
-    val clustered = Layout.hilbertBy3(li,
-      "l_orderkey", "l_partkey", "l_suppkey", bits = 10, numFiles = 8)
-    val plan = clustered.queryExecution.executedPlan.toString
-    assert(plan.split("rangepartitioning").length - 1 +
-      plan.split("RangePartitioning").length - 1 >= 1, plan)
-    assert(!plan.contains("hashpartitioning"), plan)
-  }
-
-  test("zorderBy: one range exchange; output partitions cover compact 2-D boxes") {
-    import spark.implicits._
-    val li = Tables.load(spark, sfDir, "lineitem")
-      .select($"l_orderkey", $"l_partkey")
-    val clustered = Layout.zorderBy(li, "l_orderkey", "l_partkey",
-      bits = 16, numFiles = 8)
-    val plan = clustered.queryExecution.executedPlan.toString
-    assert(plan.split("rangepartitioning").length - 1 +
-      plan.split("RangePartitioning").length - 1 >= 1, plan)
-    assert(!plan.contains("hashpartitioning"), plan)
-    // locality: the average per-partition bounding box is far smaller
-    // than the global box (that is what makes footer stats prune)
-    val boxes = clustered
-      .withColumn("pid", spark_partition_id())
-      .withColumn("x", $"l_orderkey".bitwiseAND(65535L))
-      .withColumn("y", $"l_partkey".bitwiseAND(65535L))
-      .groupBy($"pid")
-      .agg(min($"x").as("x0"), max($"x").as("x1"),
-        min($"y").as("y0"), max($"y").as("y1"))
-      .collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    assert(boxes.length >= 4)
-    val gx0 = boxes.map(_._1).min; val gx1 = boxes.map(_._2).max
-    val gy0 = boxes.map(_._3).min; val gy1 = boxes.map(_._4).max
-    val global = (gx1 - gx0 + 1).toDouble * (gy1 - gy0 + 1)
-    val avg = boxes.map(b => (b._2 - b._1 + 1).toDouble * (b._4 - b._3 + 1))
-      .sum / boxes.length
-    assert(avg < global / 2, s"avg box $avg vs global $global")
-  }
-
-  test("hilbertBy: same plan shape as zorderBy, compact per-partition boxes") {
-    import spark.implicits._
-    val li = Tables.load(spark, sfDir, "lineitem")
-      .select($"l_orderkey", $"l_partkey")
-    val clustered = Layout.hilbertBy(li, "l_orderkey", "l_partkey",
-      bits = 16, numFiles = 8)
-    val plan = clustered.queryExecution.executedPlan.toString
-    assert(plan.split("rangepartitioning").length - 1 +
-      plan.split("RangePartitioning").length - 1 >= 1, plan)
-    assert(!plan.contains("hashpartitioning"), plan)
-    val boxes = clustered
-      .withColumn("pid", spark_partition_id())
-      .withColumn("x", $"l_orderkey".bitwiseAND(65535L))
-      .withColumn("y", $"l_partkey".bitwiseAND(65535L))
-      .groupBy($"pid")
-      .agg(min($"x").as("x0"), max($"x").as("x1"),
-        min($"y").as("y0"), max($"y").as("y1"))
-      .collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    assert(boxes.length >= 4)
-    val gx0 = boxes.map(_._1).min; val gx1 = boxes.map(_._2).max
-    val gy0 = boxes.map(_._3).min; val gy1 = boxes.map(_._4).max
-    val global = (gx1 - gx0 + 1).toDouble * (gy1 - gy0 + 1)
-    val avg = boxes.map(b => (b._2 - b._1 + 1).toDouble * (b._4 - b._3 + 1))
-      .sum / boxes.length
-    assert(avg < global / 2, s"avg box $avg vs global $global")
   }
 }

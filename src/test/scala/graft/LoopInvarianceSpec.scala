@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.{Contamination, Dedup, Retrieval, Sampling, Similarity, TextStats, Vocab}
 import graft.ops._
-import graft.streaming.StreamingIngest
 
 /** Every iterative operator, and every operator that spreads a narrow
   * input to the task slots, gives the same answer whatever the physical
@@ -83,16 +82,13 @@ class LoopInvarianceSpec extends SparkSpec {
     invariant("KTruss.decompose")(Seq(KTruss.decompose(sym, maxK = 5)))
   }
 
-  test("resolveComponents and sequentialGreedy are layout-invariant") {
+  test("resolveComponents is layout-invariant") {
     val docs = (0L until 50L).toDF("doc_id")
     val pairDf = pairs.toDF("id_a", "id_b")
     invariant("resolveComponents distributed")(Seq(
       Dedup.resolveComponents(docs, pairDf, localFinishEdges = 0L)))
     invariant("resolveComponents local finish")(Seq(
       Dedup.resolveComponents(docs, pairDf)))
-    invariant("sequentialGreedy")(Seq(StreamingIngest.sequentialGreedy(
-      Seq((5L, -5L), (17L, -17L)).toDF("_nid", "dup_of"),
-      pairs.toDF("_oid", "_nid"), (0L until 50L).toDF("_nid"))))
   }
 
   test("rakeWeights and topComponent are layout-invariant") {

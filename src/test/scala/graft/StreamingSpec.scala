@@ -14,82 +14,6 @@ class StreamingSpec extends SparkSpec {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  test("streaming tumbling-window counts match the batch aggregation") {
-    val batchEvents = Tables.load(spark, sfDir, "events")
-    // landing dir with the events as parquet parts
-    val landing = tmpDir("graft-landing")
-    batchEvents.write.mode("overwrite").parquet(landing)
-
-    val schema = spark.read.parquet(landing).schema
-    val stream = StreamingIngest.landingStream(spark, landing, schema)
-    val agg = StreamingIngest.arrivalCounts(stream)
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory").queryName("arrivals")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-
-    val got = spark.table("arrivals")
-      .select($"window_start", $"event_type", $"n")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    val want = batchEvents
-      .groupBy(window($"ts", "1 hour"), $"event_type")
-      .agg(count(lit(1)).as("n"))
-      .select($"window.start", $"event_type", $"n")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    assert(got === want)
-  }
-
-  test("streaming sliding windows match the batch sliding aggregation") {
-    val batchEvents = Tables.load(spark, sfDir, "events")
-    val landing = tmpDir("graft-landing-slide")
-    batchEvents.write.mode("overwrite").parquet(landing)
-
-    val schema = spark.read.parquet(landing).schema
-    val stream = StreamingIngest.landingStream(spark, landing, schema)
-    val q = StreamingIngest.slidingCounts(stream).writeStream
-      .outputMode("complete")
-      .format("memory").queryName("sliding")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-
-    def asSet(df: org.apache.spark.sql.DataFrame) = df
-      .select($"window_start", $"event_type", $"n", $"total_value")
-      .collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    val got = asSet(spark.table("sliding"))
-    val want = asSet(batchEvents
-      .groupBy(window($"ts", "1 hour", "15 minutes"), $"event_type")
-      .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total_value"))
-      .select($"window.start".as("window_start"), $"event_type", $"n", $"total_value"))
-    assert(got === want)
-  }
-
-  test("streaming session windows match the batch session_window aggregation") {
-    val batchEvents = Tables.load(spark, sfDir, "events")
-    val landing = tmpDir("graft-landing-sess")
-    batchEvents.write.mode("overwrite").parquet(landing)
-
-    val schema = spark.read.parquet(landing).schema
-    val stream = StreamingIngest.landingStream(spark, landing, schema)
-    val q = StreamingIngest.sessionCounts(stream).writeStream
-      .outputMode("complete")
-      .format("memory").queryName("sessions")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-
-    def asSet(df: org.apache.spark.sql.DataFrame) = df
-      .select($"user_id", $"session_start", $"n_events")
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))).toSet
-    val got = asSet(spark.table("sessions"))
-    val want = asSet(batchEvents
-      .groupBy($"user_id", session_window($"ts", "30 minutes"))
-      .agg(count(lit(1)).as("n_events"))
-      .select($"user_id", $"session_window.start".as("session_start"), $"n_events"))
-    assert(got === want)
-  }
-
   test("streaming corpus filter matches batch: stateless narrow ops stream as-is") {
     // filterCorpus is a pure narrow pass (no aggregation, no state), so
     // the SAME operator drops into readStream unchanged — the property
@@ -150,789 +74,6 @@ class StreamingSpec extends SparkSpec {
       !phys.contains("CartesianProduct"), phys)
   }
 
-  test("left-outer interval join: unmatched rows emit with nulls only after the watermark clears their window") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits.{newLongEncoder, newProductEncoder, localSeqToDatasetHolder}
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = 1700000000000L
-    val ts = (ms: Long) => new java.sql.Timestamp(t0 + ms)
-    val lIn = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val rIn = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val l = lIn.toDS().toDF("user_id", "view_id", "view_ts")
-    val r = rIn.toDS().toDF("user_id", "click_id", "click_ts")
-    val q = StreamingIngest.intervalJoinOuter(l, r, "user_id",
-        "view_ts", "click_ts", "1 hour", watermark = "1 second")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ssj_outer").start()
-    try {
-      lIn.addData((1L, 10L, ts(0)), (2L, 20L, ts(0)))
-      rIn.addData((1L, 100L, ts(600000))) // u1 clicks 10 min in → matches
-      q.processAllAvailable()
-      // nothing evictable yet: u2's window is still open
-      val mid = spark.table("ssj_outer").collect()
-      assert(!mid.exists(_.isNullAt(2)), "null row emitted before watermark")
-      // sentinel far-future rows advance BOTH watermarks past u2's window
-      lIn.addData((98L, 990L, ts(86400000L)))
-      rIn.addData((99L, 991L, ts(86400000L)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("ssj_outer")
-      .select(col("view_id"), col("click_id"))
-      .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-      .toSet
-    // v10 matched; v20 null-padded after eviction; the sentinel view's own
-    // window is still open, so it must NOT have emitted
-    assert(got === Set((10L, 100L), (20L, -1L)))
-    // batch degeneration: identical call on batch frames = plain left join
-    val bl = Seq((1L, 10L, ts(0)), (2L, 20L, ts(0))).toDF("user_id", "view_id", "view_ts")
-    val br = Seq((1L, 100L, ts(600000))).toDF("user_id", "click_id", "click_ts")
-    val batch = StreamingIngest.intervalJoinOuter(bl, br, "user_id",
-        "view_ts", "click_ts", "1 hour")
-      .select(col("view_id"), col("click_id"))
-      .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSet
-    assert(batch === Set((10L, 100L), (20L, -1L)))
-  }
-
-  test("stream-static enrichment matches the batch join; dim hop broadcasts") {
-    val ev = Tables.load(spark, sfDir, "events")
-    val landing = tmpDir("graft-landing-enrich")
-    ev.write.mode("overwrite").parquet(landing)
-    val schema = spark.read.parquet(landing).schema
-    // dimension: per-user first-seen event type (from the batch table)
-    val dim = ev.groupBy($"user_id")
-      .agg(min_by($"event_type", struct($"ts", $"event_id")).as("first_type"))
-    val stream = spark.readStream.schema(schema).parquet(landing)
-    val q = StreamingIngest.enrichStream(stream, dim, Seq("user_id"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("enriched").start()
-    try q.processAllAvailable() finally q.stop()
-    def asSet(df: org.apache.spark.sql.DataFrame) = df
-      .select($"event_id", $"first_type")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val got = asSet(spark.table("enriched"))
-    val want = asSet(StreamingIngest.enrichStream(ev, dim, Seq("user_id")))
-    assert(got === want && got.nonEmpty)
-    // the lookup is a broadcast join (no stream-side shuffle, no state)
-    val plan = StreamingIngest.enrichStream(ev, dim, Seq("user_id"))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
-  }
-
-  test("asofJoinStream: multi-batch stream-static as-of == batch asofBackward; " +
-      "no-prior/null-key rows keep nulls") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    implicit val sqlCtx = spark.sqlContext
-    val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000L)
-    // dimension HISTORY: several versions per key, incl. an equal-ts
-    // duplicate (payload tie-break) and a null-key row (dropped)
-    val dim = Seq(
-      ("A", ts(10), 100L), ("A", ts(30), 300L), ("A", ts(30), 250L),
-      ("B", ts(20), 500L), (null, ts(5), 999L)
-    ).toDF("k", "ts", "price")
-    val probes = Seq(
-      ("A", ts(10), 1L),  // equal-ts match → 100
-      ("A", ts(35), 2L),  // latest of the ts(30) pair → 300
-      ("A", ts(5), 3L),   // before any version → null
-      ("B", ts(50), 4L),
-      ("C", ts(40), 5L),  // unknown key → null
-      (null.asInstanceOf[String], ts(40), 6L)) // null key → null
-    val (b1, b2) = probes.splitAt(3)
-    val input = MemoryStream[(String, java.sql.Timestamp, Long)]
-    val q = StreamingIngest.asofJoinStream(
-        input.toDS().toDF("k", "ts", "qty"), dim, Seq("k"), "ts")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("asof_stream").start()
-    try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    def asSet(df: org.apache.spark.sql.DataFrame) = df
-      .select($"qty", $"r_price",
-        unix_micros($"r_ts"))
-      .collect().map(r => (r.getLong(0),
-        if (r.isNullAt(1)) null else r.getLong(1),
-        if (r.isNullAt(2)) null else r.getLong(2))).toSet
-    val got = asSet(spark.table("asof_stream"))
-    val want = asSet(graft.ops.AsofJoin.asofBackward(
-      probes.toDF("k", "ts", "qty"), dim, Seq("k"), "ts"))
-    assert(got === want)
-    assert(got.size === 6)
-    // spot-pin the semantics, not just the parity
-    val byQty = spark.table("asof_stream").collect()
-      .map(r => r.getAs[Long]("qty") ->
-        Option(r.getAs[java.lang.Long]("r_price"))).toMap
-    assert(byQty(1L) === Some(100L)) // equal-ts matches
-    assert(byQty(2L) === Some(300L)) // greatest payload on (key,ts) tie
-    assert(byQty(3L) === None)       // no prior version
-    assert(byQty(5L) === None)       // unknown key
-    assert(byQty(6L) === None)       // null key
-  }
-
-  test("preferenceSink: win matrix maintained across micro-batches; " +
-      "the leaderboard equals the one-shot batch Bradley-Terry fit") {
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    val outcomes = Seq(
-      ("A", "B"), ("A", "B"), ("A", "B"), ("B", "A"),
-      ("A", "C"), ("A", "C"), ("C", "B"), ("B", "C"))
-      .toDF("winner", "loser")
-    val landing = tmpDir("graft-pref-landing")
-    // several part files + 1 file per trigger -> several micro-batches,
-    // so the ADDITIVE matrix merge is what's under test
-    outcomes.repartition(4).write.mode("overwrite").parquet(landing)
-    val schema = spark.read.parquet(landing).schema
-    val stream = StreamingIngest.landingStream(spark, landing, schema,
-      maxFilesPerTrigger = 1)
-    val target = tmpDir("graft-pref-target") + "/matrix"
-    val q = StreamingIngest.preferenceSink(stream, target,
-      tmpDir("graft-pref-ckpt")).start()
-    try q.awaitTermination() finally q.stop()
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getLong(4))).sortBy(_._1)
-    val got = rows(StreamingIngest.preferenceLeaderboard(spark, target))
-    val want = rows(graft.ext.Preference.bradleyTerry(outcomes))
-    assert(got === want && got.length === 3)
-    // the maintained matrix itself is the exact directed win count
-    val m = spark.read.parquet(target)
-      .select($"winner", $"loser", $"n").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(m === Map(("A", "B") -> 3L, ("B", "A") -> 1L,
-      ("A", "C") -> 2L, ("C", "B") -> 1L, ("B", "C") -> 1L))
-  }
-
-  test("runningAggSink: multi-batch additive maintenance equals the batch aggregate") {
-    val ev = Tables.load(spark, sfDir, "events")
-    val landing = tmpDir("graft-landing-ragg")
-    // many part files + maxFilesPerTrigger=2 forces SEVERAL micro-batches,
-    // so the additive merge across batches is what's under test
-    ev.repartition(6).write.mode("overwrite").parquet(landing)
-    val schema = spark.read.parquet(landing).schema
-    val stream = StreamingIngest.landingStream(spark, landing, schema,
-      maxFilesPerTrigger = 2)
-    val target = tmpDir("graft-ragg-target") + "/agg"
-    val q = StreamingIngest.runningAggSink(stream, target,
-      Seq("event_type"), "value", tmpDir("graft-ragg-ckpt")).start()
-    try q.awaitTermination() finally q.stop()
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getString(0) ->
-        ((r.getLong(1), math.round(r.getDouble(2) * 1e4)))).toMap
-    val got = asMap(spark.read.parquet(target)
-      .select($"event_type", $"n", $"total"))
-    val want = asMap(ev.groupBy($"event_type")
-      .agg(count(lit(1)).as("n"), sum($"value").as("total"))
-      .select($"event_type", $"n", $"total"))
-    assert(got === want && got.size >= 3)
-  }
-
-  test("runningAggSink crash window: a replayed batch (table swapped, " +
-      "checkpoint commit lost) is a no-op — the additive merge cannot " +
-      "double-count") {
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    val landing = tmpDir("graft-ragg-crash-landing")
-    val target = tmpDir("graft-ragg-crash-target") + "/agg"
-    val ckpt = tmpDir("graft-ragg-crash-ckpt")
-    def land(rows: Seq[(String, Double)], part: String): Unit =
-      rows.toDF("event_type", "value").coalesce(1)
-        .write.mode("overwrite").parquet(s"$landing/$part")
-    def drain(): Unit = {
-      val schema = spark.read.parquet(s"$landing/*").schema
-      val stream = spark.readStream.schema(schema).parquet(s"$landing/*")
-      val q = StreamingIngest.runningAggSink(stream, target,
-        Seq("event_type"), "value", ckpt).start()
-      try q.awaitTermination() finally q.stop()
-      // the checkpoint stays registered as in-use for a beat after
-      // termination — restarting on it too fast trips Spark's
-      // concurrent-checkpoint guard
-      var waited = 0
-      while (spark.streams.active.nonEmpty && waited < 100) {
-        Thread.sleep(100); waited += 1
-      }
-    }
-    def got(): Map[String, (Long, Double)] = spark.read.parquet(target)
-      .select($"event_type", $"n", $"total").collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    land(Seq(("a", 1.0), ("a", 2.0), ("b", 5.0)), "p1")
-    drain()
-    assert(got() === Map("a" -> ((2L, 3.0)), "b" -> ((1L, 5.0))))
-    // crash simulation: the sink committed (swap + _graft_batch sidecar)
-    // but the STREAMING checkpoint lost batch 0's commit record — on
-    // restart Structured Streaming replays batch 0 with the same files
-    val commit0 = new java.io.File(s"$ckpt/commits/0")
-    assert(commit0.exists, s"expected streaming commit record at $commit0")
-    assert(commit0.delete())
-    // the local FS keeps a checksum sidecar; a real crash never wrote
-    // either file, so drop it with the commit record
-    new java.io.File(s"$ckpt/commits/.0.crc").delete()
-    drain() // replay — without the sidecar gate this doubles every count
-    assert(got() === Map("a" -> ((2L, 3.0)), "b" -> ((1L, 5.0))))
-    // and the NEXT real batch still merges normally
-    land(Seq(("a", 10.0), ("c", 7.0)), "p2")
-    drain()
-    assert(got() === Map("a" -> ((3L, 13.0)), "b" -> ((1L, 5.0)),
-      "c" -> ((1L, 7.0))))
-  }
-
-  test("nearDupSink: incremental near-dup dedup against the growing index — " +
-      "cross-batch rejects, sequential greedy in-batch, survivors extend the index") {
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    // fully disjoint token sets across distinct docs -> no false bands;
-    // exact copies -> identical signatures -> always caught
-    def text(i: Long): String = (0 until 12).map(j => s"a${i}b$j").mkString(" ")
-    val landing = tmpDir("graft-neardup-landing")
-    val idxP = tmpDir("graft-neardup-idx") + "/idx"
-    val keepP = tmpDir("graft-neardup-keep")
-    val rejP = tmpDir("graft-neardup-rej")
-    val ckpt = tmpDir("graft-neardup-ckpt")
-    val b1 = Seq((1L, text(1)), (2L, text(2)), (3L, text(3)),
-      (4L, text(4)), (5L, text(5)), (6L, text(6)),
-      (7L, text(3))) // in-batch exact copy of 3 -> 3 kept, 7 rejected
-    val b2 = Seq((11L, text(11)),
-      (12L, text(3)),  // copy of an INDEXED doc -> cross-batch reject
-      (13L, text(13)),
-      (14L, text(13)), // in-batch copy -> dup_of 13
-      (15L, text(15)))
-    def run(rows: Seq[(Long, String)], part: String): Unit = {
-      rows.toDF("doc_id", "text").coalesce(1)
-        .write.mode("overwrite").parquet(s"$landing/$part")
-      val schema = spark.read.parquet(s"$landing/$part").schema
-      val stream = spark.readStream.schema(schema).parquet(s"$landing/*")
-      val q = StreamingIngest.nearDupSink(stream, idxP, keepP, rejP, ckpt)
-        .start()
-      try q.awaitTermination() finally q.stop()
-    }
-    run(b1, "p1")
-    run(b2, "p2")
-    val kept = spark.read.parquet(s"$keepP/b*")
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
-    val rej = spark.read.parquet(s"$rejP/b*")
-      .select($"doc_id", $"dup_of").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(kept === Set(1L, 2L, 3L, 4L, 5L, 6L, 11L, 13L, 15L))
-    assert(rej === Map(7L -> 3L, 12L -> 3L, 14L -> 13L))
-    // the index holds band rows for SURVIVORS only
-    val idxIds = spark.read.parquet(s"$idxP/b*")
-      .select($"doc_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(idxIds === kept)
-    // keep output carries the original columns, not the working ones
-    val cols = spark.read.parquet(s"$keepP/b*").columns.toSet
-    assert(cols === Set("doc_id", "text"))
-  }
-
-
-  test("sequentialGreedy: chains keep every other doc, idx-rejected neighbors " +
-      "cannot reject, anchors always point at kept/indexed docs") {
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder, newLongEncoder}
-    def ids(xs: Long*) = xs.toDF("_nid")
-    def edges(xs: (Long, Long)*) = xs.toDF("_oid", "_nid")
-    def idx(xs: (Long, Long)*) = xs.toDF("_nid", "dup_of")
-    def run(i: org.apache.spark.sql.DataFrame, e: org.apache.spark.sql.DataFrame,
-        d: org.apache.spark.sql.DataFrame) =
-      StreamingIngest.sequentialGreedy(i, e, d)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // chain 1-2-3: greedy keeps 1, rejects 2 against 1, KEEPS 3 (its only
-    // candidate 2 never entered the corpus) — min-id-wins wrongly dropped 3
-    assert(run(idx(), edges((1L, 2L), (2L, 3L)), ids(1L, 2L, 3L)) ===
-      Map(2L -> 1L))
-    // 4-chain: alternation continues
-    assert(run(idx(), edges((1L, 2L), (2L, 3L), (3L, 4L)), ids(1L, 2L, 3L, 4L)) ===
-      Map(2L -> 1L, 4L -> 3L))
-    // triangle: 1 kept, both others anchor at 1
-    assert(run(idx(), edges((1L, 2L), (1L, 3L), (2L, 3L)), ids(1L, 2L, 3L)) ===
-      Map(2L -> 1L, 3L -> 1L))
-    // doc 1 is index-rejected: it never enters the corpus, so it cannot
-    // reject 2 — and 2's own anchor chain ends (2 kept)
-    assert(run(idx((1L, 0L)), edges((1L, 2L)), ids(1L, 2L)) === Map(1L -> 0L))
-    // index rejection + in-batch edge from the SAME doc: idx anchor stands,
-    // 2 survives because 1 is out
-    assert(run(idx((1L, 0L)), edges((1L, 2L), (2L, 3L)), ids(1L, 2L, 3L)) ===
-      Map(1L -> 0L, 3L -> 2L))
-    // chain-fed anchor: 6 is rejected in the FIRST relational round by
-    // the then-kept 5, but 3 only resolves kept in round 2 — the
-    // literal replay anchors 6 at min(3, 5) = 3, not 5
-    assert(run(idx(), edges((1L, 2L), (2L, 3L), (3L, 6L), (5L, 6L)),
-      ids(1L, 2L, 3L, 5L, 6L)) === Map(2L -> 1L, 6L -> 3L))
-  }
-
-  test("sequentialGreedy equals the literal sequential simulation on random " +
-      "candidate graphs with random index rejects") {
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder, newLongEncoder}
-    val rnd = new scala.util.Random(31)
-    // denser trials feed the chain-fed anchor structure (a doc rejected
-    // in an early round whose smaller neighbor only keeps later)
-    for (trial <- 1 to 8) {
-      val nIds = 24
-      val ids = (1L to nIds).toSeq
-      val density = if (trial <= 4) 0.12 else 0.22
-      val edges = (for {
-        a <- ids; b <- ids if a < b && rnd.nextDouble() < density
-      } yield (a, b)).distinct
-      val idxRej = ids.filter(_ => rnd.nextDouble() < 0.15).map(i => (i, -i))
-      // literal simulation: ascending ids; reject on idx match or a
-      // KEPT smaller candidate; anchor = idx anchor, else min kept nbr
-      val idxMap = idxRej.toMap
-      var kept = Set.empty[Long]
-      var rej = Map.empty[Long, Long]
-      for (i <- ids) {
-        if (idxMap.contains(i)) rej += i -> idxMap(i)
-        else {
-          val keptNbrs = edges.collect { case (o, n) if n == i && kept(o) => o }
-          if (keptNbrs.nonEmpty) rej += i -> keptNbrs.min
-          else kept += i
-        }
-      }
-      val got = StreamingIngest.sequentialGreedy(
-          idxRej.toDF("_nid", "dup_of"), edges.toDF("_oid", "_nid"),
-          ids.toDF("_nid"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === rej, s"trial $trial: edges=$edges idx=$idxRej")
-    }
-  }
-
-  test("asofJoinStream: fact-sized dimension history fails LOUDLY at build, " +
-      "not as a driver OOM") {
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000L)
-    val dim = (1L to 50L).map(i => (s"k$i", ts(i), i)).toDF("k", "ts", "price")
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.TimestampType))))
-      .parquet(tmpDir("graft-asof-guard"))
-    val e = intercept[IllegalArgumentException] {
-      StreamingIngest.asofJoinStream(stream, dim, Seq("k"), "ts",
-        maxDimRows = 10L)
-    }
-    assert(e.getMessage.contains("maxDimRows"))
-    // the guard names the graceful-degrade path
-    assert(e.getMessage.contains("asofJoinSink"))
-    // the same history under the bound builds fine
-    StreamingIngest.asofJoinStream(stream, dim, Seq("k"), "ts",
-      maxDimRows = 50L)
-  }
-
-  test("asofJoinSink: an over-broadcast-bound history still answers — " +
-      "per-batch shuffle as-of equals batch asofBackward") {
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000L)
-    // history big enough that asofJoinStream at maxDimRows=10 refuses
-    // it; one NULL-ts version rides along — it must be dropped (the
-    // asofJoinStream contract), not matched as the "earliest" version
-    val dim = ((1L to 50L).flatMap(i =>
-      Seq((s"k${i % 5}", ts(i), i), (s"k${i % 5}", ts(i + 100), i + 100))) :+
-      (("k2", null.asInstanceOf[java.sql.Timestamp], 777L)))
-      .toDF("k", "ts", "price")
-    val probes = Seq(
-      ("k1", ts(60), 1L),   // mid-history
-      ("k2", ts(0), 2L),    // before any version -> null
-      ("k3", ts(500), 3L),  // after everything -> latest
-      (null.asInstanceOf[String], ts(60), 4L)) // null key -> null
-    val (b1, b2) = probes.splitAt(2)
-    val landing = tmpDir("graft-asofsink-landing")
-    val out = tmpDir("graft-asofsink-out") + "/asof"
-    val ckpt = tmpDir("graft-asofsink-ckpt")
-    def drain(rows: Seq[(String, java.sql.Timestamp, Long)], part: String): Unit = {
-      rows.toDF("k", "ts", "qty").coalesce(1)
-        .write.mode("overwrite").parquet(s"$landing/$part")
-      val schema = spark.read.parquet(s"$landing/$part").schema
-      val stream = spark.readStream.schema(schema).parquet(s"$landing/*")
-      val q = StreamingIngest.asofJoinSink(stream, dim, Seq("k"), "ts",
-        out, ckpt).start()
-      try q.awaitTermination() finally q.stop()
-    }
-    drain(b1, "p1"); drain(b2, "p2")
-    def asSet(df: org.apache.spark.sql.DataFrame) = df
-      .select($"qty", $"r_price", unix_micros($"r_ts"))
-      .collect().map(r => (r.getLong(0),
-        if (r.isNullAt(1)) null else r.getLong(1),
-        if (r.isNullAt(2)) null else r.getLong(2))).toSet
-    val got = asSet(spark.read.parquet(s"$out/b*"))
-    val want = asSet(graft.ops.AsofJoin.asofBackward(
-      probes.toDF("k", "ts", "qty"), dim.where($"ts".isNotNull),
-      Seq("k"), "ts"))
-    assert(got === want)
-    assert(got.size === 4)
-    // the null-ts history row never matched: the before-any-version
-    // probe on its key stays null instead of picking up price 777
-    assert(got.exists(t => t._1 == 2L && t._2 == null), got.toString)
-  }
-
-  test("runningAggSink: a recreated checkpoint (batch ids restarted) fails " +
-      "LOUDLY against the existing target instead of silently skipping") {
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    val landing = tmpDir("graft-ragg-qid-landing")
-    val target = tmpDir("graft-ragg-qid-target") + "/agg"
-    val ckpt1 = tmpDir("graft-ragg-qid-ckpt1")
-    def drain(rows: Seq[(String, Double)], part: String, ckpt: String): Unit = {
-      rows.toDF("event_type", "value").coalesce(1)
-        .write.mode("overwrite").parquet(s"$landing/$part")
-      val schema = spark.read.parquet(s"$landing/*").schema
-      val stream = spark.readStream.schema(schema).parquet(s"$landing/*")
-      val q = StreamingIngest.runningAggSink(stream, target,
-        Seq("event_type"), "value", ckpt).start()
-      try q.awaitTermination() finally q.stop()
-    }
-    drain(Seq(("a", 1.0), ("b", 2.0)), "p1", ckpt1)
-    assert(spark.read.parquet(target).count() === 2L)
-    // a NEW checkpoint restarts batch ids at 0 — the unscoped pre-r11
-    // marker would skip the replayed batch silently (data loss); the
-    // query-id-scoped marker must refuse instead
-    val ckpt2 = tmpDir("graft-ragg-qid-ckpt2")
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      drain(Seq(("c", 3.0)), "p2", ckpt2)
-    }
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: causes(t.getCause)
-    assert(causes(e).exists(c =>
-      c.isInstanceOf[IllegalStateException] &&
-        c.getMessage.contains("checkpoint")), e.toString)
-    // the target is untouched by the refused run
-    assert(spark.read.parquet(target).count() === 2L)
-  }
-
-  test("runningAggSink: a PRE-LINEAGE target (no _graft_query sidecar) " +
-      "warns, adopts the current query id, and is scoped from then on") {
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    val landing = tmpDir("graft-ragg-legacy-landing")
-    val target = tmpDir("graft-ragg-legacy-target") + "/agg"
-    def drain(rows: Seq[(String, Double)], part: String, ckpt: String): Unit = {
-      rows.toDF("event_type", "value").coalesce(1)
-        .write.mode("overwrite").parquet(s"$landing/$part")
-      val schema = spark.read.parquet(s"$landing/*").schema
-      val stream = spark.readStream.schema(schema).parquet(s"$landing/*")
-      val q = StreamingIngest.runningAggSink(stream, target,
-        Seq("event_type"), "value", ckpt).start()
-      try q.awaitTermination() finally q.stop()
-    }
-    drain(Seq(("a", 1.0)), "p1", tmpDir("graft-ragg-legacy-ckpt1"))
-    // simulate a target built before the lineage sidecar existed
-    val qsc = new java.io.File(s"$target/_graft_query")
-    assert(qsc.exists); assert(qsc.delete())
-    new java.io.File(s"$target/._graft_query.crc").delete()
-    // a fresh query against the legacy target must NOT throw — the
-    // replay check runs unscoped for this one batch (warned), and the
-    // current query id is adopted immediately
-    drain(Seq(("b", 2.0)), "p2", tmpDir("graft-ragg-legacy-ckpt2"))
-    assert(graft.io.Sinks.readSidecar(spark, target, "_graft_query")
-      .exists(_.trim.nonEmpty))
-    // ...so a THIRD query (another recreated checkpoint) now fails
-    // loudly — the lineage scope is restored
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      drain(Seq(("c", 3.0)), "p3", tmpDir("graft-ragg-legacy-ckpt3"))
-    }
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: causes(t.getCause)
-    assert(causes(e).exists(c =>
-      c.isInstanceOf[IllegalStateException] &&
-        c.getMessage.contains("checkpoint")), e.toString)
-  }
-
-  test("nearDupSink crash window: a failed attempt's batch dirs (data written, " +
-      "stream commit lost) are reclaimed on replay — docs never reject " +
-      "against their own debris, outputs don't double-land") {
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    def text(i: Long): String = (0 until 12).map(j => s"c${i}d$j").mkString(" ")
-    val b1 = Seq((1L, text(1)), (2L, text(2)), (3L, text(3)))
-    val b2 = Seq((11L, text(1)),  // cross-batch copy of doc 1 -> reject
-      (12L, text(12)))
-    def runSink(landing: String, idxP: String, keepP: String, rejP: String,
-        ckpt: String, rows: Seq[(Long, String)], part: String): Unit = {
-      rows.toDF("doc_id", "text").coalesce(1)
-        .write.mode("overwrite").parquet(s"$landing/$part")
-      val schema = spark.read.parquet(s"$landing/$part").schema
-      val stream = spark.readStream.schema(schema).parquet(s"$landing/*")
-      val q = StreamingIngest.nearDupSink(stream, idxP, keepP, rejP, ckpt)
-        .start()
-      try q.awaitTermination() finally q.stop()
-    }
-    // throwaway run: produces REAL debris (correct schemas/content) for
-    // both batches, as if an attempt wrote its dirs and lost the commit
-    val t = tmpDir("graft-crash-throwaway")
-    runSink(s"$t/land", s"$t/idx", s"$t/keep", s"$t/rej", s"$t/ckpt", b1, "p1")
-    runSink(s"$t/land", s"$t/idx", s"$t/keep", s"$t/rej", s"$t/ckpt", b2, "p2")
-    // real paths: plant the debris BEFORE each batch first runs
-    val landing = tmpDir("graft-crash-landing")
-    val idxP = tmpDir("graft-crash-idx") + "/idx"
-    val keepP = tmpDir("graft-crash-keep")
-    val rejP = tmpDir("graft-crash-rej")
-    val ckpt = tmpDir("graft-crash-ckpt")
-    def plant(src: String, dst: String): Unit =
-      spark.read.parquet(src).write.mode("overwrite").parquet(dst)
-    // batch 0's own index/keep rows already on disk = the failed attempt
-    plant(s"$t/idx/b0", s"$idxP/b0")
-    plant(s"$t/keep/b0", s"$keepP/b0")
-    runSink(landing, idxP, keepP, rejP, ckpt, b1, "p1")
-    // all three docs kept — none rejected against its own debris rows
-    assert(spark.read.parquet(s"$keepP/b*").select($"doc_id")
-      .collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
-    // batch 1 debris planted before batch 1 replays
-    plant(s"$t/idx/b1", s"$idxP/b1")
-    runSink(landing, idxP, keepP, rejP, ckpt, b2, "p2")
-    val kept = spark.read.parquet(s"$keepP/b*").select($"doc_id")
-      .collect().map(_.getLong(0)).toSet
-    val rej = spark.read.parquet(s"$rejP/b*").select($"doc_id", $"dup_of")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // doc 12 kept (its debris index row at b1 must be invisible to batch 1);
-    // doc 11 rejected against the COMMITTED index (doc 1), nothing doubled
-    assert(kept === Set(1L, 2L, 3L, 12L))
-    assert(rej === Map(11L -> 1L))
-    val idxIds = spark.read.parquet(s"$idxP/b*").select($"doc_id")
-      .distinct().collect().map(_.getLong(0)).toSet
-    assert(idxIds === kept)
-    // one row per doc everywhere: the replay OVERWROTE the debris
-    val keepRows = spark.read.parquet(s"$keepP/b*").count()
-    assert(keepRows === 4L, s"keep double-landed: $keepRows rows")
-  }
-
-  test("corpusFilterSink: multi-batch keep/reject routing equals the batch cascade") {
-    val docs = Tables.load(spark, sfDir, "documents")
-    val landing = tmpDir("graft-landing-corpus")
-    // several part files + maxFilesPerTrigger=2 → several micro-batches:
-    // the idempotent per-batch routing across batches is what's under test
-    docs.repartition(5).write.mode("overwrite").parquet(landing)
-    val schema = spark.read.parquet(landing).schema
-    val stream = StreamingIngest.landingStream(spark, landing, schema,
-      maxFilesPerTrigger = 2)
-    val keepP = tmpDir("graft-corpus-keep")
-    val rejP = tmpDir("graft-corpus-rej")
-    val q = StreamingIngest.corpusFilterSink(stream, "text",
-      keepP, rejP, tmpDir("graft-corpus-ckpt")).start()
-    try q.awaitTermination() finally q.stop()
-    val keptGot = spark.read.parquet(s"$keepP/b*")
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
-    val rejGot = spark.read.parquet(s"$rejP/b*")
-      .select($"doc_id", $"reasons").collect()
-      .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    val want = graft.ext.TextStats.filterCorpus(docs)
-      .select($"doc_id", $"reasons", $"keep").collect()
-      .map(r => (r.getLong(0), r.getSeq[String](1), r.getBoolean(2)))
-    assert(keptGot === want.filter(_._3).map(_._1).toSet)
-    assert(rejGot === want.filterNot(_._3).map(t => t._1 -> t._2).toMap)
-    assert(keptGot.nonEmpty && rejGot.nonEmpty)  // both routes exercised
-    // the kept corpus carries the document text (re-trainable output),
-    // the reject store carries the text AND the failed rules (auditable)
-    assert(spark.read.parquet(s"$keepP/b*").columns.contains("text"))
-    assert(spark.read.parquet(s"$rejP/b*").columns.contains("text"))
-  }
-
-  test("dedupWithinWatermark: re-deliveries drop within the delay, state evicts after") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long, Double)]
-    val events = input.toDF().toDF("ts", "event_id", "value")
-    val q = StreamingIngest.dedupWithinWatermark(events, "10 minutes")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("wm_dedup").start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    try {
-      // batch 1: same-batch duplicate of id 1 emits once
-      input.addData((ts("2026-01-01 10:00:00"), 1L, 1.0),
-        (ts("2026-01-01 10:00:00"), 1L, 1.0),
-        (ts("2026-01-01 10:01:00"), 2L, 2.0))
-      q.processAllAvailable()
-      // batch 2: cross-batch re-delivery of id 1 within the delay drops;
-      // the 10:30 event advances the watermark to 10:20, past id 1's
-      // 10:00 + 10min expiry
-      input.addData((ts("2026-01-01 10:02:00"), 1L, 1.0),
-        (ts("2026-01-01 10:30:00"), 3L, 3.0))
-      q.processAllAvailable()
-      // batch 3: id 1 again AFTER its state evicted — emits again: the
-      // bounded-state contract trades permanence for eviction
-      input.addData((ts("2026-01-01 10:31:00"), 1L, 1.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("wm_dedup").collect()
-      .map(r => r.getAs[Long]("event_id")).sorted.toSeq
-    assert(got === Seq(1L, 1L, 2L, 3L))
-  }
-
-  test("watermark drops late rows beyond the threshold (append mode)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val events = input.toDF().toDF("ts", "event_type", "value")
-    val agg = StreamingIngest.arrivalCounts(events, watermark = "10 minutes",
-      window_ = "10 minutes")
-    val q = agg.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("late_test").start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    try {
-      // batch 1: events at 10:00-10:09 and 10:30 (advances watermark to 10:20)
-      input.addData(
-        (ts("2024-01-01 10:00:00"), "a", 1.0),
-        (ts("2024-01-01 10:05:00"), "a", 2.0),
-        (ts("2024-01-01 10:30:00"), "a", 3.0))
-      q.processAllAvailable()
-      // batch 2: a LATE event for the already-closed 10:00 window
-      input.addData((ts("2024-01-01 10:01:00"), "a", 100.0))
-      q.processAllAvailable()
-      // batch 3: advance far so all windows close and emit
-      input.addData((ts("2024-01-01 12:00:00"), "a", 4.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = spark.table("late_test")
-      .collect().map(r => r.getAs[java.sql.Timestamp]("window_start") -> r.getAs[Long]("n")).toMap
-    // the 10:00 window closed with 2 events; the late 100.0 was dropped
-    assert(out(ts("2024-01-01 10:00:00")) === 2L)
-    assert(out(ts("2024-01-01 10:30:00")) === 1L)
-  }
-
-  test("flatMapGroupsWithState: per-key dedup state across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[StreamingIngest.KeyedEvent]
-    val out = StreamingIngest.dedupWithState(input.toDS())
-    val q = out.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("stateful_dedup").start()
-    import StreamingIngest.KeyedEvent
-    try {
-      input.addData(KeyedEvent(1, 10, 1.0), KeyedEvent(1, 11, 2.0), KeyedEvent(2, 10, 3.0))
-      q.processAllAvailable()
-      // batch 2: event 10 for user 1 REPLAYED (must not re-emit), one new
-      input.addData(KeyedEvent(1, 10, 99.0), KeyedEvent(1, 12, 4.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("stateful_dedup").as[StreamingIngest.FreshEvent]
-      .collect().sortBy(e => (e.user_id, e.event_id))
-    assert(rows.map(e => (e.user_id, e.event_id)).toSeq ===
-      Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L)))
-    // running counter continues across batches for user 1
-    assert(rows.find(e => e.user_id == 1 && e.event_id == 12).get.seq === 3L)
-  }
-
-  test("attributionStream: multi-batch last-touch credits equal the batch operator") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingIngest.AttrEvent
-    val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000L)
-    // lookback 60 s; batch split lands BETWEEN a touch and its conversion
-    val b1 = Seq(
-      AttrEvent(1L, 2L, ts(20), "click", 0.0),
-      AttrEvent(1L, 1L, ts(10), "view", 0.0), // out of order inside batch
-      AttrEvent(2L, 3L, ts(15), "view", 0.0),
-      AttrEvent(3L, 4L, ts(15), "purchase", 8.00)) // no touch → direct
-    val b2 = Seq(
-      AttrEvent(1L, 5L, ts(45), "purchase", 5.00),  // batch-1 click credits
-      AttrEvent(2L, 6L, ts(90), "purchase", 2.00),  // view aged out → direct
-      AttrEvent(1L, 7L, ts(50), "view", 0.0),
-      AttrEvent(1L, 8L, ts(55), "purchase", 1.00))  // same-batch view credits
-    val input = MemoryStream[AttrEvent]
-    val q = StreamingIngest.attributionStream(input.toDS(),
-        Set("click", "view"), "purchase", lookbackSeconds = 60)
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("attribution_stream").start()
-    try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("attribution_stream")
-      .as[StreamingIngest.Attributed].collect()
-      .map(a => a.event_id -> ((a.channel, a.cents))).toMap
-    assert(streamed === Map(
-      4L -> (("direct", 800L)), 5L -> (("click", 500L)),
-      6L -> (("direct", 200L)), 8L -> (("view", 100L))))
-    // row-for-row parity with the batch operator over the union
-    val batch = graft.ops.Journeys.lastTouchAttribution(
-        (b1 ++ b2).toDF(), Seq("click", "view"), "purchase",
-        lookbackSeconds = 60)
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
-    assert(streamed === batch)
-  }
-
-  test("survivorshipStream: multi-batch per-field winners equal the batch golden record") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingIngest.PatchEvent
-    val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000L)
-    val b1 = Seq(
-      PatchEvent(1L, "name", ts(10), 1L, Some(11L)),
-      PatchEvent(1L, "mail", ts(12), 2L, Some(21L)),
-      PatchEvent(2L, "name", ts(10), 3L, None)) // null patch: no state, no emit
-    val b2 = Seq(
-      PatchEvent(1L, "name", ts(50), 4L, None), // later null must NOT clobber
-      PatchEvent(1L, "mail", ts(60), 5L, Some(22L)), // advances
-      PatchEvent(1L, "mail", ts(5), 6L, Some(99L)), // LATE patch: older, ignored
-      PatchEvent(2L, "name", ts(20), 7L, Some(31L)))
-    val input = MemoryStream[PatchEvent]
-    val q = StreamingIngest.survivorshipStream(input.toDS())
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName("surv_stream").start()
-    try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    // recover the final table from the Update-mode sink: winner is
-    // monotone in (usMicros, event_id) per (user, field)
-    val fin = spark.table("surv_stream").as[StreamingIngest.GoldenRow]
-      .collect().groupBy(r => (r.user_id, r.field))
-      .map { case (k, rs) => k -> {
-        val w = rs.maxBy(r => (r.usMicros, r.event_id))
-        (w.usMicros, w.event_id, w.v_q4)
-      } }
-    val batch = graft.ops.Survivorship.goldenRecord(
-        (b1 ++ b2).map(p => (p.user_id, p.field,
-          p.ts.getTime * 1000L, p.event_id, p.v_q4))
-          .toDF("user_id", "field", "usMicros", "event_id", "v_q4"),
-        Seq("user_id"), "field", "v_q4", Seq("usMicros", "event_id"))
-      .collect().map(r => (r.getLong(0), r.getString(1)) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    assert(fin === batch)
-    assert(fin((1L, "name")) === ((ts(10).getTime * 1000L, 1L, 11L)))
-    assert(fin((1L, "mail")) === ((ts(60).getTime * 1000L, 5L, 22L)))
-  }
-
-  test("transitionsStream: multi-batch stateful pairs equal the batch transition extraction") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingIngest.KeyedTypedEvent
-    val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000L)
-    // chronological feed split across batches mid-user; batch 1 is
-    // deliberately fed out of order WITHIN the batch (sorted by the op)
-    val b1 = Seq(
-      KeyedTypedEvent(1L, 2L, ts(20), "click"),
-      KeyedTypedEvent(1L, 1L, ts(10), "view"),
-      KeyedTypedEvent(2L, 3L, ts(15), "view"))
-    val b2 = Seq(
-      KeyedTypedEvent(1L, 4L, ts(30), "purchase"), // chains onto batch-1 click
-      KeyedTypedEvent(2L, 5L, ts(25), "click"))
-    val input = MemoryStream[KeyedTypedEvent]
-    val q = StreamingIngest.transitionsStream(input.toDS())
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("transitions_stream").start()
-    try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("transitions_stream")
-      .as[StreamingIngest.Transition].collect()
-      .map(t => (t.user_id, t.from_type, t.to_type)).sorted
-    val batch = graft.ops.Journeys.transitions(
-        (b1 ++ b2).toDF().select(col("user_id"), col("ts"),
-          col("event_id"), col("event_type")))
-      .collect().flatMap(r => Seq.fill(r.getLong(2).toInt)(("", r.getString(0), r.getString(1))))
-    // same per-(from,to) multiset of steps as the batch operator
-    val streamedPairs = streamed.map(t => (t._2, t._3)).groupBy(identity)
-      .view.mapValues(_.length).toMap
-    val batchPairs = batch.map(t => (t._2, t._3)).groupBy(identity)
-      .view.mapValues(_.length).toMap
-    assert(streamedPairs === batchPairs)
-    assert(streamed.toSeq === Seq(
-      (1L, "click", "purchase"), (1L, "view", "click"), (2L, "view", "click")))
-  }
-
   test("grid quantile sketch maintains EXACTLY under streaming aggregation (mergeable relation)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode
@@ -958,283 +99,5 @@ class StreamingSpec extends SparkSpec {
         vals.toDF("v"), "v", 5.0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(streamed === batch)
-  }
-
-  test("weightedSampleStream: multi-batch sample == batch A-ES over the same rows; " +
-      "re-deliveries absorb; O(k) state") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingIngest.WeightedItem
-    val rnd = new scala.util.Random(17)
-    val rows = (1 to 60).map { i =>
-      WeightedItem(i % 2L, s"doc-$i", (rnd.nextInt(9) + 1).toDouble)
-    } ++ Seq(
-      WeightedItem(0L, "doc-2", 2.0),   // re-delivery: same key, same score
-      WeightedItem(1L, null, 3.0),      // null key never samples
-      WeightedItem(0L, "doc-zero", 0.0) // non-positive weight drops
-    )
-    val (b1, b2) = rows.splitAt(25)
-    val input = MemoryStream[WeightedItem]
-    val q = StreamingIngest.weightedSampleStream(input.toDS(), k = 5)
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName("aes_sample").start()
-    try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val all = spark.table("aes_sample").as[StreamingIngest.AesSample].collect()
-    val got = all.groupBy(_.group_id).map { case (g, xs) =>
-      val last = xs.map(_.n_processed).max
-      g -> xs.filter(_.n_processed == last).sortBy(_.rank)
-        .map(s => (s.key, s.score_q8)).toSeq
-    }
-    // batch comparator: the SAME rows through the batch A-ES column path
-    val batchDf = rows.toDF()
-    (0L to 1L).foreach { g =>
-      val want = graft.ext.Sampling.weightedWithoutReplacement(
-          batchDf.where(col("group_id") === g), "key", "weight", 5)
-        .select(col("key"), col("score_q8")).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-      assert(got(g) === want, s"group $g")
-      assert(got(g).length === 5)
-    }
-  }
-
-  test("weightedSampleStream: a key re-delivered with a CHANGED weight holds " +
-      "at most one sample slot (min score wins)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingIngest.WeightedItem
-    // k = 3 over 4 distinct keys; "dup" arrives in batch 1 with weight 1
-    // and again in batch 2 with weight 9 — different scores, same key
-    val b1 = Seq(WeightedItem(0L, "dup", 1.0), WeightedItem(0L, "a", 2.0))
-    val b2 = Seq(WeightedItem(0L, "dup", 9.0), WeightedItem(0L, "b", 2.0),
-      WeightedItem(0L, "c", 2.0))
-    val input = MemoryStream[WeightedItem]
-    val q = StreamingIngest.weightedSampleStream(input.toDS(), k = 3)
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName("aes_redelivery").start()
-    try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val all = spark.table("aes_redelivery")
-      .as[StreamingIngest.AesSample].collect()
-    val last = all.map(_.n_processed).max
-    val sample = all.filter(_.n_processed == last).sortBy(_.rank)
-    assert(sample.length === 3)
-    assert(sample.count(_.key == "dup") <= 1, sample.map(_.key).toSeq)
-    assert(sample.map(_.key).distinct.length === 3)
-    // the surviving dup score is its best draw across both weights
-    val dupScores = Seq(1.0, 9.0)
-      .flatMap(w => graft.ext.Sampling.aesScoreQ8("dup", w))
-    sample.find(_.key == "dup").foreach(s =>
-      assert(s.score_q8 === dupScores.min))
-  }
-
-  test("cardinalityStream: multi-batch HLL registers == batch sketch over the " +
-      "same rows; re-deliveries absorbed; empty group estimates 0") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits.{localSeqToDatasetHolder, newProductEncoder}
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingIngest.SrcToken
-    val rnd = new scala.util.Random(23)
-    val rows = (1 to 900).map { i =>
-      SrcToken(s"s${i % 2}", s"tok${rnd.nextInt(300)}")
-    } ++ Seq(
-      SrcToken("s0", "tok1"), // re-delivery: absorbed by register max
-      SrcToken("s2", ""))     // empty token never counts -> estimate 0
-    val (b1, b2) = rows.splitAt(400)
-    val input = MemoryStream[SrcToken]
-    val q = StreamingIngest.cardinalityStream(input.toDS())
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName("hll_stream").start()
-    try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val all = spark.table("hll_stream")
-      .as[StreamingIngest.HllEstimate].collect()
-    val got = all.groupBy(_.src).map { case (s, xs) =>
-      val last = xs.maxBy(_.n_processed)
-      s -> ((last.hll_est, last.v_zero))
-    }
-    // batch twin: the SAME tokens as docs, one doc per source
-    val docs = rows.filter(_.token.nonEmpty).groupBy(_.src).toSeq
-      .map { case (s, xs) => (s, xs.map(_.token).mkString(" ")) }
-      .toDF("source", "text")
-    val want = graft.ext.Frequency.hllCardinality(docs).collect()
-      .filter(_.getString(0) != "__union")
-      .map(r => r.getString(0) ->
-        ((r.getAs[Long]("hll_est"), r.getAs[Long]("v_zero")))).toMap
-    assert(got("s0") === want("s0"))
-    assert(got("s1") === want("s1"))
-    // the empty-token group has an untouched sketch: estimate 0
-    assert(got("s2") === ((0L, 256L)))
-  }
-
-  test("heavyHittersStream: exact when capacity suffices; eviction keeps Space-Saving bounds") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingIngest.KeyedTypedEvent
-    val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000L)
-    // one group (user 1), skewed item stream split across two batches
-    val items = Seq.fill(8)("a") ++ Seq.fill(5)("b") ++ Seq.fill(3)("c") ++
-      Seq("d", "e", "d")
-    val evs = items.zipWithIndex.map { case (it, i) =>
-      KeyedTypedEvent(1L, i.toLong, ts(i.toLong), it)
-    }
-    val (b1, b2) = evs.splitAt(9)
-
-    def run(cap: Int, name: String): Map[String, (Long, Long)] = {
-      val input = MemoryStream[KeyedTypedEvent]
-      val q = StreamingIngest.heavyHittersStream(input.toDS(), cap)
-        .writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(name).start()
-      try {
-        input.addData(b1: _*); q.processAllAvailable()
-        input.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      // final counter table = rows at the group's max n_processed
-      // (Update-mode sinks retain earlier batches' rows, incl. evictees)
-      val all = spark.table(name).as[StreamingIngest.HeavyHitter].collect()
-      val last = all.map(_.n_processed).max
-      all.filter(_.n_processed == last)
-        .map(h => h.item -> ((h.count, h.err))).toMap
-    }
-
-    // capacity >= distinct items -> EXACT counts, zero error
-    val exact = run(8, "hh_exact")
-    val truth = items.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    assert(exact.map { case (k, (n, _)) => k -> n } === truth)
-    assert(exact.values.forall(_._2 == 0L))
-
-    // capacity 3 -> bounded state; Space-Saving guarantees hold
-    val tight = run(3, "hh_tight")
-    assert(tight.size === 3)
-    tight.foreach { case (it, (n, err)) =>
-      val t = truth.getOrElse(it, 0L)
-      assert(n >= t, s"$it count $n under true $t")
-      assert(n - err <= t, s"$it lower bound ${n - err} over true $t")
-    }
-    // the heavy item survives eviction (freq > N/capacity)
-    assert(tight.contains("a") && tight("a")._1 >= truth("a"))
-  }
-
-  test("anomaliesStream: multi-batch ring-buffer flags equal the batch operator") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingIngest.KeyedValueEvent
-    val ts = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000L)
-    val rnd = new scala.util.Random(31)
-    // two keys, 30 events each: calm history with planted spikes; fed
-    // chronologically across three batches, batch 1 shuffled internally
-    val all = (0 until 60).map { i =>
-      val uid = (i % 2 + 1).toLong
-      val base = if (uid == 1L) 10.0 else 50.0
-      val v = if (i == 40 || i == 41) base * 8 // spikes land mid-stream
-              else base + rnd.nextInt(3) * 0.5
-      KeyedValueEvent(uid, i.toLong, ts(i.toLong * 10), v)
-    }
-    val batches = Seq(
-      rnd.shuffle(all.take(20)), all.slice(20, 40), all.drop(40))
-    val input = MemoryStream[KeyedValueEvent]
-    val q = StreamingIngest.anomaliesStream(input.toDS())
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("anomalies_stream").start()
-    try {
-      batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-    } finally q.stop()
-    val streamed = spark.table("anomalies_stream")
-      .as[StreamingIngest.AnomalyFlag].collect()
-      .map(a => a.event_id -> ((a.v_q4, a.w_n, a.w_sum_q4, a.is_anomaly)))
-      .toMap
-    val batch = graft.ops.Resample.anomalies(
-        all.toDF("user_id", "event_id", "ts", "value"))
-      .collect().map(r => r.getLong(1) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getBoolean(5)))).toMap
-    assert(streamed === batch)
-    assert(streamed.values.exists(_._4), "planted spikes must flag")
-    assert(streamed(40L)._4 && streamed(41L)._4)
-  }
-
-  test("partition-scoped merge sink: only batch-touched partitions are rewritten") {
-    import spark.implicits._
-    val landing = tmpDir("graft-landing3")
-    val target = tmpDir("graft-ptarget") + "/table"
-    val checkpoint = tmpDir("graft-pckpt")
-
-    Seq(("P1", "k1", "v1"), ("P2", "k2", "v2")).toDF("pid", "key", "value")
-      .write.mode("append").parquet(landing)
-    val schema = spark.read.parquet(landing).schema
-    def runOnce(): Unit = {
-      val q = StreamingIngest.insertOnlyMergeSink(
-        StreamingIngest.landingStream(spark, landing, schema),
-        target, Seq("key"), checkpoint, partitionCol = Some("pid")).start()
-      try q.awaitTermination() finally q.stop()
-    }
-    runOnce()
-
-    def fileState(dir: String): Map[String, (Long, Long)] = {
-      val d = new java.io.File(dir)
-      d.listFiles().filter(_.isFile).map(f =>
-        f.getName -> (f.length(), f.lastModified())).toMap
-    }
-    val p1Before = fileState(s"$target/pid=P1")
-    assert(p1Before.nonEmpty)
-
-    // batch 2 touches ONLY P2: P1's directory must stay byte-identical
-    Seq(("P2", "k2", "CLOBBER"), ("P2", "k3", "v3")).toDF("pid", "key", "value")
-      .write.mode("append").parquet(landing)
-    runOnce()
-    assert(fileState(s"$target/pid=P1") === p1Before)
-
-    // full-table read sees merged state: k2 not clobbered, k3 inserted
-    val all = spark.read.parquet(target)
-      .select(col("pid"), col("key"), col("value"))
-      .collect().map(r => (r.getString(1), (r.getString(0), r.getString(2)))).toMap
-    assert(all === Map("k1" -> ("P1", "v1"), "k2" -> ("P2", "v2"), "k3" -> ("P2", "v3")))
-  }
-
-  test("insert-only merge sink: ledger skips processed files, never clobbers") {
-    import spark.implicits._
-    val landing = tmpDir("graft-landing2")
-    val target = tmpDir("graft-target") + "/table"
-    val checkpoint = tmpDir("graft-ckpt")
-
-    // batch 1: two keys
-    Seq(("k1", "v1"), ("k2", "v2")).toDF("key", "value")
-      .write.mode("append").parquet(landing)
-    val schema = spark.read.parquet(landing).schema
-    def runOnce(): Unit = {
-      val q = StreamingIngest.insertOnlyMergeSink(
-        StreamingIngest.landingStream(spark, landing, schema),
-        target, Seq("key"), checkpoint).start()
-      try q.awaitTermination() finally q.stop()
-    }
-    runOnce()
-    val after1 = spark.read.parquet(target).as[(String, String)].collect().toMap
-    assert(after1 === Map("k1" -> "v1", "k2" -> "v2"))
-
-    // batch 2: k2 reappears with a DIFFERENT value (must not clobber), k3 new
-    Seq(("k2", "CLOBBER"), ("k3", "v3")).toDF("key", "value")
-      .write.mode("append").parquet(landing)
-    runOnce()
-    val after2 = spark.read.parquet(target).as[(String, String)].collect().toMap
-    assert(after2 === Map("k1" -> "v1", "k2" -> "v2", "k3" -> "v3"))
-
-    // rerun with nothing new: checkpoint = ledger; state unchanged
-    runOnce()
-    val after3 = spark.read.parquet(target).as[(String, String)].collect().toMap
-    assert(after3 === after2)
   }
 }

@@ -78,27 +78,4 @@ class UpsertSpec extends SparkSpec {
     val out = Upsert.delete(tgt, victims, Seq("key"))
     assert(out.select("key").as[String].collect().sorted === Array("s2"))
   }
-
-  test("swap crash window: previous version survives in .old and readOrEmpty recovers it") {
-    import graft.io.Sinks
-    val dir = java.nio.file.Files.createTempDirectory("graft-swap").toString
-    val path = s"$dir/table"
-    val v1 = Seq(("a", 1)).toDF("k", "v")
-    Sinks.atomicParquetSwap(v1, path)
-    // a clean swap leaves no droppings
-    assert(!new java.io.File(path + ".old").exists())
-    assert(!new java.io.File(path + ".tmp").exists())
-
-    Sinks.atomicParquetSwap(Seq(("a", 2)).toDF("k", "v"), path)
-    assert(spark.read.parquet(path).as[(String, Int)].collect().toSeq === Seq(("a", 2)))
-
-    // simulate a crash BETWEEN rename-aside and rename-in: live dir gone,
-    // previous version parked at .old — data must still be readable
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + ".old"))
-    val recovered = Sinks.readOrEmpty(spark, path, v1.schema)
-    assert(recovered.as[(String, Int)].collect().toSeq === Seq(("a", 2)))
-  }
 }

@@ -125,40 +125,6 @@ class XlsxSpec extends SparkSpec {
     assert(df.collect().map(_.getString(0)).toSet === Set("fromA", "fromB"))
   }
 
-  test("readMinicoreXlsx: reference row/column drops match the CSV-converted reader") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("xlsx").toFile
-    val rows = Seq(
-      Seq(Some("#"), Some("SampleID*"), Some("Genus"), Some("Depth")),
-      Seq(Some("info"), Some("fill one row per sample"), None, None),
-      Seq(Some("1"), Some("EXAMPLE-001"), Some("Genusus"), Some("2")),
-      Seq(Some("2"), Some("S-1"), Some("Quercus"), Some("10")),
-      Seq(Some("3"), None, Some("NoId"), Some("3")), // no SampleID → drop
-      Seq(Some("4"), Some("S-2"), None, None))
-    writeFile(dir, "minicore.xlsx", xlsxBytes(rows))
-    val df = Xlsx.readMinicoreXlsx(spark, dir.getAbsolutePath)
-    assert(df.columns.toSeq === Seq("SampleID*", "Genus", "Depth"))
-    val got = df.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    assert(got === Set(("S-1", "Quercus", "10"), ("S-2", null, null)))
-    // parity with the CSV-converted reader on the equivalent content
-    val csv = new java.io.File(dir, "minicore.csv")
-    val w = new java.io.PrintWriter(csv)
-    try {
-      w.println("#,SampleID*,Genus,Depth")
-      w.println("info,fill one row per sample,,")
-      w.println("1,EXAMPLE-001,Genusus,2")
-      w.println("2,S-1,Quercus,10")
-      w.println("3,,NoId,3")
-      w.println("4,S-2,,")
-    } finally w.close()
-    val viaCsv = graft.io.Sources
-      .readMinicoreCsv(spark, csv.getAbsolutePath)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
-      .toSet
-    assert(got === viaCsv)
-  }
-
   private def zipOf(parts: Seq[(String, String)]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val z = new ZipOutputStream(bos)
@@ -262,10 +228,10 @@ class XlsxSpec extends SparkSpec {
     Xlsx.writeXlsxSheets(f, Seq(name -> Seq(Seq("k"), Seq("v1"))))
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
     assert(Xlsx.sheetNames(bytes) === Seq(name))
-    assert(Xlsx.parseWorkbook(bytes, name).last.head === "v1")
+    assert(Xlsx.parseWorkbook(bytes, 1).last.head === "v1")
   }
 
-  test("multi-sheet: writeXlsxSheets round-trips names, index and name addressing agree") {
+  test("multi-sheet: writeXlsxSheets round-trips names, index addressing reads the named tab") {
     val dir = java.nio.file.Files.createTempDirectory("xlsx_m").toFile
     val f = new java.io.File(dir, "multi.xlsx")
     Xlsx.writeXlsxSheets(f, Seq(
@@ -273,12 +239,9 @@ class XlsxSpec extends SparkSpec {
       "detail" -> Seq(Seq("k", "v"), Seq("d1", "2"), Seq("d2", "3"))))
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
     assert(Xlsx.sheetNames(bytes) === Seq("summary", "detail"))
-    val byName = Xlsx.readXlsxByName(spark, f.getAbsolutePath, "detail")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(byName === Set(("d1", "2"), ("d2", "3")))
     val byIdx = Xlsx.readXlsx(spark, f.getAbsolutePath, sheet = 2)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(byIdx === byName)
+    assert(byIdx === Set(("d1", "2"), ("d2", "3")))
   }
 
   test("multi-sheet: tab ORDER comes from workbook.xml, not part-file numbering") {
@@ -301,7 +264,7 @@ class XlsxSpec extends SparkSpec {
       "xl/worksheets/sheet2.xml" -> sheetXml("inPart2")))
     assert(Xlsx.sheetNames(bytes) === Seq("tabA", "tabB"))
     assert(Xlsx.parseWorkbook(bytes, 1).last.head === "inPart2")
-    assert(Xlsx.parseWorkbook(bytes, "tabB").last.head === "inPart1")
+    assert(Xlsx.parseWorkbook(bytes, 2).last.head === "inPart1")
   }
 
   test("DSv2 source: format(\"graft-xlsx\") matches readXlsx, incl. multi-file") {
