@@ -12,7 +12,8 @@ import org.apache.spark.storage.StorageLevel
   *  - `persistScoped` frames (MEMORY_AND_DISK; each blocks a measured
   *    4–40× re-evaluation of a scan+kernel lineage);
   *  - the loop barriers ([[graft.ops.Iterate]]) a result reads: local
-  *    checkpoints, freed only by [[GraftSqlShim.freeBarrier]];
+  *    checkpoints of packed row bytes, freed only by
+  *    [[GraftSqlShim.freeBarrier]];
   *  - [[graft.io.Scratch.dir]] directories that round-trip queries write
   *    and read back.
   *

@@ -561,11 +561,13 @@ object Sampling {
       s"bad order statistics lo=$loIdx hi=$hiIdx for b=$b")
     val base = bootstrapBase(df, armCol, idCol, valueCol)
       .where($"_g".isin(arm0, arm1))
-    val actual = base.groupBy($"_g")
-      .agg(expr("(10000 * sum(_cents)) div count(1)").as("_mean"))
-    val actualLift = actual.where($"_g" === arm1).select($"_mean".as("_m1"))
-      .crossJoin(actual.where($"_g" === arm0).select($"_mean".as("_m0")))
-      .select(($"_m1" - $"_m0").as("lift_q4"))
+    // one global row, NULL when an arm has no rows, as SQL's scalar
+    // subqueries give it
+    val actualLift = base
+      .select(when($"_g" === arm1, $"_cents").as("_c1"),
+        when($"_g" === arm0, $"_cents").as("_c0"))
+      .agg(expr("(10000 * sum(_c1)) div nullif(count(_c1), 0) - " +
+        "(10000 * sum(_c0)) div nullif(count(_c0), 0)").as("lift_q4"))
     val means = bootstrapMeans(base, b)
     val diffs = means.where($"_g" === arm1)
       .select($"_b", $"_m".as("_ma"))
@@ -576,8 +578,8 @@ object Sampling {
         count(lit(1)).as("n_resamples"))
       .crossJoin(actualLift)
       .select($"lift_q4", $"n_resamples",
-        element_at($"_ds", loIdx).as("lift_lo_q4"),
-        element_at($"_ds", hiIdx).as("lift_hi_q4"))
+        try_element_at($"_ds", lit(loIdx)).as("lift_lo_q4"),
+        try_element_at($"_ds", lit(hiIdx)).as("lift_hi_q4"))
   }
 
   /** 2-D Pareto frontier (skyline): rows not dominated under

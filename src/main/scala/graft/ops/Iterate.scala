@@ -7,9 +7,10 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one way a relational loop carries state from one round to the
   * next: every frame a round hands on, and every loop-invariant input
-  * it reads, passes [[loopBarrier]] — an eager `localCheckpoint` PLUS a
-  * stats-fresh rebuild of the leaf — inside a [[loop]]. Both halves of
-  * the barrier are load-bearing:
+  * it reads, passes [[loopBarrier]] — an eager local checkpoint of its
+  * rows as packed UnsafeRow bytes PLUS a leaf whose stats are those
+  * bytes — inside a [[loop]]. Both halves of the barrier are
+  * load-bearing:
   *
   *  - checkpointing truncates lineage, so each round's plan is
   *    constant-size. A round that REFERENCES ITS OWN PREVIOUS FRAME
@@ -18,12 +19,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    round even when every frame is persisted: execution reads the
   *    cache, but analysis walks a 2^rounds tree (ext_sssp at sf0.1
   *    wedged >10 min in planning with all data cached).
-  *  - the rebuild (GraftSqlShim.measuredBarrierProbe) REPLACES the origin
-  *    stats `localCheckpoint` copies onto its `LogicalRDD` leaf with the
-  *    checkpoint's measured block size. Catalyst's size-only join
-  *    estimate is `size(left) · size(right)`, so carried stats DOUBLE
-  *    IN BIT-LENGTH every round (11 → 19,858 bits in 12 rounds) and by
-  *    ~30 joins the driver sits for minutes in `BigInteger.multiply`.
+  *  - the leaf (GraftSqlShim.measuredBarrierProbe) carries the
+  *    checkpoint's exact packed size in place of the origin stats a
+  *    Dataset checkpoint copies onto its `LogicalRDD`. Catalyst's
+  *    size-only join estimate is `size(left) · size(right)`, so carried
+  *    stats DOUBLE IN BIT-LENGTH every round (11 → 19,858 bits in 12
+  *    rounds) and by ~30 joins the driver sits for minutes in
+  *    `BigInteger.multiply`.
   *    Measured leaves also let a small frame (frontier, score vector,
   *    contracted edges) BROADCAST instead of shuffling the big side.
   *

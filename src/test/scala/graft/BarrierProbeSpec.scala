@@ -39,6 +39,7 @@ class BarrierProbeSpec extends SparkSpec {
     val (frame, st) = Iterate.loopBarrierProbe(df, Seq("d"))
     assert(st(0) === ((0L, 0L)))
     assert(frame.count() === 0L)
+    assert(frame.queryExecution.optimizedPlan.stats.sizeInBytes === BigInt(0))
   }
 
   test("probe frame ≡ plain loopBarrier frame on a shuffled aggregate") {

@@ -61,4 +61,8 @@ class EmptyInputSpec extends SparkSpec {
   test("ext_sketch_quantile on empty input: one row, every quantile NULL") {
     assert(run("ext_sketch_quantile") === Seq(Row(null, null, null, null, null, null)))
   }
+
+  test("ev15_ab_lift_ci on empty input: no resamples, lift and interval NULL") {
+    assert(run("ev15_ab_lift_ci") === Seq(Row(null, 0L, null, null)))
+  }
 }

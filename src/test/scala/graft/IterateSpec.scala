@@ -64,9 +64,10 @@ class IterateSpec extends SparkSpec {
   }
 
   test("near-dup graph queries hold only the barriers their results read") {
+    // a barrier leaf's RDD unpacks the checkpointed chunks its parent holds
     def reads(df: DataFrame): Set[Int] =
       df.queryExecution.analyzed.collectLeaves().collect {
-        case l: LogicalRDD => l.rdd.id
+        case l: LogicalRDD => l.rdd.dependencies.head.rdd.id
       }.toSet
     Seq[(String, () => DataFrame)](
       "ext_pagerank" -> (() => ExtQueries.pagerank(spark, sfDir)),
